@@ -1,9 +1,9 @@
 /* Shim into Spark's `private[sql]` surface — the standard extension
  * technique (a tiny object in the org.apache.spark.sql package tree) for
- * the two hooks a DML executor cannot reach through the public API:
- * turning an analyzed/unresolved LogicalPlan into a DataFrame, and the
- * active classic session. Nothing else lives here; all engine logic
- * stays in pystreamsspark.*. */
+ * the hooks a DML executor cannot reach through the public API:
+ * turning an analyzed/unresolved LogicalPlan into a DataFrame, the
+ * active classic session, and a nullable copy of a schema. Nothing else
+ * lives here; all engine logic stays in pystreamsspark.*. */
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -18,4 +18,9 @@ object GraftSqlShims {
   /** The active session as the classic implementation (what Spark's own
     * file-source tables take). */
   def activeClassic(): classic.SparkSession = classic.SparkSession.active
+
+  /** `StructType.asNullable` — the data schema a file table scans with
+    * (every column nullable), as `FileTable.dataSchema` builds it. */
+  def asNullable(schema: types.StructType): types.StructType =
+    schema.asNullable
 }

@@ -10,7 +10,8 @@ import java.nio.file.{Files, Path, StandardOpenOption}
   * plus this single decision point, so porting the log to an object
   * store is exactly one method:
   *
-  *  - local / HDFS-like: `CREATE_NEW` (the [[LocalCommitStore]] below);
+  *  - local / HDFS-like: a hard link of a fully written temp file
+  *    (the [[LocalCommitStore]] below);
   *  - S3: conditional PUT with `If-None-Match: *` (natively atomic
   *    since 2024) — a 412 Precondition Failed is `false`;
   *  - GCS: upload with precondition `ifGenerationMatch=0`;
@@ -32,13 +33,22 @@ trait CommitStore {
   def putIfAbsent(path: Path, bytes: Array[Byte]): Boolean
 }
 
-/** Filesystem implementation: `CREATE_NEW` is atomic on POSIX and on
-  * any shared filesystem with POSIX create semantics (proven
-  * cross-process in CrossProcessCommitSpec). */
+/** Filesystem implementation: the bytes go to a private temp file in
+  * the same directory, and a hard link publishes it — `link(2)` is
+  * atomic and fails if the path exists, on POSIX and on any shared
+  * filesystem with POSIX semantics (proven cross-process in
+  * CrossProcessCommitSpec). A `CREATE_NEW` write of the path itself
+  * would make it visible before its bytes: a racing reader could parse
+  * an empty manifest. */
 object LocalCommitStore extends CommitStore {
-  override def putIfAbsent(path: Path, bytes: Array[Byte]): Boolean =
+  override def putIfAbsent(path: Path, bytes: Array[Byte]): Boolean = {
+    val tmp = path.resolveSibling(
+      s".${path.getFileName}.${java.util.UUID.randomUUID()}.tmp")
     try {
-      Files.write(path, bytes, StandardOpenOption.CREATE_NEW)
+      Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW)
+      Files.createLink(path, tmp)
       true
     } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(tmp)
+  }
 }

@@ -13,8 +13,6 @@ import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.connector.write.streaming.StreamingWrite
 import org.apache.spark.sql.sources.InsertableRelation
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -391,7 +389,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   * (column pruning, filter pushdown to row groups, vectorized reader,
   * whole-stage codegen) with zero custom reader code. Writes
   * intentionally do NOT go through a V2 WriteBuilder: the manifest
-  * commit protocol (CREATE_NEW publish, rebase, epochs) is the
+  * commit protocol (put-if-absent publish, rebase, epochs) is the
   * transaction boundary, and the DML rule / [[SnapshotSql]] route
   * INSERT/UPDATE/DELETE/MERGE onto [[SnapshotTable]]'s clustered
   * copy-on-write machinery instead. */
@@ -491,9 +489,10 @@ class SnapshotV2Table(fullName: String, val dir: String,
         s"$fullName has renamed columns (column mapping); read it on a " +
           "GraftExtensions session, via SnapshotTable.read, or " +
           "OPTIMIZE/compact() first to materialize the mapping")
-    val pt = ParquetTable(fullName, GraftSqlShims.activeClassic(), options,
-      SnapshotTable.filePaths(dir, versionAsOf), Some(schema),
-      classOf[ParquetFileFormat])
+    // planned from the manifest: one driver stat per file, no listing job
+    val v = versionAsOf.getOrElse(SnapshotTable.latestVersion(dir))
+    val index = new ManifestFileIndex(GraftSqlShims.activeClassic(), dir, v,
+      SnapshotTable.filePaths(dir, Some(v)))
     // the ParquetScanBuilder SUBCLASS: full native pushdown inherited
     // for batch, plus toMicroBatchStream for `readStream.table(...)`,
     // plus KeyGroupedPartitioning on bucketed tables (zero-shuffle SPJ).
@@ -502,9 +501,9 @@ class SnapshotV2Table(fullName: String, val dir: String,
     // whose partitioning belongs to the query) has none, and the scan
     // must degrade to the plain split plan rather than guess.
     val buckets = SnapshotTable.fileBuckets(dir, versionAsOf)
-    val allBucketed =
-      buckets.size == SnapshotTable.filePaths(dir, versionAsOf).size
-    new GraftScanBuilder(dir, pt.fileIndex, schema, pt.dataSchema, options,
+    val allBucketed = buckets.size == index.allFiles().size
+    new GraftScanBuilder(dir, index, schema, GraftSqlShims.asNullable(schema),
+      options,
       SnapshotTable.bucketSpecOf(dir, versionAsOf),
       if (allBucketed) buckets else Map.empty,
       // exact snapshot row count (manifest footer sums) → CBO numRows,

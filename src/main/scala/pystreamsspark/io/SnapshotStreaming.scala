@@ -19,7 +19,7 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.execution.datasources.{FilePartition, OutputWriter, OutputWriterFactory, PartitioningAwareFileIndex}
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder, ParquetTable}
+import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -140,11 +140,14 @@ private[io] class SnapshotMicroBatchStream(dir: String, schema: StructType,
       java.nio.file.Paths.get(dir, p).toString }
   }
 
-  private def scanOver(paths: Seq[String]): Scan =
-    ParquetTable(s"graft-stream:$dir", GraftSqlShims.activeClassic(),
-      CaseInsensitiveStringMap.empty(), paths, Some(schema),
-      classOf[ParquetFileFormat])
-      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+  /** Parquet scan over version `v`'s added files, planned from the
+    * manifest paths (no listing job per micro-batch). */
+  private def scanOver(v: Int, paths: Seq[String]): Scan = {
+    val spark = GraftSqlShims.activeClassic()
+    val dataSchema = GraftSqlShims.asNullable(schema)
+    ParquetScanBuilder(spark, new ManifestFileIndex(spark, dir, v, paths),
+      dataSchema, dataSchema, CaseInsensitiveStringMap.empty()).build()
+  }
 
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {
@@ -152,13 +155,13 @@ private[io] class SnapshotMicroBatchStream(dir: String, schema: StructType,
     if (b <= a) return Array.empty
     val paths = addedFiles(a, b)
     if (paths.isEmpty) Array.empty
-    else scanOver(paths).toBatch.planInputPartitions()
+    else scanOver(b, paths).toBatch.planInputPartitions()
   }
 
   // schema-bound and FILE-AGNOSTIC: one factory serves every batch's
   // partitions (built over an empty relation — partitions carry files)
   override def createReaderFactory(): PartitionReaderFactory =
-    scanOver(Seq.empty).toBatch.createReaderFactory()
+    scanOver(0, Seq.empty).toBatch.createReaderFactory()
 }
 
 /** ScanBuilder for catalog snapshot tables: a `ParquetScanBuilder`

@@ -5,7 +5,11 @@ import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.CharVarcharUtils
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 
 /** A minimal SNAPSHOT-MANIFEST table layer over parquet — the ACID
@@ -36,15 +40,15 @@ import org.apache.spark.sql.types._
   * Delta-log/Iceberg checkpoint design, original implementation), and
   * vacuum writes `.checkpoint` sidecars before dropping a surviving
   * delta's ancestors. Commit protocol = write all data
-  * files first, then CREATE_NEW the next manifest — creation is the
+  * files first, then put-if-absent the next manifest — creation is the
   * atomic publish point. A losing concurrent committer gets
   * [[ConcurrentCommitException]] and its orphaned data files are
   * reclaimed by [[vacuum]]; a crash before the manifest exists leaves
   * the table state untouched (the RegistrySink abort discipline, at the
   * table level). The arbitration holds ACROSS PROCESSES, not just
   * threads (CrossProcessCommitSpec forks a second JVM racing real
-  * commits) — with the honest caveat every CREATE_NEW-based log shares:
-  * atomicity is the shared filesystem's POSIX O_EXCL create; an object
+  * commits) — with the honest caveat every put-if-absent log shares:
+  * atomicity is the shared filesystem's POSIX hard-link create; an object
   * store deployment must swap the publish for a conditional-put /
   * if-none-match (or a lightweight commit coordinator), exactly as
   * Delta-on-S3 does.
@@ -85,7 +89,7 @@ object SnapshotTable {
     extends RuntimeException(s"version $v was committed concurrently")
 
   /** The injectable atomic-publish primitive (see [[CommitStore]]).
-    * Production default is the filesystem CREATE_NEW; specs inject
+    * Production default is the filesystem put-if-absent; specs inject
     * contended/flaky implementations to drive the rebase laws through
     * forced losses and delayed visibility. Volatile: a test swap must
     * be seen by Spark task/driver threads immediately. */
@@ -371,7 +375,7 @@ object SnapshotTable {
   }
 
   /** JVM-wide RESOLVED-manifest cache. Manifests are immutable once
-    * CREATE_NEW-published, so caching by path is safe across tables,
+    * put-if-absent-published, so caching by path is safe across tables,
     * sessions and the rebase retry loops; entries validate against the
     * file’s (mtime, size) so an out-of-band rewrite (test fixtures
     * doctoring a manifest in place) is still observed. Bounded LRU —
@@ -428,18 +432,16 @@ object SnapshotTable {
     * checkpoint sidecar (full-manifest format, `delta`/`ckdist` headers
     * stripped). Racing writers produce identical bytes by construction
     * — resolution over immutable manifests is deterministic — so
-    * CREATE_NEW losing is a no-op. */
+    * losing the put-if-absent is a no-op. */
   private def writeCheckpoint(dir: String, v: Int): Unit = {
     val m = readManifest(dir, v)
     val header = ((m.header - "delta" - "ckdist").toSeq.sortBy(_._1))
       .map { case (k, value) => s"$k=$value" }.mkString("\t")
     val lines = m.files.map(_.serialize)
     val body = (header +: lines).mkString("\n")
-    try {
-      Files.write(checkpointPath(dir, v),
-        body.getBytes(StandardCharsets.UTF_8), StandardOpenOption.CREATE_NEW)
-      ()
-    } catch { case _: java.nio.file.FileAlreadyExistsException => () }
+    // a lost race means another writer published the same bytes
+    LocalCommitStore.putIfAbsent(checkpointPath(dir, v),
+      body.getBytes(StandardCharsets.UTF_8))
     writeCkIndexFor(dir, v, header, m.files, lines, m.header)
   }
 
@@ -460,7 +462,7 @@ object SnapshotTable {
   // to O(overlapping entries + chain delta + #segments). The index is
   // deterministic from the immutable anchor, so it is built EAGERLY at
   // commit/checkpoint time (the entries are already in memory) and
-  // LAZILY on first read of a pre-round-13 table, CREATE_NEW-idempotent
+  // LAZILY on first read of a pre-round-13 table, put-if-absent idempotent
   // either way; a size-mismatched or unparseable sidecar falls back to
   // the full parse (conservative-correct, never wrong).
   // ---------------------------------------------------------------------
@@ -549,7 +551,7 @@ object SnapshotTable {
     }.toSeq
   }
 
-  /** Persist an index sidecar — CREATE_NEW-idempotent: content is
+  /** Persist an index sidecar — put-if-absent idempotent: content is
     * deterministic from the immutable anchor, so a racing/extant write
     * is a no-op. */
   private def writeCkIndexFile(p: Path, idx: CkIndex): Unit = {
@@ -564,11 +566,8 @@ object SnapshotTable {
           }.mkString(";")
         s"${s.off}\t${s.len}\t${s.n}\t$box"
       }).mkString("\n")
-    try {
-      Files.write(p, body.getBytes(StandardCharsets.UTF_8),
-        StandardOpenOption.CREATE_NEW)
-      ()
-    } catch { case _: java.nio.file.FileAlreadyExistsException => () }
+    LocalCommitStore.putIfAbsent(p, body.getBytes(StandardCharsets.UTF_8))
+    ()
   }
 
   /** None on any malformation — the caller rebuilds from the anchor. */
@@ -701,7 +700,7 @@ object SnapshotTable {
         // recomputable from the immutable anchor, so delete-and-rewrite
         // is safe — without it every future cold process would re-pay
         // the full O(#files) parse forever (r13 review fix). A racing
-        // healer writes identical bytes; losing the CREATE_NEW is fine.
+        // healer writes identical bytes; losing the put-if-absent is fine.
         if (extant) Files.deleteIfExists(ip)
         writeCkIndexFile(ip, built)
         built
@@ -1093,7 +1092,7 @@ object SnapshotTable {
     }
 
   /** Atomic publish: [[CommitStore.putIfAbsent]] on the manifest path
-    * is the commit point (CREATE_NEW locally; a conditional PUT on an
+    * is the commit point (put-if-absent locally; a conditional PUT on an
     * object store — see [[CommitStore]]). The manifest
     * header records the table SCHEMA (as Spark's schema JSON) so a
     * snapshot read is `O(1)` metadata — no per-file footer merge at
@@ -1133,7 +1132,7 @@ object SnapshotTable {
     * rewrite (headers — schema, carried properties — still travel in
     * every commit; they are O(#columns), not O(#files)). Every
     * [[CHECKPOINT_INTERVAL]]-th commit in a chain materializes the full
-    * list instead, bounding read-side chain resolution. CREATE_NEW
+    * list instead, bounding read-side chain resolution. Put-if-absent
     * remains the one atomic publish point, identical to [[commit]];
     * the two forms interleave freely in one table’s history. */
   private def commitDelta(dir: String, v: Int, op: String,
@@ -2101,7 +2100,10 @@ object SnapshotTable {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], out)
     }
-    val paths = entries.map(f => Paths.get(dir, f.path).toString)
+    // the manifest names the files: the scan's index stats them on the
+    // driver instead of listing (no "Listing leaf files" job)
+    val index = new ManifestFileIndex(spark, dir, m.version,
+      entries.map(f => Paths.get(dir, f.path).toString))
     // COLUMN MAPPING, read side: files store PHYSICAL names — read with
     // the physically-renamed schema, then project back to logical names
     // (identity for never-renamed tables). The projection runs AFTER
@@ -2112,8 +2114,16 @@ object SnapshotTable {
       if (colmap.isEmpty) s
       else StructType(s.fields.map(f =>
         f.copy(name = colmap.getOrElse(f.name, f.name)))))
-    val base = physSchema.map(spark.read.schema).getOrElse(spark.read)
-      .parquet(paths: _*)
+    val format = new ParquetFileFormat()
+    // a schema-less (legacy) manifest infers from the files, as
+    // `spark.read.parquet` would
+    val dataSchema = physSchema
+      .map(CharVarcharUtils.replaceCharVarcharWithStringInSchema)
+      .orElse(format.inferSchema(spark, Map.empty, index.allFiles()))
+      .getOrElse(throw new IllegalStateException(
+        s"cannot infer a schema for manifest v${m.version} at $dir"))
+    val base = PlanBridge.ofRows(spark, LogicalRelation(HadoopFsRelation(
+      index, new StructType(), dataSchema, None, format, Map.empty)(spark)))
     def logicalCols: Seq[Column] = schemaOpt match {
       case Some(s) if colmap.nonEmpty =>
         s.fields.toSeq.map(f => col(colmap.getOrElse(f.name, f.name)).as(f.name))
@@ -2130,7 +2140,7 @@ object SnapshotTable {
     val applied =
       if (dvDirs.isEmpty) withMeta
       else {
-        val dv = spark.read
+        val dv = spark.read.schema(DvSchema)
           .parquet(dvDirs.map(d => Paths.get(dir, d).toString): _*)
           .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
         withMeta.join(broadcast(dv),
@@ -2373,7 +2383,7 @@ object SnapshotTable {
 
   /** Append-only commit: prior files carried by reference.
     * `fromVersion` pins the snapshot this transaction read (optimistic
-    * concurrency): if someone else committed after it, the CREATE_NEW
+    * concurrency): if someone else committed after it, the put-if-absent
     * publish loses and throws [[ConcurrentCommitException]] instead of
     * silently building on state the caller never saw. WITHOUT a pinned
     * version, a losing appender REBASES: appends commute with any
@@ -2436,7 +2446,7 @@ object SnapshotTable {
     * O(1) metadata on the latest manifest and survives [[vacuum]]
     * deleting historical manifests (an epoch can never be re-applied
     * because its original manifest was reclaimed). A racing replay of
-    * the SAME epoch is arbitrated by CREATE_NEW (the loser's batch
+    * the SAME epoch is arbitrated by put-if-absent (the loser's batch
     * becomes a vacuumable orphan). Returns the version holding the
     * epoch, or the latest version when the holder was vacuumed. */
   def appendEpoch(spark: SparkSession, dir: String, df: DataFrame,
@@ -3188,6 +3198,11 @@ object SnapshotTable {
     } finally joined.unpersist()
   }
 
+  /** The fixed schema of a DV batch — (relative data-file path, row
+    * position). DV reads pass it so no read infers it from a footer. */
+  private val DvSchema =
+    new StructType().add("file", StringType).add("pos", LongType)
+
   /** Shared DV-attach step of the merge-on-read writers
     * ([[deleteVectors]], [[updateVectors]], and [[generalMerge]] in
     * merge-on-read mode): write ONE dv batch holding `newRows`
@@ -3203,7 +3218,7 @@ object SnapshotTable {
     val oldDvDirs = touched.flatMap(_.dv).distinct
     val oldRows =
       if (oldDvDirs.isEmpty) None
-      else Some(spark.read
+      else Some(spark.read.schema(DvSchema)
         .parquet(oldDvDirs.map(d => Paths.get(dir, d).toString): _*)
         .filter(col("file").isin(touchedRel.toSeq: _*)))
     val allRows = oldRows.map(newRows.unionByName(_)).getOrElse(newRows)
@@ -3881,7 +3896,7 @@ object SnapshotTable {
     * failed, leaving the schema permanently widened): drop the named
     * just-added columns again IFF the evolve commit is still the table
     * head. The compensation PINS `atVersion` as its parent, so a
-    * concurrent foreign commit wins the CREATE_NEW race and the
+    * concurrent foreign commit wins the put-if-absent race and the
     * evolution stands (documented residue — rolling back past someone
     * else's commit would rewrite history they built on). The columns
     * hold no committed data by construction (the statement failed
@@ -4662,21 +4677,6 @@ object SnapshotTable {
       .toDF("version", "op", "parent", "n_files", "epoch", "ts")
   }
 
-  /** CDC-style NET row changes between two snapshots, computed from the
-    * manifest FILE diff — the scale property: only files that CHANGED
-    * between the versions are read, never the whole table (a 100 TB
-    * table whose day touched 3 files reads 3 files' worth from each
-    * side). Mechanics: entries identical in both manifests (same path
-    * AND same deletion-vector reference) cancel by construction; the
-    * remaining entries are read per side (each through its own
-    * manifest's schema + DVs) and NETTED with `exceptAll` both ways —
-    * a rewritten-but-identical row therefore cancels too, so the result
-    * equals the brute-force `read(v2) exceptAll read(v1)` /
-    * `read(v1) exceptAll read(v2)` over the full table (spec-asserted)
-    * while touching only the changed files. Returns the union of data
-    * columns plus `_change_type` ('insert' rows exist only in `toV`,
-    * 'delete' rows only in `fromV`); multiset semantics — a row whose
-    * duplicate count changed nets the difference. */
   /** The CDC row schema: the table's data columns plus the change
     * metadata every feed consumer keys on. */
   def cdcSchema(schema: StructType): StructType =
@@ -4687,7 +4687,7 @@ object SnapshotTable {
     * change-files idea (public design of Delta's change data feed),
     * computed LAZILY at first read instead of taxing every commit:
     * version v's batch is [[changesBetween]](v-1, v) (file-diff +
-    * netted exceptAll — only changed files are ever read) stamped with
+    * signed netting — only changed files are ever read) stamped with
     * `_commit_version = v`; the FIRST surviving version emits its full
     * snapshot as inserts. Publication is atomic (write to a temp dir,
     * rename) so a crashed or racing materializer never leaves a
@@ -4799,6 +4799,24 @@ object SnapshotTable {
       .filter(_.endsWith(".parquet")).sorted
   }
 
+  /** CDC-style NET row changes between two snapshots, computed from the
+    * manifest FILE diff — the scale property: only files that CHANGED
+    * between the versions are read, never the whole table (a 100 TB
+    * table whose day touched 3 files reads 3 files' worth from each
+    * side). Mechanics: entries identical in both manifests (same path
+    * AND same deletion-vector reference) cancel by construction; the
+    * remaining entries are read per side (each through its own
+    * manifest's schema + DVs) and NETTED in one pass — every old row
+    * weighs -1, every new row +1, one group-by over the data columns
+    * sums the weights, and a row with net weight d ≠ 0 is emitted |d|
+    * times as 'insert' (d > 0) or 'delete' (d < 0). A rewritten-but-
+    * identical row therefore cancels too, so the result equals the
+    * brute-force `read(v2) exceptAll read(v1)` / `read(v1) exceptAll
+    * read(v2)` over the full table (spec-asserted) while touching only
+    * the changed files. Returns the union of data columns plus
+    * `_change_type` ('insert' rows exist only in `toV`, 'delete' rows
+    * only in `fromV`); multiset semantics — a row whose duplicate count
+    * changed nets the difference. */
   def changesBetween(spark: SparkSession, dir: String,
                      fromV: Int, toV: Int): DataFrame = {
     require(fromV >= 1 && toV >= 1, "versions are >= 1")
@@ -4834,15 +4852,20 @@ object SnapshotTable {
     // against brute-force exceptAll in SnapshotCdcSpec) — at half the
     // scans and half the shuffles.
     val dataCols = o.columns.toSeq
-    val net = o.withColumn("__w", lit(-1L))
-      .unionByName(n.withColumn("__w", lit(1L)))
+    // working columns named apart from every data column (resolution is
+    // case-insensitive): a user column `__w` must not be overwritten
+    def fresh(name: String): String = Iterator.iterate(name)("_" + _)
+      .find(c => !dataCols.exists(_.equalsIgnoreCase(c))).get
+    val (w, d, r) = (fresh("__w"), fresh("__d"), fresh("__r"))
+    val net = o.withColumn(w, lit(-1L))
+      .unionByName(n.withColumn(w, lit(1L)))
       .groupBy(dataCols.map(col): _*)
-      .agg(sum(col("__w")).as("__d"))
-      .filter(col("__d") =!= 0L)
+      .agg(sum(col(w)).as(d))
+      .filter(col(d) =!= 0L)
     net
       .withColumn("_change_type",
-        when(col("__d") > 0L, lit("insert")).otherwise(lit("delete")))
-      .withColumn("__r", explode(sequence(lit(1L), abs(col("__d")))))
+        when(col(d) > 0L, lit("insert")).otherwise(lit("delete")))
+      .withColumn(r, explode(sequence(lit(1L), abs(col(d)))))
       .select(dataCols.map(col) :+ col("_change_type"): _*)
   }
 }

@@ -382,7 +382,7 @@ object Similarity {
     * against the stored centroids and appended under its epoch id —
     * SnapshotTable's epoch-idempotent commit turns foreachBatch's
     * at-least-once replay into an exactly-once index (a replayed epoch
-    * is skipped; a racing replay loses the CREATE_NEW and its batch
+    * is skipped; a racing replay loses the put-if-absent and its batch
     * vacuums). Usage:
     * {{{
     * vecStream.writeStream.foreachBatch { (df, epoch) =>

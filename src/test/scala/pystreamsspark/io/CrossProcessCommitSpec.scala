@@ -7,7 +7,7 @@ import pystreamsspark.SparkSpec
 
 /** CROSS-PROCESS commit contention (round-12, r11 verdict #3): the
   * optimistic retry/rebase protocol was proven only with racing threads
-  * in ONE JVM; the atomic-CREATE_NEW claim is filesystem-level and must
+  * in ONE JVM; the atomic put-if-absent claim is filesystem-level and must
   * hold across PROCESSES. This spec forks a second plain JVM (the test
   * classpath — no Spark needed over there: commits are pure filesystem
   * metadata) that appends `n` epoch-stamped batches while THIS session
@@ -20,8 +20,8 @@ import pystreamsspark.SparkSpec
   *  - every surviving version stays readable (delta-chain resolution
   *    crosses commits written by the other process).
   *
-  * Honest caveat (documented, same as every CREATE_NEW-based log): the
-  * atomicity relies on POSIX O_EXCL create semantics of the shared
+  * Honest caveat (documented, same as every put-if-absent log): the
+  * atomicity relies on POSIX hard-link create semantics of the shared
   * filesystem; an object store deployment needs a conditional-put /
   * if-none-match analogue for the manifest publish.
   */

@@ -3,9 +3,8 @@ package pystreamsspark.io
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import pystreamsspark.SparkSpec
+import pystreamsspark.{JobCount, SparkSpec}
 
 /** Laws of the r14 FOOTER-STATS fast path: a clustered write whose
   * cluster columns are all footer-safe types reads its per-file
@@ -115,17 +114,7 @@ class FooterStatsSpec extends SparkSpec {
 
   test("footer path skips the stats re-scan job; pruning works from " +
     "footer-derived stats") {
-    @volatile var jobs = 0
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-    }
-    def countJobs(f: => Unit): Int = {
-      jobs = 0
-      spark.sparkContext.addSparkListener(l)
-      try { f; Thread.sleep(1500) } // listener bus is async
-      finally spark.sparkContext.removeSparkListener(l)
-      jobs
-    }
+    def countJobs(f: => Unit): Int = JobCount(spark)(f)
     val d = freshDir()
     val fastJobs = countJobs {
       SnapshotTable.createClustered(spark, d, fixture(), clusterCols)
@@ -156,17 +145,7 @@ class FooterStatsSpec extends SparkSpec {
   test("clean float-clustered table takes the footer path (job-count) " +
     "and prunes; NaN or ±0.0 boundaries fall back to the scan") {
     import spark.implicits._
-    @volatile var jobs = 0
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-    }
-    def countJobs(f: => Unit): Int = {
-      jobs = 0
-      spark.sparkContext.addSparkListener(l)
-      try { f; Thread.sleep(1500) } // listener bus is async
-      finally spark.sparkContext.removeSparkListener(l)
-      jobs
-    }
+    def countJobs(f: => Unit): Int = JobCount(spark)(f)
     // clean doubles: no NaN, no zero → footer path (r15)
     val clean = (0 until 2000).map(i => (i.toLong, i * 1.5 + 1.0))
       .toDF("k", "p").repartitionByRange(4, col("p"))

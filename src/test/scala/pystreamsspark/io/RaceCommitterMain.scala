@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * `n` batches to an existing snapshot table by copying a SEED parquet
   * file into fresh UUID batch dirs and committing each through the
   * epoch-stamped append funnel ([[SnapshotTable.appendEpochFiles]] —
-  * the same CREATE_NEW arbitration + retry/rebase every writer uses).
+  * the same put-if-absent arbitration + retry/rebase every writer uses).
   * Prints `LANDED=<count>` and exits 0; any exception exits nonzero.
   *
   * Usage: RaceCommitterMain <tableDir> <n> <seedAbsPath> <epochBase>

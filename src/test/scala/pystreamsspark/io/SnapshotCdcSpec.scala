@@ -58,6 +58,25 @@ class SnapshotCdcSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("insert", 300L, "new_300")))
   }
 
+  test("changesBetween nets user columns named like its working columns") {
+    import spark.implicits._
+    val dir = freshDir()
+    val rows = (0 until 50).map(i => (i.toLong, s"name_$i", i * 7L, i % 3))
+    SnapshotTable.create(spark, dir, rows.toDF("id", "name", "__w", "__D"),
+      numFiles = 2)
+    SnapshotTable.merge(spark, dir,
+      Seq((5L, "upd_5", 35L, 2)).toDF("id", "name", "__w", "__D"), Seq("id"))
+    val got = SnapshotTable.changesBetween(spark, dir, 1, 2)
+    assert(got.columns.toSeq === Seq("id", "name", "__w", "__D",
+      "_change_type"))
+    // the user's `__w` / `__D` values come through untouched, and the
+    // rewritten-but-identical rows of the merged file cancel
+    val out = got.collect().map(r => (r.getString(4), r.getLong(0),
+      r.getString(1), r.getLong(2), r.getInt(3))).toSet
+    assert(out === Set(("delete", 5L, "name_5", 35L, 2),
+      ("insert", 5L, "upd_5", 35L, 2)))
+  }
+
   test("a DV-only change (same file, new deletion vector) nets as deletes") {
     val dir = freshDir()
     SnapshotTable.create(spark, dir, seed(100), numFiles = 2)

@@ -10,7 +10,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Laws of the snapshot-manifest table layer: every mutation is a new
-  * immutable snapshot, the CREATE_NEW manifest write is the atomic
+  * immutable snapshot, the put-if-absent manifest write is the atomic
   * commit point, MERGE is file-granular copy-on-write, and old versions
   * stay readable until vacuumed. */
 class SnapshotTableSpec extends AnyFunSuite with BeforeAndAfterAll {
