@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -1532,12 +1533,11 @@ object SnapshotTable {
     * "missing but not all-null" and refuse the fast path rather than
     * weaken pruning. `want`: (logical name, physical name, type). */
   private[io] def footerMeta(dir: String, rel: String,
-      want: Seq[(String, String, DataType)])
+      want: Seq[(String, String, DataType)], conf: Configuration)
       : (Option[Long], Option[Map[String, (String, String)]]) =
     try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(Paths.get(dir, rel).toString),
-        new org.apache.hadoop.conf.Configuration())
+        new org.apache.hadoop.fs.Path(Paths.get(dir, rel).toString), conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try {
         val rows = Some(r.getRecordCount.toLong)
@@ -1662,6 +1662,13 @@ object SnapshotTable {
     sess.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
     try physDf.write.parquet(out.toString)
     finally sess.conf.set(tsTypeKey, prevTsType)
+    // re-reads of the batch take the schema it was written with (as
+    // readEntries does): no footer read, no schema-inference job
+    val writtenSchema =
+      CharVarcharUtils.replaceCharVarcharWithStringInSchema(physDf.schema)
+    // one Hadoop configuration per batch, the session's (as the scan's
+    // file index takes it), for the footer reads below
+    val hadoopConf = GraftSqlShims.newHadoopConf(sess)
     // CHECK-constraint enforcement: this is the ONE data-file funnel
     // every batch write path shares (append, INSERT, COPY, CoW
     // rewrites, MoR image batches), so the declared predicate holds
@@ -1677,7 +1684,7 @@ object SnapshotTable {
       .map(FileEntry.dec).foreach { pred =>
       // the CHECK predicate speaks logical names — project the re-read
       // batch (physical names) back through the mapping first
-      val batchRaw = df.sparkSession.read.parquet(out.toString)
+      val batchRaw = sess.read.schema(writtenSchema).parquet(out.toString)
       val batchDf =
         if (colmap.isEmpty) batchRaw
         else {
@@ -1720,7 +1727,7 @@ object SnapshotTable {
       try {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(Paths.get(dir, rel).toString),
-          new org.apache.hadoop.conf.Configuration())
+          hadoopConf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try Some(r.getRecordCount) finally r.close()
       } catch { case _: Exception => None }
@@ -1758,7 +1765,7 @@ object SnapshotTable {
       }
       val aggs = statAggs ++ bloomAggs
       val bloomBase = 1 + statAggs.size
-      val byFile = df.sparkSession.read.parquet(out.toString)
+      val byFile = sess.read.schema(writtenSchema).parquet(out.toString)
         .groupBy(input_file_name().as("_f"))
         .agg(aggs.head, aggs.tail: _*)
         .collect() // O(#batch files × bloombits) driver metadata
@@ -1823,7 +1830,7 @@ object SnapshotTable {
       // never silently degrade.
       val want = presentStats.map(c =>
         (c, colmap.getOrElse(c, c), df.schema(c).dataType))
-      val metas = rel.map(p => p -> footerMeta(dir, p, want))
+      val metas = rel.map(p => p -> footerMeta(dir, p, want, hadoopConf))
       if (metas.forall(_._2._2.isDefined))
         metas.map { case (p, (rows, stats)) =>
           FileEntry(p, stats.get,
@@ -2131,26 +2138,42 @@ object SnapshotTable {
     }
     if (!tagged && dvDirs.isEmpty)
       return if (colmap.isEmpty) base else base.select(logicalCols: _*)
+    // the DV anti-join's working columns are named apart from the data
+    // columns: a data column `_src_file` or `__dv_file` is neither
+    // overwritten nor ambiguous. A tagged read's row identity keeps its
+    // fixed names (its callers key on them and refuse such tables).
+    val src = Seq("_src_file", "_src_pos")
+    val Seq(srcFile, srcPos) =
+      if (tagged) src else src.map(freshName(base.columns.toSeq, _))
     // the relative manifest path is always the last 3 URI components:
     // data/<batch>/<part-file>
     val withMeta = base
-      .withColumn("_src_file", concat_ws("/",
+      .withColumn(srcFile, concat_ws("/",
         slice(split(col("_metadata.file_path"), "/"), -3, 3)))
-      .withColumn("_src_pos", col("_metadata.row_index"))
+      .withColumn(srcPos, col("_metadata.row_index"))
     val applied =
       if (dvDirs.isEmpty) withMeta
       else {
+        val Seq(dvFile, dvPos) = Seq("__dv_file", "__dv_pos")
+          .map(freshName(withMeta.columns.toSeq, _))
         val dv = spark.read.schema(DvSchema)
           .parquet(dvDirs.map(d => Paths.get(dir, d).toString): _*)
-          .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
+          .select(col("file").as(dvFile), col("pos").as(dvPos))
         withMeta.join(broadcast(dv),
-          col("_src_file") === col("__dv_file") &&
-            col("_src_pos") === col("__dv_pos"), "left_anti")
+          col(srcFile) === col(dvFile) && col(srcPos) === col(dvPos),
+          "left_anti")
       }
     if (tagged)
-      applied.select(logicalCols ++ Seq(col("_src_file"), col("_src_pos")): _*)
+      applied.select(logicalCols ++ Seq(col(srcFile), col(srcPos)): _*)
     else applied.select(logicalCols: _*)
   }
+
+  /** `name`, or `name` with leading underscores added, so that it is
+    * none of `taken` — a working column named apart from every data
+    * column (column resolution is case-insensitive). */
+  private def freshName(taken: Seq[String], name: String): String =
+    Iterator.iterate(name)("_" + _)
+      .find(c => !taken.exists(_.equalsIgnoreCase(c))).get
 
   /** True when the snapshot carries any deletion vector — the state the
     * V2 catalog scan cannot serve (a V2 scan is a file read; the DV
@@ -4852,11 +4875,8 @@ object SnapshotTable {
     // against brute-force exceptAll in SnapshotCdcSpec) — at half the
     // scans and half the shuffles.
     val dataCols = o.columns.toSeq
-    // working columns named apart from every data column (resolution is
-    // case-insensitive): a user column `__w` must not be overwritten
-    def fresh(name: String): String = Iterator.iterate(name)("_" + _)
-      .find(c => !dataCols.exists(_.equalsIgnoreCase(c))).get
-    val (w, d, r) = (fresh("__w"), fresh("__d"), fresh("__r"))
+    // a user column `__w` must not be overwritten
+    val Seq(w, d, r) = Seq("__w", "__d", "__r").map(freshName(dataCols, _))
     val net = o.withColumn(w, lit(-1L))
       .unionByName(n.withColumn(w, lit(1L)))
       .groupBy(dataCols.map(col): _*)

@@ -1,14 +1,21 @@
 package pystreamsspark.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShims
 import org.apache.spark.sql.functions._
 
 /** Schema-safe loaders for the driver's parquet test tables.
   *
-  * All tables are plain `spark.read.parquet` — the vectorized parquet
-  * reader plus Catalyst predicate pushdown / column pruning make this the
-  * right scan for any scale; at 100 TB the same call distributes across
-  * executors with `spark.sql.files.maxPartitionBytes`-sized splits.
+  * Every table is a plain parquet scan built by [[parquet]]: the
+  * vectorized reader plus Catalyst predicate pushdown / column pruning
+  * make this the right scan for any scale; at 100 TB the same call
+  * distributes across executors with
+  * `spark.sql.files.maxPartitionBytes`-sized splits. The scan's SCHEMA
+  * comes from one parquet footer read on the driver, converted by
+  * Spark's own footer reader, and is handed to `spark.read.schema`:
+  * `spark.read.parquet` would resolve the same schema by running a
+  * one-task Spark job per load (schema inference), a fixed cost that
+  * dominated building the short queries this library serves.
   *
   * One genuine quirk (SURVEY.md §7.4): historically `events.ts` was parquet
   * TIMESTAMP(NANOS), which Spark 4.x rejects by default; newer drops of the
@@ -29,8 +36,18 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     name match {
       case "events" => events(spark, sfDir)
-      case n        => spark.read.parquet(s"$sfDir/$n.parquet")
+      case n        => parquet(spark, s"$sfDir/$n.parquet")
     }
+
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * schema is the one that job would infer, read on the driver from
+    * the footer it would touch ([[GraftParquetShims.footerSchema]]).
+    * Paths it cannot resolve that way — a partitioned directory, a
+    * glob, `mergeSchema` set — go through Spark's inference. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    GraftParquetShims.footerSchema(spark, path)
+      .map(spark.read.schema(_).parquet(path))
+      .getOrElse(spark.read.parquet(path))
 
   def region(spark: SparkSession, sfDir: String): DataFrame    = load(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame    = load(spark, sfDir, "nation")
@@ -49,7 +66,7 @@ object Tables {
     // Runtime-settable in Spark 4.1; must be on before the read resolves.
     // Harmless when the file is µs-typed; required when it is ns-typed.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = parquet(spark, s"$sfDir/events.parquet")
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     raw.schema("ts").dataType match {
       case LongType =>

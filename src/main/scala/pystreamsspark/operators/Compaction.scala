@@ -2,6 +2,7 @@ package pystreamsspark.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import pystreamsspark.io.Tables
 
 /** Small-file compaction — the unglamorous operator every 100 TB lake
   * needs: streaming ingest and fine-grained partitioning leave behind
@@ -37,7 +38,7 @@ object Compaction {
       if (f.getPath.getName.endsWith(".parquet")) bytes += f.getLen
     }
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(inDir).repartition(nOut)
+    Tables.parquet(spark, inDir).repartition(nOut)
       .write.mode("overwrite").parquet(outDir)
     nOut
   }

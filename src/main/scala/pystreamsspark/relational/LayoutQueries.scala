@@ -151,7 +151,7 @@ object LayoutQueries {
       .repartition(64).write.mode("overwrite").parquet(fragDir)
     val compDir = scratch(sfDir, "compact_docs")
     Compaction.compactParquet(spark, fragDir, compDir, targetBytes = 8L << 20)
-    spark.read.parquet(compDir)
+    Tables.parquet(spark, compDir)
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"),
         sum($"n_chars").as("sum_chars"),
@@ -189,7 +189,7 @@ object LayoutQueries {
       .write.mode("overwrite")
       .option("parquet.block.size", 512 * 1024)
       .parquet(dir)
-    spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
       .filter($"o_totalprice" >= 100000.0 && $"o_totalprice" < 110000.0)
       .groupBy($"o_orderstatus")
       .agg(count(lit(1)).as("n_orders"), Det.dsum($"o_totalprice").as("revenue"))

@@ -1,5 +1,6 @@
 package pystreamsspark.tools
 
+import org.apache.spark.graft.BusShim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
@@ -58,9 +59,9 @@ object Jobs {
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener bus is async (and private); a short settle suffices for
-      // a diagnostic probe
-      Thread.sleep(800)
+      // the listener bus is async: drain it so every job of this key
+      // is counted here, none against the next key
+      BusShim.waitUntilEmpty(spark.sparkContext)
       println(f"JOBS $name rows=$n wall=$wall%.2fs jobs=${jobs.get} " +
         f"stages=${stages.get} tasks=${tasks.get} " +
         f"taskTime=${taskTimeMs.get / 1000.0}%.1fs " +

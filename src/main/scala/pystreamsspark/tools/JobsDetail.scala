@@ -1,5 +1,6 @@
 package pystreamsspark.tools
 
+import org.apache.spark.graft.BusShim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import scala.collection.concurrent.TrieMap
@@ -42,6 +43,8 @@ object JobsDetail {
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .orElse(Option(e.properties)
             .flatMap(p => Option(p.getProperty("callSite.short"))))
+          // without either, the result stage's name is the call site
+          .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
           .getOrElse("?")
         e.stageIds.foreach(s => stageToJob(s) = e.jobId)
       }
@@ -68,7 +71,7 @@ object JobsDetail {
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1000) // async listener settle (diagnostic tool)
+      BusShim.waitUntilEmpty(spark.sparkContext) // async listener bus
       println(f"KEY $name rows=$n wall=$wall%.2fs jobs=${byJob.size}")
       byJob.toSeq.sortBy(_._1).foreach { case (id, j) =>
         println(f"  job=$id%3d wall=${(j.t1 - j.t0) / 1000.0}%6.2fs tasks=${j.tasks}%4d " +

@@ -127,6 +127,29 @@ class SnapshotDvSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ids(SnapshotTable.read(spark, dir)) === expect)
   }
 
+  test("data columns named like the DV anti-join's working columns") {
+    import spark.implicits._
+    val dir = freshDir()
+    SnapshotTable.create(spark, dir, (0 until 50)
+      .map(i => (i.toLong, s"f$i", i % 7L)).toDF("id", "__dv_file", "__DV_POS"),
+      numFiles = 2)
+    SnapshotTable.deleteVectors(spark, dir, "id % 10 = 3")
+    // a second DV delete discovers its rows through the DV'd read
+    SnapshotTable.deleteVectors(spark, dir, "id < 5")
+    val got = SnapshotTable.read(spark, dir)
+    assert(got.columns.toSeq === Seq("id", "__dv_file", "__DV_POS"))
+    assert(ids(got) ===
+      (0 until 50).filter(i => i % 10 != 3 && i >= 5).map(_.toLong))
+    assert(got.filter(col("__dv_file") === "f42")
+      .select("__DV_POS").as[Long].collect().toSeq === Seq(0L))
+    // a later batch adds a column named like the row-identity column
+    SnapshotTable.append(spark, dir,
+      Seq((100L, "f100", 2L, "mine"))
+        .toDF("id", "__dv_file", "__DV_POS", "_src_file"))
+    assert(SnapshotTable.read(spark, dir).filter(col("id") >= 99L)
+      .select("_src_file").as[String].collect().toSeq === Seq("mine"))
+  }
+
   test("vacuum KEEPS a DV batch while a kept manifest references it") {
     val dir = freshDir()
     SnapshotTable.create(spark, dir, seed(60))          // v1

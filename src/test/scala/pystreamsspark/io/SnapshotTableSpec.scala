@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.graft.BusShim
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -272,8 +273,8 @@ class SnapshotTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.listenerManager.register(listener)
     try {
       SnapshotTable.merge(spark, dir, updates, Seq("id"), numFiles = 1)
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (scanned.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      // query-execution events reach the listener through the bus
+      BusShim.waitUntilEmpty(spark.sparkContext)
       assert(!scanned.isEmpty, "no scan metrics observed")
       val maxFiles = scanned.asScala.max
       assert(maxFiles <= 2L,
