@@ -489,10 +489,11 @@ class SnapshotV2Table(fullName: String, val dir: String,
         s"$fullName has renamed columns (column mapping); read it on a " +
           "GraftExtensions session, via SnapshotTable.read, or " +
           "OPTIMIZE/compact() first to materialize the mapping")
-    // planned from the manifest: one driver stat per file, no listing job
+    // planned from the manifest: one driver stat per file, no listing
+    // job, and pushed-down filters skip files by their stats
     val v = versionAsOf.getOrElse(SnapshotTable.latestVersion(dir))
-    val index = new ManifestFileIndex(GraftSqlShims.activeClassic(), dir, v,
-      SnapshotTable.filePaths(dir, Some(v)))
+    val index = SnapshotTable.manifestIndex(GraftSqlShims.activeClassic(),
+      dir, v)
     // the ParquetScanBuilder SUBCLASS: full native pushdown inherited
     // for batch, plus toMicroBatchStream for `readStream.table(...)`,
     // plus KeyGroupedPartitioning on bucketed tables (zero-shuffle SPJ).

@@ -455,8 +455,10 @@ private[io] class SnapshotStreamingWrite(dir: String, schema: StructType)
     val statsCols = try SnapshotTable.statsColsOf(dir) catch {
       case _: Exception => Nil
     }
+    // per-file stats from the batch writer's task-side tracker: the same
+    // expressions, so a streamed file records what an append would
     new SnapshotWriterFactory(owf, bos.toByteArray, schema,
-      statsCols.filter(schema.fieldNames.contains),
+      FileFacts(spark, schema, statsCols.filter(schema.fieldNames.contains)),
       java.nio.file.Paths.get(dir, currentBatchRel).toString, currentBatchRel)
   }
 
@@ -464,8 +466,7 @@ private[io] class SnapshotStreamingWrite(dir: String, schema: StructType)
                       messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.collect {
       case w: WrittenFileMsg if w.relPath != null =>
-        SnapshotTable.FileEntry(w.relPath,
-          w.statNames.zip(w.statLos.zip(w.statHis)).toMap)
+        SnapshotTable.FileEntry(w.relPath, w.stats)
     }.toSeq.sortBy(_.path)
     val committed =
       SnapshotTable.appendEpochFiles(dir, epochId, files, schema)
@@ -495,38 +496,33 @@ private[io] class SnapshotStreamingWrite(dir: String, schema: StructType)
 }
 
 /** Task commit message: the file this task wrote (null when the task
-  * saw no rows) plus its typed min/max stats, pre-rendered in the
-  * manifest's string format (epoch-micros for timestamps, ISO for
-  * dates). */
+  * saw no rows) plus its min/max stats, rendered in the manifest's
+  * string format by the batch writer's tracker. */
 private[io] final case class WrittenFileMsg(relPath: String, rows: Long,
-                                            statNames: Array[String],
-                                            statLos: Array[String],
-                                            statHis: Array[String])
+                                            stats: Map[String, (String, String)])
   extends WriterCommitMessage
 
 private[io] class SnapshotWriterFactory(owf: OutputWriterFactory,
                                         confBytes: Array[Byte],
                                         schema: StructType,
-                                        statsCols: Seq[String],
+                                        facts: FileFacts,
                                         absBatchDir: String,
                                         relBatchDir: String)
   extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
-    new SnapshotDataWriter(owf, confBytes, schema, statsCols, absBatchDir,
+    new SnapshotDataWriter(owf, confBytes, schema, facts, absBatchDir,
       relBatchDir, partitionId, taskId)
 }
 
 /** Executor-side writer: lazily opens Spark's parquet OutputWriter on
-  * the first row (empty partitions write nothing), tracks cluster-key
-  * min/max with the SAME comparison semantics the prune side uses
-  * (numeric families and timestamps numerically, strings/dates
-  * lexically on their rendered form). */
+  * the first row (empty partitions write nothing) and feeds every row to
+  * the batch writer's per-file tracker ([[FileFacts]]). */
 private[io] class SnapshotDataWriter(owf: OutputWriterFactory,
                                      confBytes: Array[Byte],
                                      schema: StructType,
-                                     statsCols: Seq[String],
+                                     facts: FileFacts,
                                      absBatchDir: String,
                                      relBatchDir: String,
                                      partitionId: Int, taskId: Long)
@@ -534,10 +530,7 @@ private[io] class SnapshotDataWriter(owf: OutputWriterFactory,
 
   private var writer: OutputWriter = null
   private var fileName: String = null
-  private var rows = 0L
-  private val trackers = statsCols.map { c =>
-    new ColStatsTracker(c, schema.fieldIndex(c), schema(c).dataType)
-  }
+  private val tracker = facts.newTaskInstance()
 
   private def open(): Unit = {
     val conf = new Configuration(false)
@@ -549,23 +542,22 @@ private[io] class SnapshotDataWriter(owf: OutputWriterFactory,
     val ctx = new TaskAttemptContextImpl(conf, attempt)
     fileName = f"part-$partitionId%05d-${UUID.randomUUID().toString.take(8)}.parquet"
     writer = owf.newInstance(s"$absBatchDir/$fileName", schema, ctx)
+    tracker.newFile(writer.path())
   }
 
   override def write(record: InternalRow): Unit = {
     if (writer == null) open()
-    trackers.foreach(_.update(record))
+    tracker.newRow(writer.path(), record)
     writer.write(record)
-    rows += 1
   }
 
   override def commit(): WriterCommitMessage = {
     if (writer != null) writer.close()
-    val withStats = trackers.filter(_.hasValue)
-    WrittenFileMsg(
-      if (fileName == null) null else s"$relBatchDir/$fileName", rows,
-      withStats.map(_.name).toArray,
-      withStats.map(_.loString).toArray,
-      withStats.map(_.hiString).toArray)
+    val file = tracker.getFinalStats(0L) match {
+      case FileFacts.Stats(fs) => fs.headOption
+    }
+    WrittenFileMsg(if (fileName == null) null else s"$relBatchDir/$fileName",
+      file.map(_.rows).getOrElse(0L), file.map(_.stats).getOrElse(Map.empty))
   }
 
   override def abort(): Unit = if (writer != null) {
@@ -576,82 +568,4 @@ private[io] class SnapshotDataWriter(owf: OutputWriterFactory,
   }
 
   override def close(): Unit = ()
-}
-
-/** Typed per-file min/max for one stat column, rendered in the manifest
-  * stats format (see SnapshotTable.statAgg: epoch-micros strings for
-  * TimestampType, ISO for dates, plain casts otherwise). Unsupported
-  * types and all-null columns record no stats — conservative-correct
-  * (the file is never pruned). */
-private[io] final class ColStatsTracker(val name: String, ordinal: Int,
-                                        dt: DataType) {
-  private var loL = 0L; private var hiL = 0L        // integral/ts/date
-  private var loD = 0.0; private var hiD = 0.0      // float family
-  private var loS: String = null; private var hiS: String = null
-  private var loDec: java.math.BigDecimal = null
-  private var hiDec: java.math.BigDecimal = null
-  private var seen = false
-  private val (prec, scale) = dt match {
-    case d: DecimalType => (d.precision, d.scale)
-    case _              => (0, 0)
-  }
-  private val supported = dt match {
-    case _: ByteType | _: ShortType | _: IntegerType | _: LongType |
-         _: TimestampType | _: DateType | _: FloatType | _: DoubleType |
-         _: DecimalType | _: StringType => true
-    case _ => false
-  }
-
-  def update(r: InternalRow): Unit = {
-    if (!supported || r.isNullAt(ordinal)) return
-    dt match {
-      case _: ByteType => updL(r.getByte(ordinal).toLong)
-      case _: ShortType => updL(r.getShort(ordinal).toLong)
-      case _: IntegerType | _: DateType => updL(r.getInt(ordinal).toLong)
-      case _: LongType | _: TimestampType => updL(r.getLong(ordinal))
-      case _: FloatType => updD(r.getFloat(ordinal).toDouble)
-      case _: DoubleType => updD(r.getDouble(ordinal))
-      case _: DecimalType =>
-        val v = r.getDecimal(ordinal, prec, scale).toJavaBigDecimal
-        if (!seen || v.compareTo(loDec) < 0) loDec = v
-        if (!seen || v.compareTo(hiDec) > 0) hiDec = v
-      case _: StringType =>
-        val v = r.getUTF8String(ordinal).toString
-        if (!seen || v.compareTo(loS) < 0) loS = v
-        if (!seen || v.compareTo(hiS) > 0) hiS = v
-      case _ => return
-    }
-    seen = true
-  }
-  private def updL(v: Long): Unit = {
-    if (!seen || v < loL) loL = v
-    if (!seen || v > hiL) hiL = v
-  }
-  private def updD(v: Double): Unit = {
-    // NaN: never min/max under IEEE compares — matches the SQL min/max
-    // aggregate (NaN sorts highest in Spark; a NaN-only file records no
-    // stats here, which only loses pruning, never correctness)
-    if (!seen || v < loD) loD = v
-    if (!seen || v > hiD) hiD = v
-  }
-
-  def hasValue: Boolean = seen
-  private def render(long: Long, dbl: Double): String = dt match {
-    case _: DateType => java.time.LocalDate.ofEpochDay(long).toString
-    case _: ByteType | _: ShortType | _: IntegerType | _: LongType |
-         _: TimestampType => long.toString
-    case _: FloatType | _: DoubleType => dbl.toString
-    case _: DecimalType => (if (long == 0L) loDec else hiDec).toString
-    case _ => if (long == 0L) loS else hiS
-  }
-  def loString: String = dt match {
-    case _: DecimalType => loDec.toString
-    case _: StringType  => loS
-    case _              => render(loL, loD)
-  }
-  def hiString: String = dt match {
-    case _: DecimalType => hiDec.toString
-    case _: StringType  => hiS
-    case _              => render(hiL, hiD)
-  }
 }

@@ -4,8 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -40,11 +39,13 @@ import org.apache.spark.sql.types._
   * manifest so resolution walks a bounded chain (the public
   * Delta-log/Iceberg checkpoint design, original implementation), and
   * vacuum writes `.checkpoint` sidecars before dropping a surviving
-  * delta's ancestors. Commit protocol = write all data
-  * files first, then put-if-absent the next manifest — creation is the
-  * atomic publish point. A losing concurrent committer gets
-  * [[ConcurrentCommitException]] and its orphaned data files are
-  * reclaimed by [[vacuum]]; a crash before the manifest exists leaves
+  * delta's ancestors. Commit protocol = write all data files first —
+  * straight to their final names in a fresh batch directory
+  * ([[BatchWriter]]: no `_temporary`, no rename, no `_SUCCESS`), with
+  * their stats computed by the write tasks — then put-if-absent the
+  * next manifest: creation is the atomic publish point. A losing
+  * concurrent committer gets [[ConcurrentCommitException]] and its
+  * orphaned data files are reclaimed by [[vacuum]]; a crash before the manifest exists leaves
   * the table state untouched (the RegistrySink abort discipline, at the
   * table level). The arbitration holds ACROSS PROCESSES, not just
   * threads (CrossProcessCommitSpec forks a second JVM racing real
@@ -503,28 +504,13 @@ object SnapshotTable {
     * once (r13 verdict #6): the old fold called [[statLess]] — a fresh
     * `BigDecimal` parse of BOTH operands — twice per entry, re-parsing
     * the running lo/hi rendering O(SEGMENT_SIZE) times per chunk. The
-    * typed-key fold keeps the identical comparison semantics
-    * (BigDecimal order for numerics, lexicographic for
-    * string-rendered types, unbounded otherwise). */
+    * fold compares [[statKey]]s, the order every pruning tier shares. */
   private def segmentize(entries: Seq[(Long, Long, FileEntry)],
                          schema: Option[StructType],
                          statsCols: Seq[String]): Seq[SegmentRef] = {
     val dts: Seq[(String, DataType)] = schema.map(s => statsCols.flatMap(c =>
       s.fields.find(_.name == c).map(f => c -> f.dataType))).getOrElse(Nil)
-    // typed parse of one rendering; null = resists comparison (the
-    // enclosing segment must stay unbounded) — mirrors statLess exactly
-    def keyOf(dt: DataType, s: String): AnyRef = dt match {
-      case _: ByteType | _: ShortType | _: IntegerType | _: LongType |
-           _: FloatType | _: DoubleType | _: DecimalType | _: TimestampType =>
-        try BigDecimal(s) catch { case _: NumberFormatException => null }
-      case _: StringType | _: DateType | _: TimestampNTZType => s
-      case _ => null
-    }
-    def lt(a: AnyRef, b: AnyRef): Boolean = (a, b) match {
-      case (x: BigDecimal, y: BigDecimal) => x < y
-      case (x: String, y: String) => x < y
-      case _ => false
-    }
+    def lt(a: AnyRef, b: AnyRef): Boolean = statCompare(a, b).exists(_ < 0)
     entries.grouped(SEGMENT_SIZE).map { chunk =>
       val off = chunk.head._1
       val len = chunk.last._1 + chunk.last._2 - off
@@ -535,8 +521,9 @@ object SnapshotTable {
         chunk.foreach { case (_, _, e) =>
           if (ok) e.stats.get(c) match {
             case Some((l, h)) =>
-              val lK = keyOf(dt, l)
-              val hK = keyOf(dt, h)
+              // null key = resists comparison: the segment stays unbounded
+              val lK = statKey(dt, l)
+              val hK = statKey(dt, h)
               if (lK == null || hK == null) ok = false
               else if (lo == null) { lo = l; hi = h; loK = lK; hiK = hK }
               else {
@@ -762,14 +749,8 @@ object SnapshotTable {
       requests0: Map[String, Seq[(String, String)]])
       : (Manifest, Seq[FileEntry]) = {
     val hm = headerManifest(dir, v)
-    val schemaOpt = hm.schema
-    val dts: Map[String, DataType] = schemaOpt.map(s =>
-      requests0.keys.flatMap(c => s.fields.find(_.name == c)
-        .map(f => c -> f.dataType)).toMap).getOrElse(Map.empty)
-    val requests = requests0.filter { case (c, _) =>
-      hm.statsCols.contains(c) && dts.contains(c) &&
-        !(dts(c).isInstanceOf[TimestampType] && !hm.tsStatsAreMicros)
-    }
+    val dts = prunableStats(hm).map(f => f.name -> f.dataType).toMap
+    val requests = requests0.filter { case (c, _) => dts.contains(c) }
     // walk to the anchor (nearest checkpointed or full version),
     // collecting the delta bodies on the way — O(ckdist) small reads
     var deltas = List.empty[(Seq[FileEntry], Seq[String])]
@@ -987,7 +968,7 @@ object SnapshotTable {
   /** Column-side position expressions — MUST stay in lockstep with
     * [[bloomPositions]] (the driver-side probe): seed 0 is the plain
     * xxhash64(col), seeds 1/2 chain an int literal. */
-  private def bloomPosExprs(c: Column, bits: Int): Seq[Column] =
+  private[io] def bloomPosExprs(c: Column, bits: Int): Seq[Column] =
     BLOOM_SEEDS.map {
       case 0 => pmod(xxhash64(c), lit(bits.toLong)).cast("int")
       case s => pmod(xxhash64(c, lit(s)), lit(bits.toLong)).cast("int")
@@ -1332,257 +1313,13 @@ object SnapshotTable {
     * files (range-contiguous, so pruning degrades gracefully). */
   private val TRANSFORM_MAX_FILES = 512
 
-  /** Write `df` as a fresh immutable file batch; returns one
-    * [[FileEntry]] per parquet file produced. When `statsCols` is
-    * non-empty, one distributed pass over the JUST-WRITTEN batch (never
-    * the whole table) records per-file min/max of those columns into
-    * the entries — the metadata that makes narrow-key MERGE discovery
-    * skip non-overlapping files instead of scanning every live file. */
-  /** Footer-stat eligibility (r14; float/decimal/NTZ added r15): types
-    * whose parquet row-group statistics render EXACTLY like
-    * [[statAgg]]'s aggregate rendering, so the footer fast path and the
-    * scan path produce bit-identical manifest stats. Floating point is
-    * eligible but VALUE-gated ([[footerValueOk]]): a NaN boundary
-    * (parquet writers handle NaN min/max inconsistently and Spark's
-    * aggregate order differs) or a ±0.0 boundary (the sign of zero is
-    * comparison-invisible, so which rendering the two paths pick is
-    * order-dependent) refuses the footer and takes the scan. Decimals
-    * reconstruct exactly from the unscaled footer value at the column's
-    * scale; NTZ micros render through the same trimmed-fraction ISO
-    * form Spark's cast produces (year-gated like DateType). Parity per
-    * type is pinned in FooterStatsSpec's bit-identity law. */
-  private def footerStatSafe(dt: DataType): Boolean = dt match {
-    case _: ByteType | _: ShortType | _: IntegerType | _: LongType |
-         _: StringType | _: DateType | _: TimestampType |
-         _: FloatType | _: DoubleType | _: DecimalType |
-         _: TimestampNTZType => true
-    case _ => false
-  }
-
-  /** Does the written parquet column's physical+logical type match what
-    * Spark writes for `dt` — the precondition for reading its footer
-    * stats as `dt` values (an INT96 timestamp, unsigned int, or
-    * annotation surprise falls back to the scan). */
-  private def footerTypeMatches(dt: DataType,
-      pt: org.apache.parquet.schema.PrimitiveType): Boolean = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val ann = pt.getLogicalTypeAnnotation
-    def signedInt = ann == null ||
-      (ann.isInstanceOf[LogicalTypeAnnotation.IntLogicalTypeAnnotation] &&
-        ann.asInstanceOf[LogicalTypeAnnotation.IntLogicalTypeAnnotation]
-          .isSigned)
-    dt match {
-      case _: ByteType | _: ShortType | _: IntegerType =>
-        pt.getPrimitiveTypeName == INT32 && signedInt
-      case _: LongType =>
-        pt.getPrimitiveTypeName == INT64 && signedInt
-      case _: DateType =>
-        pt.getPrimitiveTypeName == INT32 &&
-          ann.isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation]
-      case _: TimestampType =>
-        pt.getPrimitiveTypeName == INT64 && (ann match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
-          case _ => false
-        })
-      case _: StringType =>
-        pt.getPrimitiveTypeName == BINARY &&
-          ann.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-      case _: FloatType  => pt.getPrimitiveTypeName == FLOAT
-      case _: DoubleType => pt.getPrimitiveTypeName == DOUBLE
-      case d: DecimalType =>
-        // Spark's non-legacy writer: INT32 (p<=9), INT64 (p<=18), else
-        // FIXED_LEN_BYTE_ARRAY — all carry the unscaled value; the
-        // annotation must agree on precision AND scale or the
-        // reconstruction below would be wrong
-        (pt.getPrimitiveTypeName == INT32 || pt.getPrimitiveTypeName == INT64 ||
-          pt.getPrimitiveTypeName == FIXED_LEN_BYTE_ARRAY ||
-          pt.getPrimitiveTypeName == BINARY) && (ann match {
-          case a: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-            a.getPrecision == d.precision && a.getScale == d.scale
-          case _ => false
-        })
-      case _: TimestampNTZType =>
-        pt.getPrimitiveTypeName == INT64 && (ann match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS &&
-              !t.isAdjustedToUTC
-          case _ => false
-        })
-      case _ => false
-    }
-  }
-
-  /** Typed ordering of two footer stat values — Spark's own min/max
-    * order: numeric order for integrals/micros, UNSIGNED byte order for
-    * strings (UTF8String comparison = parquet binary order; Java String
-    * order would disagree on supplementary characters). */
-  private def footerCmp(dt: DataType, a: AnyRef, b: AnyRef): Int = dt match {
-    case _: StringType =>
-      val x = a.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
-      val y = b.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
-      var i = 0
-      while (i < x.length && i < y.length) {
-        val d = (x(i) & 0xff) - (y(i) & 0xff)
-        if (d != 0) return d
-        i += 1
-      }
-      x.length - y.length
-    case _: LongType | _: TimestampType | _: TimestampNTZType =>
-      java.lang.Long.compare(a.asInstanceOf[java.lang.Long].longValue,
-        b.asInstanceOf[java.lang.Long].longValue)
-    // NaN/±0.0 boundaries are rejected by footerValueOk BEFORE any
-    // comparison, so primitive compare here is the unambiguous IEEE
-    // order on every value that reaches it
-    case _: FloatType =>
-      java.lang.Float.compare(a.asInstanceOf[java.lang.Float].floatValue,
-        b.asInstanceOf[java.lang.Float].floatValue)
-    case _: DoubleType =>
-      java.lang.Double.compare(a.asInstanceOf[java.lang.Double].doubleValue,
-        b.asInstanceOf[java.lang.Double].doubleValue)
-    case d: DecimalType =>
-      footerDecimal(d, a).compareTo(footerDecimal(d, b))
-    case _ =>
-      Integer.compare(a.asInstanceOf[java.lang.Integer].intValue,
-        b.asInstanceOf[java.lang.Integer].intValue)
-  }
-
-  /** Exact decimal from a footer stat value: the unscaled integer at
-    * the column's declared scale (INT32/INT64 carriers) or the
-    * big-endian two's-complement bytes (FIXED/BINARY carriers). */
-  private def footerDecimal(dt: DecimalType, v: AnyRef): java.math.BigDecimal =
-    v match {
-      case i: java.lang.Integer =>
-        java.math.BigDecimal.valueOf(i.longValue, dt.scale)
-      case l: java.lang.Long =>
-        java.math.BigDecimal.valueOf(l.longValue, dt.scale)
-      case b: org.apache.parquet.io.api.Binary =>
-        new java.math.BigDecimal(new java.math.BigInteger(b.getBytes), dt.scale)
-      case other => throw new IllegalStateException(
-        s"unexpected decimal stat carrier ${other.getClass}")
-    }
-
-  /** Rendering-parity guard: values whose string rendering below could
-    * diverge from statAgg's refuse the footer path —
-    *  - ISO dates / NTZ timestamps outside year 1..9999 (LocalDate/
-    *    LocalDateTime.toString and Spark's year-of-era formatter
-    *    disagree there);
-    *  - float/double NaN (parquet stats semantics for NaN are writer-
-    *    dependent and Spark's aggregate treats NaN as greatest — the
-    *    two paths can legitimately disagree) and ±0.0 (the zero's SIGN
-    *    is invisible to every comparison both paths use, so which
-    *    rendering — "0.0" vs "-0.0" — each picks is encounter-order
-    *    dependent). Conservative: the whole batch falls back to the
-    *    one-scan stats job, pruning strength unchanged. */
-  private def footerValueOk(dt: DataType, v: AnyRef): Boolean = dt match {
-    case _: DateType =>
-      val d = v.asInstanceOf[java.lang.Integer].longValue
-      d >= -719162L && d <= 2932896L // 0001-01-01 .. 9999-12-31
-    case _: TimestampNTZType =>
-      val us = v.asInstanceOf[java.lang.Long].longValue
-      us >= -62135596800000000L && us <= 253402300799999999L // year 1..9999
-    case _: FloatType =>
-      val f = v.asInstanceOf[java.lang.Float].floatValue
-      !java.lang.Float.isNaN(f) && f != 0.0f
-    case _: DoubleType =>
-      val d = v.asInstanceOf[java.lang.Double].doubleValue
-      !java.lang.Double.isNaN(d) && d != 0.0d
-    case _ => true
-  }
-
-  private def renderFooterStat(dt: DataType, v: AnyRef): String = dt match {
-    case _: StringType => new String(
-      v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes,
-      StandardCharsets.UTF_8)
-    case _: DateType => java.time.LocalDate
-      .ofEpochDay(v.asInstanceOf[java.lang.Integer].longValue).toString
-    case d: DecimalType =>
-      // same (unscaled, scale) pair Spark's Decimal carries → same
-      // java.math.BigDecimal.toString rendering as cast(dec as string)
-      footerDecimal(d, v).toString
-    case _: TimestampNTZType =>
-      renderNtzMicros(v.asInstanceOf[java.lang.Long].longValue)
-    case _ => v.toString // Integer / Long / Float / Double
-  }
-
-  /** The exact string Spark's cast(ntz as string) produces for an
-    * epoch-micros value inside year 1..9999: zero-padded ISO date-time,
-    * fraction omitted when zero and trailing-zero-trimmed otherwise
-    * (parity pinned in FooterStatsSpec). */
-  private def renderNtzMicros(us: Long): String = {
-    val sec = Math.floorDiv(us, 1000000L)
-    val micro = Math.floorMod(us, 1000000L).toInt
-    val ldt = java.time.LocalDateTime.ofEpochSecond(
-      sec, micro * 1000, java.time.ZoneOffset.UTC)
-    val base = f"${ldt.getYear}%04d-${ldt.getMonthValue}%02d-" +
-      f"${ldt.getDayOfMonth}%02d ${ldt.getHour}%02d:" +
-      f"${ldt.getMinute}%02d:${ldt.getSecond}%02d"
-    if (micro == 0) base
-    else base + "." + f"$micro%06d".reverse.dropWhile(_ == '0').reverse
-  }
-
-  /** One footer open per just-written file: exact record count plus —
-    * when every wanted column's statistics are present and typed as
-    * expected — the per-file [min,max] rendered exactly as [[statAgg]]
-    * would render them. Second component None = this footer is unusable
-    * and the caller must fall back to the one-scan stats job for the
-    * whole batch. ALL-NULL columns are OMITTED from the map, matching
-    * the scan path's semantics (no stats → never pruned); row-group
-    * stats dropped by the writer (e.g. oversized binary mins) read as
-    * "missing but not all-null" and refuse the fast path rather than
-    * weaken pruning. `want`: (logical name, physical name, type). */
-  private[io] def footerMeta(dir: String, rel: String,
-      want: Seq[(String, String, DataType)], conf: Configuration)
-      : (Option[Long], Option[Map[String, (String, String)]]) =
-    try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(Paths.get(dir, rel).toString), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val rows = Some(r.getRecordCount.toLong)
-        val blocks = r.getFooter.getBlocks.asScala.toSeq
-        var usable = true
-        val stats = want.flatMap { case (logical, phys, dt) =>
-          if (!usable) None
-          else {
-            var loV: AnyRef = null
-            var hiV: AnyRef = null
-            blocks.foreach { b =>
-              if (usable) b.getColumns.asScala.find { c =>
-                val p = c.getPath.toArray; p.length == 1 && p(0) == phys
-              } match {
-                case Some(c) =>
-                  val st = c.getStatistics
-                  if (st == null || st.isEmpty ||
-                      !footerTypeMatches(dt, c.getPrimitiveType))
-                    usable = false
-                  else if (!st.hasNonNullValue) {
-                    if (!(st.isNumNullsSet && st.getNumNulls == b.getRowCount))
-                      usable = false
-                  } else {
-                    val mn = st.genericGetMin.asInstanceOf[AnyRef]
-                    val mx = st.genericGetMax.asInstanceOf[AnyRef]
-                    if (!footerValueOk(dt, mn) || !footerValueOk(dt, mx))
-                      usable = false
-                    else if (loV == null) { loV = mn; hiV = mx }
-                    else {
-                      if (footerCmp(dt, mn, loV) < 0) loV = mn
-                      if (footerCmp(dt, mx, hiV) > 0) hiV = mx
-                    }
-                  }
-                case None => usable = false
-              }
-            }
-            if (!usable || loV == null) None
-            else Some(logical ->
-              (renderFooterStat(dt, loV), renderFooterStat(dt, hiV)))
-          }
-        }.toMap
-        (rows, if (usable) Some(stats) else None)
-      } finally r.close()
-    } catch { case scala.util.control.NonFatal(_) => (None, None) }
-
+  /** Write `df` as a fresh immutable file batch through the one
+    * [[BatchWriter]]; returns one [[FileEntry]] per parquet file
+    * produced, with its row count, the per-file min/max of `statsCols`
+    * (the metadata that makes narrow-key MERGE discovery skip
+    * non-overlapping files instead of scanning every live file) and the
+    * bloom bits of the table's bloom columns — all computed in the write
+    * tasks, so no batch is read back. */
   private def writeBatch(df: DataFrame, dir: String,
                          numFiles: Option[Int] = None,
                          statsCols: Seq[String] = Nil,
@@ -1650,65 +1387,32 @@ object SnapshotTable {
       if (colmap.isEmpty) shaped
       else shaped.select(shaped.columns.toSeq.map(c =>
         col(c).as(colmap.getOrElse(c, c))): _*)
-    // data files store timestamps as INT64 TIMESTAMP(MICROS), not
-    // Spark's legacy INT96 default (r14, guide §6): 8 bytes/value
-    // instead of 12, the parquet-standard annotation, WORKING row-group
-    // statistics (INT96 writes none — no parquet-level ts pruning and
-    // no footer-stats fast path), identical values on read (Spark
-    // timestamps are micros-precision either way)
-    val sess = df.sparkSession
-    val tsTypeKey = "spark.sql.parquet.outputTimestampType"
-    val prevTsType = sess.conf.get(tsTypeKey)
-    sess.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
-    try physDf.write.parquet(out.toString)
-    finally sess.conf.set(tsTypeKey, prevTsType)
-    // re-reads of the batch take the schema it was written with (as
-    // readEntries does): no footer read, no schema-inference job
-    val writtenSchema =
-      CharVarcharUtils.replaceCharVarcharWithStringInSchema(physDf.schema)
-    // one Hadoop configuration per batch, the session's (as the scan's
-    // file index takes it), for the footer reads below
-    val hadoopConf = GraftSqlShims.newHadoopConf(sess)
     // CHECK-constraint enforcement: this is the ONE data-file funnel
     // every batch write path shares (append, INSERT, COPY, CoW
     // rewrites, MoR image batches), so the declared predicate holds
-    // for every committed data file by construction. Validated on the
-    // JUST-WRITTEN batch — one cheap scan of the new files, never the
-    // input plan twice — with SQL NULL semantics (an unknown predicate
-    // passes); columns an evolving batch lacks null-fill first, like
-    // the read path. A violation deletes the rejected batch and aborts
+    // for every committed data file by construction. The write tasks
+    // evaluate it on every row they write, with SQL NULL semantics (an
+    // unknown predicate passes), over the rows a read of this batch will
+    // see: logical names, and columns an evolving batch lacks filled
+    // with their declared default (read-time EXISTS fill), else NULL. A
+    // violation aborts the write job (the batch directory goes with it)
     // before anything is committed. (Streaming epoch writes go through
     // their own executor-side writer and are NOT checked — declare
     // constraints on batch-maintained tables.)
-    latestManifest.flatMap(_.header.get("check"))
-      .map(FileEntry.dec).foreach { pred =>
-      // the CHECK predicate speaks logical names — project the re-read
-      // batch (physical names) back through the mapping first
-      val batchRaw = sess.read.schema(writtenSchema).parquet(out.toString)
-      val batchDf =
-        if (colmap.isEmpty) batchRaw
-        else {
-          val inv = colmap.map(_.swap)
-          batchRaw.select(batchRaw.columns.toSeq.map(c =>
-            col(c).as(inv.getOrElse(c, c))): _*)
+    val check = latestManifest.flatMap(_.header.get("check"))
+      .map(FileEntry.dec).map { pred =>
+        val schemaCols =
+          latestManifest.flatMap(_.schema).map(_.fields.toSeq).getOrElse(Nil)
+        val inv = colmap.map(_.swap)
+        pred -> { (rows: DataFrame) =>
+          val logical =
+            if (colmap.isEmpty) rows
+            else rows.select(rows.columns.toSeq.map(c =>
+              col(c).as(inv.getOrElse(c, c))): _*)
+          schemaCols.filterNot(f => logical.columns.contains(f.name))
+            .foldLeft(logical)((d, f) => d.withColumn(f.name, defaultFill(f)))
         }
-      val schemaCols =
-        latestManifest.flatMap(_.schema).map(_.fields.toSeq).getOrElse(Nil)
-      val padded = schemaCols
-        .filterNot(f => batchDf.columns.contains(f.name))
-        .foldLeft(batchDf)((d, f) =>
-          // what a read of this batch will see for the missing column:
-          // its declared default (read-time EXISTS fill), else NULL
-          d.withColumn(f.name, defaultFill(f)))
-      val viol = padded
-        .filter(!coalesce(expr(pred).cast("boolean"), lit(true)))
-        .limit(1).collect()
-      if (viol.nonEmpty) {
-        listDir(out).foreach(Files.delete); Files.delete(out)
-        throw new IllegalArgumentException(
-          s"CHECK constraint violated: ($pred); example row: ${viol.head}")
       }
-    }
     val partIdx = "^part-(\\d+)-.*".r
     def bucketOf(name: String): Option[Int] = bucketSpec.flatMap(_ =>
       name match {
@@ -1716,131 +1420,38 @@ object SnapshotTable {
         case _ => throw new IllegalStateException(
           s"bucketed write produced unparseable file name $name")
       })
-    val rel = listDir(out)
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-      .map(n => s"$batch/$n").sorted
-    // exact per-file ROW COUNTS come free from the parquet footers the
-    // write just produced — O(#batch files) tiny driver reads, feeding
-    // DESCRIBE DETAIL and the V2 scan's CBO statistics (numRows)
-    def footerRows(rel: String): Option[Long] =
-      try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(Paths.get(dir, rel).toString),
-          hadoopConf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try Some(r.getRecordCount) finally r.close()
-      } catch { case _: Exception => None }
-    def entryOf(p: String, stats: Map[String, (String, String)]): FileEntry =
-      FileEntry(p, stats,
-        bucket = bucketOf(p.substring(p.lastIndexOf('/') + 1)),
-        rows = footerRows(p))
+    def phys(c: String) = colmap.getOrElse(c, c)
     val presentStats = statsCols.filter(df.schema.fieldNames.contains)
     val bloomHere = latestManifest.map(_.bloomCols).getOrElse(Nil)
       .filter(c => df.schema.fieldNames.contains(c) &&
         bloomSupports(df.schema(c).dataType))
     val bloomBits = latestManifest.map(_.bloomBits)
       .getOrElse(DEFAULT_BLOOM_BITS)
-    // per-file cluster min/max AND bloom blobs in ONE scan of the
-    // just-written batch (never the input plan): stats render via
-    // statAgg (epoch-micros for timestamps), blooms collect the k
-    // seeded bit positions (bounded sets, <= bloombits ints each).
-    // The re-read batch carries PHYSICAL names; stats record under
-    // the LOGICAL key (re-keyed by RENAME, which rewrites entries),
-    // bloom blobs under the PHYSICAL key in a per-batch SIDECAR file
-    // (`<batch>/_blooms`, referenced by `bloomref=`) — physical names
-    // never change, so a rename costs no sidecar rewrite, and the
-    // manifest itself stays O(bytes per file) however many bloom
-    // columns are declared (the r11-verdict sidecar evolution).
-    def scanStats(): Seq[FileEntry] = {
-      val statAggs = presentStats.flatMap(c => Seq(
-        statAgg(colmap.getOrElse(c, c), df.schema(c).dataType,
-          isMin = true).as(s"lo_$c"),
-        statAgg(colmap.getOrElse(c, c), df.schema(c).dataType,
-          isMin = false).as(s"hi_$c")))
-      val bloomAggs = bloomHere.flatMap { c =>
-        bloomPosExprs(col(colmap.getOrElse(c, c)), bloomBits)
-          .zipWithIndex.map { case (e, i) =>
-            collect_set(e).as(s"bl_${c}_$i") }
+    val written = BatchWriter.write(physDf, out.toString,
+      FileFacts(df.sparkSession, physDf.schema, presentStats.map(phys),
+        bloomHere.map(phys), bloomBits, check))
+    // stats record under the LOGICAL key (re-keyed by RENAME, which
+    // rewrites entries), bloom blobs under the PHYSICAL key in a
+    // per-batch SIDECAR file (`<batch>/_blooms`, referenced by
+    // `bloomref=`) — physical names never change, so a rename costs no
+    // sidecar rewrite, and the manifest itself stays O(bytes per file)
+    // however many bloom columns are declared. The sidecar is written
+    // BEFORE the manifest references it (same durability order as the
+    // data files); a file without rows has no blobs (never pruned).
+    val bloomRef =
+      if (bloomHere.isEmpty) None
+      else {
+        val lines = written.filter(_.rows > 0).map(w =>
+          w.name + "\t" + w.blooms.toSeq.sortBy(_._1).map { case (c, bits) =>
+            s"${FileEntry.enc(c)}:${bloomEncode(bits)}" }.mkString(";"))
+        val refRel = s"$batch/_blooms"
+        Files.write(Paths.get(dir, refRel),
+          lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+        Some(refRel)
       }
-      val aggs = statAggs ++ bloomAggs
-      val bloomBase = 1 + statAggs.size
-      val byFile = sess.read.schema(writtenSchema).parquet(out.toString)
-        .groupBy(input_file_name().as("_f"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect() // O(#batch files × bloombits) driver metadata
-        .map { r =>
-          val stats = presentStats.zipWithIndex.flatMap { case (c, i) =>
-            val lo = r.getString(1 + 2 * i); val hi = r.getString(2 + 2 * i)
-            // all-null key column in a file → no stats → never pruned
-            if (lo == null || hi == null) None else Some(c -> (lo, hi))
-          }.toMap
-          val blooms = bloomHere.zipWithIndex.map { case (c, ci) =>
-            val bits = new java.util.BitSet(bloomBits)
-            (0 until BLOOM_SEEDS.size).foreach { i =>
-              r.getSeq[Int](bloomBase + ci * BLOOM_SEEDS.size + i)
-                .foreach(bits.set)
-            }
-            colmap.getOrElse(c, c) -> bloomEncode(bits)
-          }.toMap
-          (r.getString(0), stats, blooms)
-        }
-      val bloomRef =
-        if (bloomHere.isEmpty) None
-        else {
-          // one sidecar per batch: `<file>\t<physCol>:<b64>[;…]` lines,
-          // written BEFORE the manifest references it (same durability
-          // order as the data files themselves)
-          val lines = rel.flatMap { p =>
-            val name = p.substring(p.lastIndexOf('/') + 1)
-            byFile.collectFirst { case (uri, _, bl) if uri.endsWith(p) =>
-              name + "\t" + bl.toSeq.sortBy(_._1).map { case (c, b64) =>
-                s"${FileEntry.enc(c)}:$b64" }.mkString(";")
-            }
-          }
-          val refRel = s"$batch/_blooms"
-          Files.write(Paths.get(dir, refRel),
-            lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-          Some(refRel)
-        }
-      rel.map { p =>
-        byFile.collectFirst {
-          case (uri, st, _) if uri.endsWith(p) =>
-            entryOf(p, st).copy(bloomRef = bloomRef)
-        }.getOrElse(entryOf(p, Map.empty))
-      }
-    }
-    if (presentStats.isEmpty && bloomHere.isEmpty)
-      rel.map(entryOf(_, Map.empty))
-    else if (bloomHere.isEmpty &&
-        presentStats.forall(c => footerStatSafe(df.schema(c).dataType))) {
-      // FOOTER-STATS fast path (r14, guide §1.2/§6): the parquet footers
-      // the write just produced ALREADY hold exact per-file min/max for
-      // the cluster columns — reading them is O(#batch files) tiny
-      // driver reads, where the scan job below is a SECOND full pass
-      // over every written byte (2× write amplification on every
-      // clustered create/append/merge/delete/update/compact — the
-      // Iceberg approach, public knowledge, original implementation).
-      // Engaged only for types whose footer rendering is PROVABLY
-      // identical to statAgg's (integral toString, string identity =
-      // UTF8 byte-order min/max exactly like Spark's min/max, date ISO,
-      // timestamp epoch-micros); any type/annotation mismatch, missing
-      // stat, or multi-rowgroup irregularity falls back to the one-scan
-      // job for the WHOLE batch, so recorded stats and pruning strength
-      // never silently degrade.
-      val want = presentStats.map(c =>
-        (c, colmap.getOrElse(c, c), df.schema(c).dataType))
-      val metas = rel.map(p => p -> footerMeta(dir, p, want, hadoopConf))
-      if (metas.forall(_._2._2.isDefined))
-        metas.map { case (p, (rows, stats)) =>
-          FileEntry(p, stats.get,
-            bucket = bucketOf(p.substring(p.lastIndexOf('/') + 1)),
-            rows = rows)
-        }
-      // at least one footer was unusable: one-scan fallback
-      else scanStats()
-    }
-    else scanStats()
+    written.map(w => FileEntry(s"$batch/${w.name}",
+      presentStats.flatMap(c => w.stats.get(phys(c)).map(c -> _)).toMap,
+      bucket = bucketOf(w.name), rows = Some(w.rows), bloomRef = bloomRef))
   }
 
   /** Shape one write batch under the table's clustering law: on a
@@ -2107,10 +1718,7 @@ object SnapshotTable {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], out)
     }
-    // the manifest names the files: the scan's index stats them on the
-    // driver instead of listing (no "Listing leaf files" job)
-    val index = new ManifestFileIndex(spark, dir, m.version,
-      entries.map(f => Paths.get(dir, f.path).toString))
+    val index = manifestIndex(spark, dir, m, entries)
     // COLUMN MAPPING, read side: files store PHYSICAL names — read with
     // the physically-renamed schema, then project back to logical names
     // (identity for never-renamed tables). The projection runs AFTER
@@ -2166,6 +1774,71 @@ object SnapshotTable {
     if (tagged)
       applied.select(logicalCols ++ Seq(col(srcFile), col(srcPos)): _*)
     else applied.select(logicalCols: _*)
+  }
+
+  /** The scan index over `entries` of manifest `m`: the manifest names
+    * the files, so the index stats them on the driver instead of
+    * listing (no "Listing leaf files" job), and it carries their stats
+    * under PHYSICAL names, so a pushed-down filter on a stats column
+    * skips files ([[ManifestFileIndex]]). Legacy (pre-micros) timestamp
+    * stats never prune, as in [[pruneWhere]]. */
+  private def manifestIndex(spark: SparkSession, dir: String, m: Manifest,
+                            entries: Seq[FileEntry]): ManifestFileIndex = {
+    val prunable = prunableStats(m)
+    def phys(c: String) = m.colmap.getOrElse(c, c)
+    new ManifestFileIndex(spark, dir, m.version,
+      entries.map(f => Paths.get(dir, f.path).toString),
+      entries.map(e => prunable.flatMap(f =>
+        e.stats.get(f.name).map(phys(f.name) -> _)).toMap),
+      prunable.map(f => phys(f.name) -> f.dataType).toMap)
+  }
+
+  /** The schema fields whose manifest stats may prune: the stats
+    * columns, less timestamps whose stats predate the micros-v2 marker
+    * (`statsfmt`) — session-local renderings that would compare wrongly,
+    * so every file stays a candidate until a compact() rewrites them. */
+  private def prunableStats(m: Manifest): Seq[StructField] =
+    m.schema.toSeq.flatMap(_.fields).filter(f =>
+      m.statsCols.contains(f.name) &&
+        !(f.dataType.isInstanceOf[TimestampType] && !m.tsStatsAreMicros))
+
+  /** The entries of `m` that may hold a row matching the SQL
+    * `predicate`, by the scan index's stats test over its conjuncts —
+    * bounded BEFORE a row-level DML builds its discovery read, so that
+    * read, and the deletion-vector anti-join inside it, cover only the
+    * candidate files. */
+  private def predicateCandidates(spark: SparkSession, m: Manifest,
+                                  predicate: String): Seq[FileEntry] = {
+    val prunable = prunableStats(m)
+    if (prunable.isEmpty) m.files
+    else {
+      import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+      import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+      val rel = LocalRelation(org.apache.spark.sql.catalyst.types.DataTypeUtils
+        .toAttributes(m.schema.get))
+      val cond = PlanBridge.ofRows(spark, rel).filter(predicate)
+        .queryExecution.analyzed match {
+          // constants folded as the optimizer would (casts of literals);
+          // one that fails to evaluate stays, to fail where it always did
+          case Filter(c, _) => c.transformUp {
+            case e: Expression if e.foldable && !e.isInstanceOf[Literal] =>
+              scala.util.Try(Literal.create(e.eval(), e.dataType)).getOrElse(e)
+          }
+          case _ => Literal.TrueLiteral
+        }
+      val mayHold = ManifestFileIndex.statsTest(Seq(cond),
+        prunable.map(f => f.name -> f.dataType).toMap)
+      m.files.filter(f => mayHold(f.stats))
+    }
+  }
+
+  /** The index of version `v`'s live files — the catalog scan's. */
+  private[io] def manifestIndex(spark: SparkSession, dir: String,
+                                v: Int): ManifestFileIndex = {
+    require(Files.exists(manifestPath(dir, v)),
+      s"version $v at $dir does not exist (vacuumed?)")
+    val m = readManifest(dir, v)
+    manifestIndex(spark, dir, m, m.files)
   }
 
   /** `name`, or `name` with leading underscores added, so that it is
@@ -2226,39 +1899,20 @@ object SnapshotTable {
                      hi: String): Seq[String] =
     readCandidates(dir, Map(keyCol -> (lo, hi)), None)
 
+  /** The files of `m` whose stats overlap every bound (a closed
+    * [lo, hi] per column, rendered like the stats); a bound on a column
+    * that cannot prune ([[prunableStats]]), or a file without stats for
+    * it (all-null in that file), keeps the file. */
   private def pruneWhere(m: Manifest,
-                         bounds: Map[String, (String, String)]): Seq[FileEntry] =
-    if (m.schema.isEmpty) m.files
-    else {
-      val statBounds = bounds.filter { case (c, _) => m.statsCols.contains(c) }
-      if (statBounds.isEmpty) m.files
-      else {
-        // resolve the schema JSON and per-column types ONCE — this loop
-        // is the pure-driver-metadata path, O(#files × #bounds) at
-        // 100 TB, and must not re-scan a wide schema per file
-        val schema = m.schema.get
-        val dts: Map[String, DataType] = statBounds.keys.map { c =>
-          c -> schema.fields.find(_.name == c).map(_.dataType)
-            .getOrElse(StringType)
-        }.toMap
-        m.files.filter { f =>
-          statBounds.forall { case (c, (lo, hi)) =>
-            f.stats.get(c) match {
-              // legacy guard (statsfmt): timestamp stats written before
-              // the micros-v2 marker are session-local renderings —
-              // comparing them numerically is wrong and falling into the
-              // parse-failure path is silent; detect the format
-              // explicitly and keep every file a candidate until a
-              // compact() rewrites the stats
-              case Some(_) if dts(c).isInstanceOf[TimestampType] &&
-                !m.tsStatsAreMicros => true
-              case Some((fLo, fHi)) => rangesOverlap(dts(c), fLo, fHi, lo, hi)
-              case None => true // no stats (all-null col in file) → cannot prune
-            }
-          }
-        }
-      }
-    }
+                         bounds: Map[String, (String, String)]): Seq[FileEntry] = {
+    val dts = prunableStats(m).map(f => f.name -> f.dataType).toMap
+    val statBounds = bounds.filter { case (c, _) => dts.contains(c) }
+    if (statBounds.isEmpty) m.files
+    else m.files.filter(f => statBounds.forall { case (c, (lo, hi)) =>
+      f.stats.get(c).forall { case (fLo, fHi) =>
+        rangesOverlap(dts(c), fLo, fHi, lo, hi) }
+    })
+  }
 
   /** STATS-PRUNED snapshot read (data skipping — the read-side payoff
     * of clustering): only files whose recorded stats overlap EVERY
@@ -2323,10 +1977,6 @@ object SnapshotTable {
                 versionAsOf: Option[Int] = None): DataFrame =
     readWhere(spark, dir, Map(keyCol -> (lo, hi)), versionAsOf)
 
-  /** The file subset a `keyCol IN values` point read must open:
-    * min/max stats first (cluster columns), then the per-file BLOOM
-    * blobs (declared `bloomcols` — the non-cluster path). Shared by
-    * [[readWhereIn]]; conservative-correct throughout. */
   /** The files a `keyCol IN values` read would open (stats + bloom
     * pruning) — public so specs, keys and operators can assert/observe
     * the skip, the point-lookup twin of [[readCandidates]]. */
@@ -2625,30 +2275,45 @@ object SnapshotTable {
     false // unreachable
   }
 
-  /** TYPED overlap test between two [min,max] ranges rendered as
-    * strings: numerics AND TimestampType compare numerically
+  /** The typed order key of one stat rendering — the ONE comparison
+    * every pruning tier uses (entries, `.ckindex` segment boxes, the
+    * scan's file index). Numerics AND TimestampType compare numerically
     * (timestamps render as epoch-micros — a session-local-time string
     * inverts order across a DST fall-back and differs between writer
-    * and reader timezones), DateType/TimestampNTZType compare lexically
-    * (their ISO renderings are zero-padded and timezone-free, hence
-    * monotonic), strings compare lexically. An unparseable numeric —
-    * "NaN"/"Infinity" stats from a float column — must never PRUNE:
-    * fall back to candidate (conservative-correct), not an exception
-    * that bricks every pruned operation on the table. Unknown types
-    * never prune. */
-  private def rangesOverlap(dt: DataType, fLo: String, fHi: String,
-                            uLo: String, uHi: String): Boolean = dt match {
+    * and reader timezones). Strings, DateType and TimestampNTZType
+    * compare as UTF-8 bytes: that is the order of Spark's min/max, which
+    * rendered the stats (Java `String` order is UTF-16 and disagrees on
+    * supplementary characters), and the ISO date/NTZ renderings are
+    * zero-padded ASCII, hence monotonic. null = resists comparison: an
+    * unparseable numeric ("NaN"/"Infinity" stats from a float column)
+    * or an unknown type — never prunes, never throws. */
+  private[io] def statKey(dt: DataType, s: String): AnyRef = dt match {
     case _: ByteType | _: ShortType | _: IntegerType | _: LongType |
          _: FloatType | _: DoubleType | _: DecimalType | _: TimestampType =>
-      try {
-        val (a, b) = (BigDecimal(fLo), BigDecimal(fHi))
-        val (c, d) = (BigDecimal(uLo), BigDecimal(uHi))
-        !(b < c || d < a)
-      } catch { case _: NumberFormatException => true }
+      try BigDecimal(s) catch { case _: NumberFormatException => null }
     case _: StringType | _: DateType | _: TimestampNTZType =>
-      !(fHi < uLo || uHi < fLo)
-    case _ => true
+      org.apache.spark.unsafe.types.UTF8String.fromString(s)
+    case _ => null
   }
+
+  /** Order of two [[statKey]]s of one type; None when either resists. */
+  private[io] def statCompare(a: AnyRef, b: AnyRef): Option[Int] = (a, b) match {
+    case (x: BigDecimal, y: BigDecimal) => Some(x.compare(y))
+    case (x: org.apache.spark.unsafe.types.UTF8String,
+          y: org.apache.spark.unsafe.types.UTF8String) => Some(x.compareTo(y))
+    case _ => None
+  }
+
+  /** TYPED overlap test between two [min,max] ranges rendered as
+    * strings, in [[statKey]] order; any side that resists comparison
+    * keeps the file a candidate (conservative-correct). */
+  private def rangesOverlap(dt: DataType, fLo: String, fHi: String,
+                            uLo: String, uHi: String): Boolean =
+    Seq(fLo, fHi, uLo, uHi).map(statKey(dt, _)) match {
+      case Seq(a, b, c, d) if !Seq(a, b, c, d).contains(null) =>
+        !(statCompare(b, c).exists(_ < 0) || statCompare(d, a).exists(_ < 0))
+      case _ => true
+    }
 
   /** Render one side of a column's [min,max] stat as the string the
     * manifest stores and [[rangesOverlap]] compares: epoch-micros for
@@ -2657,7 +2322,7 @@ object SnapshotTable {
     * merge-discovery time (updates' bounding box) and — via the micros
     * convention on bounds — at read time, so all three speak one
     * format. */
-  private def statAgg(c: String, dt: DataType, isMin: Boolean):
+  private[io] def statAgg(c: String, dt: DataType, isMin: Boolean):
       org.apache.spark.sql.Column = {
     val agg = if (isMin) min(col(c)) else max(col(c))
     dt match {
@@ -2681,41 +2346,30 @@ object SnapshotTable {
     val statCols = hm.statsCols.filter(keyCols.contains)
     if (statCols.isEmpty || hm.schema.isEmpty)
       readManifest(dir, base).paths // unprunable: the full list IS the answer
-    else {
-      // one tiny agg computes the updates' bounding box in the SAME
-      // rendering writeBatch used (see pruneCandidates); the two-tier
-      // path then resolves candidates without the full file list
-      val aggs = statCols.flatMap(c => Seq(
-        statAgg(c, updates.schema(c).dataType, isMin = true).as(s"lo_$c"),
-        statAgg(c, updates.schema(c).dataType, isMin = false).as(s"hi_$c")))
-      val r = updates.agg(aggs.head, aggs.tail: _*).head()
-      val bounds = statCols.zipWithIndex.flatMap { case (c, i) =>
-        val lo = r.getString(2 * i); val hi = r.getString(2 * i + 1)
-        if (lo == null || hi == null) None else Some(c -> Seq((lo, hi)))
-      }.toMap
-      boundedCandidates(dir, base, bounds)._2.map(_.path)
-    }
+    else // the two-tier path resolves candidates without the full list
+      boundedCandidates(dir, base, updateBox(updates, statCols)
+        .map { case (c, r) => c -> Seq(r) })._2.map(_.path)
   }
 
   private def pruneCandidates(m: Manifest, updates: DataFrame,
                               keyCols: Seq[String]): Seq[FileEntry] = {
     val statCols = m.statsCols.filter(keyCols.contains)
     if (statCols.isEmpty || m.schema.isEmpty) m.files
-    else {
-      // one tiny agg computes the updates' bounding box in the SAME
-      // rendering writeBatch used; the shared pruneWhere then applies
-      // the one set of conservative overlap rules (all-null box side →
-      // no bound → cannot prune)
-      val aggs = statCols.flatMap(c => Seq(
-        statAgg(c, updates.schema(c).dataType, isMin = true).as(s"lo_$c"),
-        statAgg(c, updates.schema(c).dataType, isMin = false).as(s"hi_$c")))
-      val r = updates.agg(aggs.head, aggs.tail: _*).head()
-      val bounds = statCols.zipWithIndex.flatMap { case (c, i) =>
-        val lo = r.getString(2 * i); val hi = r.getString(2 * i + 1)
-        if (lo == null || hi == null) None else Some(c -> (lo, hi))
-      }.toMap
-      pruneWhere(m, bounds)
-    }
+    else pruneWhere(m, updateBox(updates, statCols))
+  }
+
+  /** The updates' bounding box over `statCols`, from one tiny agg in
+    * the SAME rendering the write path records; a column null in every
+    * update row gives no bound (cannot prune). */
+  private def updateBox(updates: DataFrame,
+                        statCols: Seq[String]): Map[String, (String, String)] = {
+    val aggs = statCols.flatMap(c => Seq(
+      statAgg(c, updates.schema(c).dataType, isMin = true),
+      statAgg(c, updates.schema(c).dataType, isMin = false)))
+    val r = updates.agg(aggs.head, aggs.tail: _*).head()
+    statCols.zipWithIndex.flatMap { case (c, i) =>
+      Option(r.getString(2 * i)).zip(Option(r.getString(2 * i + 1))).map(c -> _)
+    }.toMap
   }
 
   /** MERGE (upsert by `keyCols`): file-granular copy-on-write.
@@ -2835,18 +2489,16 @@ object SnapshotTable {
         .map(_.toLong)
         .foldLeft(Seq.empty[(Long, Long)])(addToRanges))
 
-  /** DELETE retry/rebase wrapper shares [[merge]]'s discipline: the
-    * touched-file discovery re-executes per attempt. */
-
   /** DELETE rows matching `predicate`: copy-on-write on the files that
-    * contain at least one matching row. (Stats pruning does not apply —
-    * an arbitrary SQL predicate has no key range — but rewritten files
-    * keep recording cluster stats so later merges still skip.) */
+    * contain at least one matching row. Discovery reads only the files
+    * whose stats can match the predicate ([[predicateCandidates]]), and
+    * rewritten files keep recording cluster stats. */
   def delete(spark: SparkSession, dir: String, predicate: String,
              numFiles: Int = 4, fromVersion: Option[Int] = None,
              maxRetries: Int = 5): Int = commitWithRebase(
       dir, fromVersion, maxRetries) { (base, m) =>
-    val touchedRel = readEntries(spark, dir, m, m.files, tagged = true)
+    val touchedRel = readEntries(spark, dir, m,
+        predicateCandidates(spark, m, predicate), tagged = true)
       .filter(predicate)
       .select(col("_src_file")).distinct()
       .collect().map(_.getString(0)).toSet
@@ -2884,9 +2536,8 @@ object SnapshotTable {
       s"manifest at $dir records no schema"))
     sets.foreach { case (c, _) => require(schemaNow.fieldNames.contains(c),
       s"UPDATE of unknown column $c (have ${schemaNow.fieldNames.mkString(",")})") }
-    val touchedRel =
-      if (m.files.isEmpty) Set.empty[String]
-      else readEntries(spark, dir, m, m.files, tagged = true)
+    val touchedRel = readEntries(spark, dir, m,
+        predicateCandidates(spark, m, predicate), tagged = true)
         .filter(predicate)
         .select(col("_src_file")).distinct()
         .collect().map(_.getString(0)).toSet
@@ -3247,8 +2898,9 @@ object SnapshotTable {
     val allRows = oldRows.map(newRows.unionByName(_)).getOrElse(newRows)
     val batch = s"dv/${java.util.UUID.randomUUID().toString.take(8)}"
     // DVs are point-mutation-sized by contract: one file suffices and
-    // keeps the read-side broadcast build trivial
-    allRows.coalesce(1).write.parquet(Paths.get(dir, batch).toString)
+    // keeps the read-side broadcast build trivial; a one-partition
+    // shuffle, so the (pruned) discovery scan still runs in parallel
+    BatchWriter.write(allRows.repartition(1), Paths.get(dir, batch).toString)
     touched.map(_.copy(dv = Some(batch)))
   }
 
@@ -3286,7 +2938,8 @@ object SnapshotTable {
     m.schema.foreach(s => Seq("_src_file", "_src_pos").foreach(c =>
       require(!s.fieldNames.contains(c),
         s"table column `$c` collides with the row-identity namespace")))
-    val matches = readEntries(spark, dir, m, m.files, tagged = true)
+    val matches = readEntries(spark, dir, m,
+        predicateCandidates(spark, m, predicate), tagged = true)
       .filter(predicate)
       .select(col("_src_file").as("file"), col("_src_pos").as("pos"))
     val touchedRel = matches.select(col("file")).distinct()
@@ -3381,7 +3034,8 @@ object SnapshotTable {
         s"table column `$c` collides with the row-identity namespace"))
     if (m.files.isEmpty) base
     else {
-      val matches = readEntries(spark, dir, m, m.files, tagged = true)
+      val matches = readEntries(spark, dir, m,
+          predicateCandidates(spark, m, predicate), tagged = true)
         .filter(predicate)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -3505,10 +3159,10 @@ object SnapshotTable {
         // first, referenced only by the new manifest's header
         val batch = s"copy/${java.util.UUID.randomUUID().toString.take(8)}"
         import spark.implicits._
-        fresh.map(st => (st.getPath.toUri.toString, st.getLen,
-            st.getModificationTime))
-          .toDF("path", "size", "mtime")
-          .coalesce(1).write.parquet(Paths.get(dir, batch).toString)
+        BatchWriter.write(fresh.map(st => (st.getPath.toUri.toString,
+            st.getLen, st.getModificationTime))
+          .toDF("path", "size", "mtime").coalesce(1),
+          Paths.get(dir, batch).toString)
         val newLedger = (ledgerDirs :+ batch).mkString(",")
         val headers = m.carried.filterNot(_._1 == "copyledger") :+
           ("copyledger" -> newLedger)
@@ -3821,8 +3475,8 @@ object SnapshotTable {
     * production shallow clone's shared-object absolute references;
     * at 100 TB the point is identical: cloning a petabyte table is
     * O(#files) metadata, not a data copy. Fails if `destDir` already
-    * has commits. Per-file footer row counts and stats ride along in
-    * the copied entries. */
+    * has commits. Per-file row counts and stats ride along in the
+    * copied entries. */
   def shallowClone(spark: SparkSession, srcDir: String,
                    destDir: String): Int = {
     require(latestVersion(destDir) == 0,
@@ -4651,10 +4305,10 @@ object SnapshotTable {
   }
 
   /** EXACT row count of a snapshot — the sum of the manifest's
-    * per-file footer counts, when every entry carries one (tables
+    * per-file row counts, when every entry carries one (tables
     * written before the `rows=` tag existed have unknown entries) and
-    * no deletion vectors are live (a DV hides rows the footers still
-    * count). Pure driver metadata; None = unknown. */
+    * no deletion vectors are live (a DV hides rows the files still
+    * hold). Pure driver metadata; None = unknown. */
   def rowCountOf(dir: String,
                  versionAsOf: Option[Int] = None): Option[Long] = {
     val v = versionAsOf.getOrElse(latestVersion(dir))
@@ -4787,8 +4441,8 @@ object SnapshotTable {
         }
       val tmp = Paths.get(dir, "_cdc",
         s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-      mapped.withColumn("_commit_version", lit(v.toLong))
-        .write.parquet(tmp.toString)
+      BatchWriter.write(mapped.withColumn("_commit_version", lit(v.toLong)),
+        tmp.toString)
       try { Files.move(tmp, target); () }
       catch {
         case _: java.nio.file.FileAlreadyExistsException |

@@ -6,14 +6,14 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import pystreamsspark.{JobCount, SparkSpec}
 
-/** Laws of the r14 FOOTER-STATS fast path: a clustered write whose
-  * cluster columns are all footer-safe types reads its per-file
-  * [min,max] from the parquet footers the write just produced —
-  * removing the second full pass over every written byte — and the
-  * recorded stats are BIT-IDENTICAL to what the one-scan path records
-  * (so pruning behavior cannot change). The scan path still owns bloom
-  * batches, floating-point/decimal/NTZ cluster keys, and any footer
-  * whose types or statistics look unexpected. */
+/** Laws of the task-side file stats: a batch write computes each
+  * file's [min,max] renderings, row count and bloom bits inside the
+  * write tasks (`FileFacts`, with the aggregate expressions a scan
+  * evaluates), so the recorded stats are BIT-IDENTICAL to a scan of the
+  * same files — NaN and ±0.0 boundaries included — and no batch is read
+  * back: clean, NaN, ±0.0, bloom and CHECK batches cost the same jobs.
+  * (The suite's name and first test's name predate the task-side
+  * tracker: they once covered a parquet-footer fast path.) */
 class FooterStatsSpec extends SparkSpec {
 
   private def freshDir(): String =
@@ -49,8 +49,16 @@ class FooterStatsSpec extends SparkSpec {
         new java.math.BigDecimal(i).movePointLeft(2).add(
           new java.math.BigDecimal("0.01")),
         java.time.LocalDateTime.ofEpochSecond(
-          1700000000L + i, (i % 4) * 250000000, java.time.ZoneOffset.UTC))
-    }.toDF("k", "n", "s", "d", "ts", "z", "f", "dbl", "dec", "nt")
+          1700000000L + i, (i % 4) * 250000000, java.time.ZoneOffset.UTC),
+        // NaN, -0.0 and 0.0 in every file: the max is NaN, the min a
+        // zero of the sign the file's rows meet first
+        i % 7 match {
+          case 0 => Double.NaN
+          case 1 => -0.0d
+          case 2 => 0.0d
+          case r => i * r * 0.5d
+        })
+    }.toDF("k", "n", "s", "d", "ts", "z", "f", "dbl", "dec", "nt", "nan0")
       .withColumn("dec9", col("dec").cast("decimal(9,2)"))
       .withColumn("dec20", col("dec").cast("decimal(20,4)"))
       .drop("dec")
@@ -58,20 +66,28 @@ class FooterStatsSpec extends SparkSpec {
   }
 
   private val clusterCols =
-    Seq("k", "n", "s", "d", "ts", "z", "f", "dbl", "dec9", "dec20", "nt")
+    Seq("k", "n", "s", "d", "ts", "z", "f", "dbl", "dec9", "dec20", "nt", "nan0")
+
+  /** A table declared with the fixture's cluster columns plus a bloom
+    * column, so every batch records both. */
+  private def bloomTable(): String = {
+    val d = freshDir()
+    SnapshotTable.createEmpty(d, fixture().schema,
+      clusterCols = clusterCols, bloomCols = Seq("n"))
+    d
+  }
 
   test("footer path stats are bit-identical to a scan of the same " +
     "files (long/int/string/date/timestamp/float/double/decimal/ntz; " +
     "all-null column omitted)") {
-    val df = fixture()
-    val d1 = freshDir()
-    SnapshotTable.createClustered(spark, d1, df, clusterCols)
+    val d1 = bloomTable()
+    SnapshotTable.append(spark, d1, fixture(), numFiles = 0)
     val fast = statFields(d1)
     assert(fast.size === 8)
     // reference: re-aggregate the JUST-WRITTEN files with statAgg's
     // exact renderings (what the old scan path recorded) and compare
     // the serialized stat strings per file
-    val base = spark.read.parquet(s"$d1/data/*")
+    val base = spark.read.parquet(SnapshotTable.filePaths(d1): _*)
     def relOf(uri: String): String =
       uri.split("/").takeRight(3).mkString("/")
     val rows = base.groupBy(input_file_name().as("f"))
@@ -83,14 +99,15 @@ class FooterStatsSpec extends SparkSpec {
         min(col("f")).cast("string"), max(col("f")).cast("string"),
         min(col("k")).cast("string"), max(col("k")).cast("string"),
         min(col("n")).cast("string"), max(col("n")).cast("string"),
+        min(col("nan0")).cast("string"), max(col("nan0")).cast("string"),
         min(col("nt")).cast("string"), max(col("nt")).cast("string"),
         min(col("s")).cast("string"), max(col("s")).cast("string"),
         unix_micros(min(col("ts"))).cast("string"),
         unix_micros(max(col("ts"))).cast("string"),
         min(col("z")).cast("string"), max(col("z")).cast("string"))
       .collect()
-    val cols = Seq("d", "dbl", "dec20", "dec9", "f", "k", "n", "nt", "s",
-      "ts", "z")
+    val cols = Seq("d", "dbl", "dec20", "dec9", "f", "k", "n", "nan0", "nt",
+      "s", "ts", "z")
     val expected = rows.map { r =>
       val parts = cols.zipWithIndex.flatMap {
         case (c, i) =>
@@ -102,87 +119,76 @@ class FooterStatsSpec extends SparkSpec {
       relOf(r.getString(0)) -> parts.mkString(";")
     }.sortBy(_._1).map(_._2).toSeq
     assert(fast === expected,
-      s"footer stats diverge from a scan of the same files:\n${fast
+      s"task-side stats diverge from a scan of the same files:\n${fast
         .zip(expected).filter(p => p._1 != p._2).mkString("\n")}")
-    // every footer-safe column recorded; the all-null column omitted
+    // every column recorded; the all-null column omitted
     Seq("k=", "n=", "s=", "d=", "ts=", "f=", "dbl=", "dec9=", "dec20=",
-      "nt=").foreach(c =>
+      "nt=", "nan0=").foreach(c =>
       assert(fast.forall(_.contains(c)), s"missing stats for $c"))
     assert(fast.forall(!_.contains("z=")),
       "all-null column must have no stats (conservative, like the scan)")
+    // NaN is the greatest double in Spark's order; the signed-zero
+    // minimum is the scan's (checked above), whichever sign it has
+    assert(fast.forall(f => f.contains("nan0=-0.0,NaN") ||
+      f.contains("nan0=0.0,NaN")), fast.mkString("\n"))
+    // the bloom blobs equal the bit positions a scan of the files
+    // collects, file by file
+    val bits = 65536L
+    val positions = base.groupBy(input_file_name().as("f"))
+      .agg(collect_set(pmod(xxhash64(col("n")), lit(bits)).cast("int")),
+        collect_set(pmod(xxhash64(col("n"), lit(1)), lit(bits)).cast("int")),
+        collect_set(pmod(xxhash64(col("n"), lit(2)), lit(bits)).cast("int")))
+      .collect().map { r =>
+        val b = new java.util.BitSet(bits.toInt)
+        (1 to 3).foreach(i => r.getSeq[Int](i).foreach(b.set))
+        new java.io.File(new java.net.URI(r.getString(0)).getPath).getName ->
+          java.util.Base64.getEncoder.encodeToString(b.toByteArray)
+      }.toMap
+    val sidecars = SnapshotTable.filePaths(d1)
+      .map(f => Paths.get(f).getParent.resolve("_blooms")).distinct
+    val recorded = sidecars.flatMap(p => scala.jdk.CollectionConverters
+      .ListHasAsScala(Files.readAllLines(p, StandardCharsets.UTF_8)).asScala)
+      .map { l => val Array(f, blob) = l.split("\t", 2); f -> blob }.toMap
+    assert(recorded.size === 8 && recorded.keySet === positions.keySet)
+    recorded.foreach { case (f, blob) =>
+      assert(blob === s"n:${positions(f)}", s"bloom of $f differs") }
   }
 
-  test("footer path skips the stats re-scan job; pruning works from " +
-    "footer-derived stats") {
-    def countJobs(f: => Unit): Int = JobCount(spark)(f)
-    val d = freshDir()
-    val fastJobs = countJobs {
-      SnapshotTable.createClustered(spark, d, fixture(), clusterCols)
+  test("clean, NaN, ±0.0, bloom and CHECK batches run the same jobs; " +
+    "task-side stats prune") {
+    import spark.implicits._
+    def jobs(df: => org.apache.spark.sql.DataFrame,
+             declare: String => Unit = _ => ()): (String, Int) = {
+      val d = freshDir()
+      SnapshotTable.createEmpty(d, df.schema, clusterCols = Seq("k", "p"))
+      declare(d)
+      val n = JobCount(spark)(SnapshotTable.append(spark, d, df, numFiles = 0))
+      (d, n)
     }
-    // reference: the same create with a bloom column declared — blooms
-    // force the one-scan stats path, costing exactly one extra job
-    val d2 = freshDir()
-    val scanJobs = countJobs {
-      SnapshotTable.createEmpty(d2, fixture().schema,
-        clusterCols = clusterCols, bloomCols = Seq("k"))
-      SnapshotTable.append(spark, d2, fixture(), numFiles = 0)
-    }
-    assert(fastJobs < scanJobs,
-      s"footer path must save the stats re-scan job: fast=$fastJobs " +
-        s"scan=$scanJobs")
-    // the footer-derived stats actually prune
-    val cands = SnapshotTable.readCandidates(d, "k", "100", "150")
-    assert(cands.size === 1, s"expected 1 covering file, got ${cands.size}")
-    assert(SnapshotTable.readWhere(spark, d,
+    def batch(p: Int => Double) = (0 until 2000).map(i => (i.toLong, p(i)))
+      .toDF("k", "p").repartitionByRange(4, col("k"))
+    val (clean, cleanJobs) = jobs(batch(i => i * 1.5 + 1.0))
+    val others = Seq(
+      "NaN" -> jobs(batch(i => if (i == 1999) Double.NaN else i * 1.5 + 1.0))._2,
+      "±0.0" -> jobs(batch(i => if (i == 0) -0.0 else i * 1.5))._2,
+      "bloom" -> jobs(batch(i => i * 1.5 + 1.0), d =>
+        SnapshotTable.setProperties(spark, d, Map("bloomcols" -> "k")))._2,
+      "CHECK" -> jobs(batch(i => i * 1.5 + 1.0), d =>
+        SnapshotTable.setProperties(spark, d, Map("check" -> "p > 0")))._2)
+    others.foreach { case (what, n) =>
+      assert(n === cleanJobs, s"a $what batch ran $n jobs, a clean one $cleanJobs") }
+    // the task-side stats prune
+    assert(statFields(clean).forall(_.contains("p=")))
+    assert(SnapshotTable.readCandidates(clean, Map("p" -> ("10.0", "20.0"))).size === 1)
+    assert(SnapshotTable.readCandidates(clean, "k", "100", "150").size === 1)
+    assert(SnapshotTable.readWhere(spark, clean,
       Map("k" -> ("100", "150"))).count() === 51)
-    // timestamp bounds speak epoch-micros, resolved from footer stats
+    // timestamp bounds speak epoch-micros
+    val d = freshDir()
+    SnapshotTable.createClustered(spark, d, fixture(), clusterCols)
     val lo = (1700000000000L + 1000L * 1000L) * 1000L
     val hi = (1700000000000L + 1050L * 1000L) * 1000L
     assert(SnapshotTable.readWhere(spark, d,
       Map("ts" -> (lo.toString, hi.toString))).count() === 51)
-  }
-
-  test("clean float-clustered table takes the footer path (job-count) " +
-    "and prunes; NaN or ±0.0 boundaries fall back to the scan") {
-    import spark.implicits._
-    def countJobs(f: => Unit): Int = JobCount(spark)(f)
-    // clean doubles: no NaN, no zero → footer path (r15)
-    val clean = (0 until 2000).map(i => (i.toLong, i * 1.5 + 1.0))
-      .toDF("k", "p").repartitionByRange(4, col("p"))
-    val d = freshDir()
-    val fastJobs = countJobs {
-      SnapshotTable.createClustered(spark, d, clean, Seq("p"))
-    }
-    val sf = statFields(d)
-    assert(sf.size === 4 && sf.forall(_.contains("p=")),
-      s"double cluster stats must be recorded: $sf")
-    assert(SnapshotTable.readCandidates(d,
-      Map("p" -> ("10.0", "20.0"))).size === 1)
-    // a NaN boundary poisons the footer contract → whole-batch scan
-    // fallback, stats still recorded (conservative, never weaker)
-    val withNan = (0 until 2000).map(i =>
-        (i.toLong, if (i == 1999) Double.NaN else i * 1.5 + 1.0))
-      .toDF("k", "p").repartitionByRange(4, col("k"))
-    val dn = freshDir()
-    val nanJobs = countJobs {
-      SnapshotTable.createClustered(spark, dn, withNan, Seq("p"))
-    }
-    assert(nanJobs > fastJobs,
-      s"NaN boundary must force the one-scan fallback: clean=$fastJobs " +
-        s"nan=$nanJobs")
-    val sfn = statFields(dn)
-    assert(sfn.size === 4 && sfn.forall(_.contains("p=")),
-      s"scan fallback must still record stats: $sfn")
-    // a zero boundary (sign-of-zero rendering ambiguity) also falls back
-    val withZero = (0 until 2000).map(i => (i.toLong, i * 1.5))
-      .toDF("k", "p").repartitionByRange(4, col("p"))
-    val dz = freshDir()
-    val zeroJobs = countJobs {
-      SnapshotTable.createClustered(spark, dz, withZero, Seq("p"))
-    }
-    assert(zeroJobs > fastJobs,
-      s"±0.0 boundary must force the one-scan fallback: clean=$fastJobs " +
-        s"zero=$zeroJobs")
-    assert(statFields(dz).forall(_.contains("p=")))
   }
 }

@@ -193,6 +193,45 @@ class SnapshotStreamSpec extends SparkSpec {
     assert(rows.collect().map(_.getLong(0)).sorted === (10L to 20L).toArray)
   }
 
+  test("a streamed epoch records the same manifest stats as an append " +
+    "of the same rows") {
+    wh
+    val (ts, ta) = (freshName("sst_"), freshName("ssa_"))
+    Seq(ts, ta).foreach(t => spark.sql(s"CREATE TABLE graft.ns.$t " +
+      "(id BIGINT, s STRING) TBLPROPERTIES ('clustercols'='s,id')"))
+    val data = Seq((3L, "\uFFFD"), (1L, "\uD83D\uDE00"), (2L, "a"),
+      (4L, "z"), (5L, null))
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val in = MemoryStream[(Long, String)]
+    in.addData(data: _*)
+    val q = in.toDF().toDF("id", "s").repartition(1)
+      .writeStream
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("sst_ckpt_").toString)
+      .trigger(Trigger.AvailableNow())
+      .toTable(s"graft.ns.$ts")
+    assert(q.awaitTermination(60000))
+    SnapshotTable.append(spark, dirOf(ta),
+      data.toDF("id", "s").repartition(1), numFiles = 0)
+    /** The stats field of the latest manifest's single added entry. */
+    def stats(t: String): String = {
+      val dir = dirOf(t)
+      val v = SnapshotTable.latestVersion(dir)
+      val lines = scala.jdk.CollectionConverters.ListHasAsScala(
+        java.nio.file.Files.readAllLines(java.nio.file.Paths.get(dir,
+          "_manifests", f"v$v%08d.manifest"))).asScala.toSeq.drop(1)
+      val added = lines.map(_.stripPrefix("+").split("\t"))
+        .filter(_.head.startsWith("data/"))
+      assert(added.size === 1, lines)
+      added.head(1)
+    }
+    // UTF-8 byte order: the emoji (F0 9F 98 80) is the string max, above
+    // U+FFFD (EF BF BD); UTF-16 order would pick U+FFFD
+    assert(stats(ts) === "id=1,5;s=a,%F0%9F%98%80")
+    assert(stats(ts) === stats(ta))
+  }
+
   test("table-to-table streaming pipeline: readStream.table -> transform " +
     "-> writeStream.toTable") {
     wh
