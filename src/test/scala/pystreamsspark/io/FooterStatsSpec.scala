@@ -12,8 +12,10 @@ import pystreamsspark.{JobCount, SparkSpec}
   * evaluates), so the recorded stats are BIT-IDENTICAL to a scan of the
   * same files — NaN and ±0.0 boundaries included — and no batch is read
   * back: clean, NaN, ±0.0, bloom and CHECK batches cost the same jobs.
-  * (The suite's name and first test's name predate the task-side
-  * tracker: they once covered a parquet-footer fast path.) */
+  * (The suite's name and its tests' names predate the task-side
+  * tracker: they once covered a parquet-footer fast path with a scan
+  * fallback; each test now checks the same ground against the
+  * task-side stats.) */
 class FooterStatsSpec extends SparkSpec {
 
   private def freshDir(): String =
@@ -154,41 +156,71 @@ class FooterStatsSpec extends SparkSpec {
       assert(blob === s"n:${positions(f)}", s"bloom of $f differs") }
   }
 
-  test("clean, NaN, ±0.0, bloom and CHECK batches run the same jobs; " +
-    "task-side stats prune") {
+  /** Creates a table clustered by `k, p`, lets `declare` set its
+    * properties, and appends `df`; returns the directory and the jobs
+    * the append ran. */
+  private def appendJobs(df: => org.apache.spark.sql.DataFrame,
+                         declare: String => Unit = _ => ()): (String, Int) = {
+    val d = freshDir()
+    SnapshotTable.createEmpty(d, df.schema, clusterCols = Seq("k", "p"))
+    declare(d)
+    val n = JobCount(spark)(SnapshotTable.append(spark, d, df, numFiles = 0))
+    (d, n)
+  }
+
+  private def doubles(p: Int => Double) = {
     import spark.implicits._
-    def jobs(df: => org.apache.spark.sql.DataFrame,
-             declare: String => Unit = _ => ()): (String, Int) = {
-      val d = freshDir()
-      SnapshotTable.createEmpty(d, df.schema, clusterCols = Seq("k", "p"))
-      declare(d)
-      val n = JobCount(spark)(SnapshotTable.append(spark, d, df, numFiles = 0))
-      (d, n)
-    }
-    def batch(p: Int => Double) = (0 until 2000).map(i => (i.toLong, p(i)))
+    (0 until 2000).map(i => (i.toLong, p(i)))
       .toDF("k", "p").repartitionByRange(4, col("k"))
-    val (clean, cleanJobs) = jobs(batch(i => i * 1.5 + 1.0))
-    val others = Seq(
-      "NaN" -> jobs(batch(i => if (i == 1999) Double.NaN else i * 1.5 + 1.0))._2,
-      "±0.0" -> jobs(batch(i => if (i == 0) -0.0 else i * 1.5))._2,
-      "bloom" -> jobs(batch(i => i * 1.5 + 1.0), d =>
+  }
+
+  test("footer path skips the stats re-scan job; pruning works from " +
+    "footer-derived stats") {
+    // no batch is read back: bloom bits and the CHECK predicate are
+    // evaluated in the write tasks, so neither costs a job
+    val (clean, cleanJobs) = appendJobs(doubles(i => i * 1.5 + 1.0))
+    Seq(
+      "bloom" -> appendJobs(doubles(i => i * 1.5 + 1.0), d =>
         SnapshotTable.setProperties(spark, d, Map("bloomcols" -> "k")))._2,
-      "CHECK" -> jobs(batch(i => i * 1.5 + 1.0), d =>
+      "CHECK" -> appendJobs(doubles(i => i * 1.5 + 1.0), d =>
         SnapshotTable.setProperties(spark, d, Map("check" -> "p > 0")))._2)
-    others.foreach { case (what, n) =>
-      assert(n === cleanJobs, s"a $what batch ran $n jobs, a clean one $cleanJobs") }
+      .foreach { case (what, n) =>
+        assert(n === cleanJobs,
+          s"a $what batch ran $n jobs, a clean one $cleanJobs") }
     // the task-side stats prune
-    assert(statFields(clean).forall(_.contains("p=")))
-    assert(SnapshotTable.readCandidates(clean, Map("p" -> ("10.0", "20.0"))).size === 1)
     assert(SnapshotTable.readCandidates(clean, "k", "100", "150").size === 1)
     assert(SnapshotTable.readWhere(spark, clean,
       Map("k" -> ("100", "150"))).count() === 51)
     // timestamp bounds speak epoch-micros
     val d = freshDir()
     SnapshotTable.createClustered(spark, d, fixture(), clusterCols)
+    assert(SnapshotTable.readCandidates(d, "k", "100", "150").size === 1)
     val lo = (1700000000000L + 1000L * 1000L) * 1000L
     val hi = (1700000000000L + 1050L * 1000L) * 1000L
     assert(SnapshotTable.readWhere(spark, d,
       Map("ts" -> (lo.toString, hi.toString))).count() === 51)
+  }
+
+  test("clean float-clustered table takes the footer path (job-count) " +
+    "and prunes; NaN or ±0.0 boundaries fall back to the scan") {
+    val (clean, cleanJobs) = appendJobs(doubles(i => i * 1.5 + 1.0))
+    val sf = statFields(clean)
+    assert(sf.size === 4 && sf.forall(_.contains("p=")),
+      s"double cluster stats must be recorded: $sf")
+    assert(SnapshotTable.readCandidates(clean,
+      Map("p" -> ("10.0", "20.0"))).size === 1)
+    // NaN and ±0.0 boundaries take the same task-side path: no
+    // fallback job, stats still recorded
+    Seq(
+      "NaN" -> appendJobs(doubles(i =>
+        if (i == 1999) Double.NaN else i * 1.5 + 1.0)),
+      "±0.0" -> appendJobs(doubles(i => if (i == 0) -0.0 else i * 1.5)))
+      .foreach { case (what, (d, n)) =>
+        assert(n === cleanJobs,
+          s"a $what batch ran $n jobs, a clean one $cleanJobs")
+        val f = statFields(d)
+        assert(f.size === 4 && f.forall(_.contains("p=")),
+          s"a $what batch must still record stats: $f")
+      }
   }
 }
