@@ -40,17 +40,26 @@ object Dedup {
     * previous run's warm blocks and measured warm-substrate cost as if
     * it were the pipeline's. Within one invocation reuse is unchanged;
     * across invocations every run now rebuilds — what a fresh pipeline
-    * actually pays. */
+    * actually pays.
+    *
+    * Frames whose SparkContext has been stopped are dropped without an
+    * unpersist: their blocks died with their context, and unpersisting
+    * through a dead context throws. */
   private object SharedRelationCache {
     private val live = new java.util.ArrayDeque[DataFrame]()
+    private def stopped(df: DataFrame): Boolean =
+      df.sparkSession.sparkContext.isStopped
+    private def drop(df: DataFrame): Unit =
+      if (!stopped(df)) df.unpersist(false)
     def apply(df: DataFrame): DataFrame = synchronized {
+      live.removeIf(stopped(_))
       val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       if (!live.contains(p)) live.addLast(p)
-      while (live.size > 4) live.removeFirst().unpersist(false)
+      while (live.size > 4) drop(live.removeFirst())
       p
     }
     def clear(): Unit = synchronized {
-      while (!live.isEmpty) live.removeFirst().unpersist(false)
+      while (!live.isEmpty) drop(live.removeFirst())
     }
   }
 

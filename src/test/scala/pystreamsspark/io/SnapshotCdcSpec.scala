@@ -2,26 +2,16 @@ package pystreamsspark.io
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+import pystreamsspark.SparkSpec
 
 /** CDC (changesBetween) and TIMESTAMP AS OF resolution laws:
   * file-granular net changes equal the brute-force full-table
   * exceptAll, DV-only changes surface as deletes, evolution aligns by
   * name, and versionAt picks the latest commit at-or-before the asked
   * time. */
-class SnapshotCdcSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .appName("snapshot-cdc-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SnapshotCdcSpec extends SparkSpec {
 
   private def freshDir(): String =
     Files.createTempDirectory("snapcdc").toString

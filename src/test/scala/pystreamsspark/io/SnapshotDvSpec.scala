@@ -2,10 +2,9 @@ package pystreamsspark.io
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+import pystreamsspark.SparkSpec
 
 /** Merge-on-read deletion vectors (round-10 task 2): a point DELETE is
   * O(batch) metadata + a small DV write — data files untouched — and
@@ -13,16 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * applies the DV; reads are EQUIVALENT to the copy-on-write path, time
   * travel and vacuum stay correct across DV versions, and compaction
   * materializes DVs away. */
-class SnapshotDvSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .appName("snapshot-dv-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SnapshotDvSpec extends SparkSpec {
 
   private def freshDir(): String =
     Files.createTempDirectory("snapdv").toString

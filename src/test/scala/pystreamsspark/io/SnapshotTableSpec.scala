@@ -5,25 +5,14 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.BusShim
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+import pystreamsspark.SparkSpec
 
 /** Laws of the snapshot-manifest table layer: every mutation is a new
   * immutable snapshot, the put-if-absent manifest write is the atomic
   * commit point, MERGE is file-granular copy-on-write, and old versions
   * stay readable until vacuumed. */
-class SnapshotTableSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .appName("snapshot-table-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SnapshotTableSpec extends SparkSpec {
 
   private def freshDir(): String =
     Files.createTempDirectory("snaptable").toString

@@ -1,5 +1,7 @@
 package pystreamsspark.llm
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 import pystreamsspark.SparkSpec
 
 /** r15 invocation-bound laws for the dedup funnels' SharedRelationCache
@@ -14,8 +16,7 @@ import pystreamsspark.SparkSpec
   * correctness-independent. */
 class SharedCacheScopeSpec extends SparkSpec {
 
-  private def mkDocs(n: Int) = {
-    val s = spark
+  private def mkDocs(n: Int, s: SparkSession = spark) = {
     import s.implicits._
     (0 until n).map { i =>
       (i.toLong, s"tok${i % 7} tok${i % 5} tok${i % 3} shared common words",
@@ -29,6 +30,9 @@ class SharedCacheScopeSpec extends SparkSpec {
     spark.sparkContext.getPersistentRDDs
       .filter { case (_, rdd) => !rdd.isCheckpointed }
       .keySet.toSet
+
+  private def pairSet(df: DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
   test("a new pipeline invocation drops the previous invocation's substrates") {
     val docs = mkDocs(60)
@@ -64,16 +68,32 @@ class SharedCacheScopeSpec extends SparkSpec {
   test("results identical with and without a warm substrate") {
     val docs = mkDocs(40)
     Dedup.newPipelineInvocation()
-    val cold = Dedup.minHashLsh(docs, "id", "text", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val cold = pairSet(Dedup.minHashLsh(docs, "id", "text", threshold = 0.5))
     // same funnel again WITHOUT a boundary: reuses the warm substrate
-    val warm = Dedup.minHashLsh(docs, "id", "text", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val warm = pairSet(Dedup.minHashLsh(docs, "id", "text", threshold = 0.5))
     Dedup.newPipelineInvocation()
-    val cold2 = Dedup.minHashLsh(docs, "id", "text", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val cold2 = pairSet(Dedup.minHashLsh(docs, "id", "text", threshold = 0.5))
     assert(cold === warm)
     assert(cold === cold2)
     assert(cold.nonEmpty)
+  }
+
+  // Runs last: it stops the shared session and leaves a fresh one with
+  // the same settings for the suites that follow.
+  test("a substrate left by a stopped session never breaks a later funnel") {
+    Dedup.newPipelineInvocation()
+    val before = pairSet(Dedup.minHashLsh(mkDocs(40), "id", "text", threshold = 0.5))
+    assert(before.nonEmpty)
+    spark.stop() // the substrate just persisted stays in the registry
+    val fresh = SparkSpec.builder().getOrCreate()
+    assert(!fresh.sparkContext.isStopped)
+    val docs = mkDocs(60, fresh)
+    // more funnels than the registry keeps: the stopped frame is evicted
+    (1 to 5).foreach { _ =>
+      Dedup.jaccardPairsBlock(docs, "id", "text", Seq("grp"), 0.3).count()
+    }
+    val after = pairSet(Dedup.minHashLsh(mkDocs(40, fresh), "id", "text", threshold = 0.5))
+    assert(after === before)
+    Dedup.newPipelineInvocation()
   }
 }
