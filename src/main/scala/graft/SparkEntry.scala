@@ -12,33 +12,14 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CoreQueries.q1Agg(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2.
-    *
-    * Every entry is wrapped in a PIPELINE-INVOCATION boundary (r15):
-    * constructing a query drops the dedup funnels' shared persisted
-    * substrates left by the PREVIOUS query invocation
-    * ([[pystreamsspark.llm.Dedup.newPipelineInvocation]]), so a timing
-    * loop that re-runs one key (Bench's warm-up + min-of-5) measures the
-    * cold substrate cost a fresh pipeline pays instead of silently
-    * reading the prior run's warm cache (VERDICT r14 "What's wrong #3" —
-    * Spark's CacheManager matches persists by canonicalized plan, so the
-    * reuse crossed run boundaries). Results are unaffected: the cache is
-    * a performance substrate only; intra-query reuse is unchanged. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
-    val raw =
-      CoreQueries.queries ++ AggQueries.queries ++ JoinQueries.queries ++
-        ScalarQueries.queries ++ WindowQueries.queries ++ TimeQueries.queries ++
-        LlmQueries.queries ++ SetQueries.queries ++ SqlQueries.queries ++
-        ExtraQueries.queries ++ PipelineQueries.queries ++ StorageQueries.queries ++
-        GraphQueries.queries ++ AnalyticsQueries.queries ++ LayoutQueries.queries ++
-        DriftQueries.queries ++ DmlQueries.queries
-    raw.map { case (name, fn) =>
-      name -> { (spark: SparkSession, sfDir: String) =>
-        pystreamsspark.llm.Dedup.newPipelineInvocation()
-        fn(spark, sfDir)
-      }
-    }
-  }
+  /** One entry per implemented operator from SURVEY.md §2. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    CoreQueries.queries ++ AggQueries.queries ++ JoinQueries.queries ++
+      ScalarQueries.queries ++ WindowQueries.queries ++ TimeQueries.queries ++
+      LlmQueries.queries ++ SetQueries.queries ++ SqlQueries.queries ++
+      ExtraQueries.queries ++ PipelineQueries.queries ++ StorageQueries.queries ++
+      GraphQueries.queries ++ AnalyticsQueries.queries ++ LayoutQueries.queries ++
+      DriftQueries.queries ++ DmlQueries.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -18,7 +18,6 @@ import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, Phys
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.datasources.{FilePartition, OutputWriter, OutputWriterFactory, PartitioningAwareFileIndex}
 import org.apache.spark.sql.vectorized.ColumnarBatch
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -445,7 +444,8 @@ private[io] class SnapshotStreamingWrite(dir: String, schema: StructType)
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     val spark = GraftSqlShims.activeClassic()
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val owf = new ParquetFileFormat()
+    // INT64 TIMESTAMP(MICROS), as every batch file of the table
+    val owf = new MicrosParquetFormat()
       .prepareWrite(spark, job, Map.empty[String, String], schema)
     // ship the configured job conf (carries the parquet write schema,
     // compression, committer settings) to executors as Writable bytes

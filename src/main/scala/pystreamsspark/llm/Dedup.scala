@@ -17,57 +17,18 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Bounded registry of PERSISTED self-join substrates. The pair
-    * funnels are self-joins over a derived relation (tokenized +
-    * df-stamped token sets); without an explicit persist, Spark's plan
-    * canonicalization does not reuse the aggregate exchange across the
-    * two (differently-projected) join sides and the documents table is
-    * tokenized 2-4x per funnel. Persisting the substrate is exactly
-    * what a 100 TB run does for any relation consumed by both sides of
-    * a self-join: MEMORY_AND_DISK (spills, never OOMs), computed once,
-    * read back by every consumer. The registry keeps at most 4 live
-    * substrates (distinct funnels within one composed pipeline, e.g.
-    * neardupPrune's pairs + CC) and evicts the oldest beyond that —
-    * eviction only drops cached blocks; any straggler consumer simply
-    * recomputes, so correctness never depends on the cache.
-    *
-    * INVOCATION BOUND (r15, VERDICT r14 "What's wrong #3"): substrates
-    * are additionally dropped at the start of each new top-level
-    * pipeline invocation ([[newPipelineInvocation]] — the graft query
-    * entry points call it). Spark's CacheManager matches persists by
-    * CANONICALIZED plan, so without the boundary a re-run of the same
-    * funnel (e.g. Bench's min-of-5 timing loop) silently reused the
-    * previous run's warm blocks and measured warm-substrate cost as if
-    * it were the pipeline's. Within one invocation reuse is unchanged;
-    * across invocations every run now rebuilds — what a fresh pipeline
-    * actually pays.
-    *
-    * Frames whose SparkContext has been stopped are dropped without an
-    * unpersist: their blocks died with their context, and unpersisting
-    * through a dead context throws. */
-  private object SharedRelationCache {
-    private val live = new java.util.ArrayDeque[DataFrame]()
-    private def stopped(df: DataFrame): Boolean =
-      df.sparkSession.sparkContext.isStopped
-    private def drop(df: DataFrame): Unit =
-      if (!stopped(df)) df.unpersist(false)
-    def apply(df: DataFrame): DataFrame = synchronized {
-      live.removeIf(stopped(_))
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (!live.contains(p)) live.addLast(p)
-      while (live.size > 4) drop(live.removeFirst())
-      p
-    }
-    def clear(): Unit = synchronized {
-      while (!live.isEmpty) drop(live.removeFirst())
-    }
-  }
-
-  /** Mark the start of a new top-level pipeline invocation: substrates
-    * persisted by PREVIOUS invocations are unpersisted (cached blocks
-    * dropped; any still-referenced frame simply recomputes — correctness
-    * never depends on the cache). See [[SharedRelationCache]]. */
-  def newPipelineInvocation(): Unit = SharedRelationCache.clear()
+  // SUBSTRATES: the pair funnels are self-joins over a derived relation
+  // (tokenized + df-stamped token sets). Without a pin, Spark's plan
+  // canonicalization does not reuse the aggregate exchange across the two
+  // (differently-projected) join sides, and the documents table is
+  // tokenized 2-4x per funnel. Each funnel therefore pins its substrate
+  // with a LAZY `localCheckpoint`: an RDD-level MEMORY_AND_DISK persist,
+  // computed in the first action over the returned frame and read back by
+  // every consumer of that action (both join sides, both attach joins).
+  // Nothing is registered in the CacheManager, so no later call matches
+  // it by plan, and the ContextCleaner frees its blocks once the frame is
+  // unreachable. Not `Lineage.truncate`: with a checkpoint dir set, its
+  // lazy reliable checkpoint does not cache (see its scaladoc).
 
   /** Normalized-text key for exact dedup. At scale, group on
     * (xxhash64(norm), norm): the 8-byte hash leads the shuffle key so
@@ -189,10 +150,10 @@ object Dedup {
         // SLIM band join (r14, guide §2.3 — same discipline as
         // [[jaccardPairsPrefix]]): candidates are decided from
         // (band, bucket, id) alone and deduped on the id pair; the gram
-        // arrays attach once per SURVIVING pair from the shared cache —
-        // the old shape shipped each doc's gram array once per band
-        // (8×) and deduped over array columns.
-        val base = SharedRelationCache(sh)
+        // arrays attach once per SURVIVING pair from the checkpointed
+        // substrate — the old shape shipped each doc's gram array once
+        // per band (8×) and deduped over array columns.
+        val base = sh.localCheckpoint(eager = false)
         val banded = base.select(col("id"),
             posexplode(lshBandKeys(col("sig"), numHashes, bands)))
           .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
@@ -358,7 +319,8 @@ object Dedup {
   private[pystreamsspark] def jaccardPairsBlock(
       docs: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], threshold: Double): DataFrame = {
-    val base = SharedRelationCache(hashedTokenSets(docs, idCol, textCol, blockCols))
+    val base = hashedTokenSets(docs, idCol, textCol, blockCols)
+      .localCheckpoint(eager = false)
     val a = base.select(
       (col("id").as("id_a") +: col("toks").as("toks_a") +: blockCols.map(col)): _*)
     val b = base.select(
@@ -432,9 +394,10 @@ object Dedup {
       // CPU-heavy intersections into one task — repartition on the pair
       .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
         col("id_a"), col("id_b"))
-    // attach the arrays once per SURVIVING pair (sorted is persisted by
-    // dfSortedTokenSets, so both attach joins read the cache) and verify
-    // exactly once per pair — the AllPairs paper's verify discipline.
+    // attach the arrays once per SURVIVING pair (sorted is the substrate
+    // dfSortedTokenSets checkpoints, so both attach joins read its
+    // blocks) and verify exactly once per pair — the AllPairs paper's
+    // verify discipline.
     // array_sort: re-order the df-ordered sets to VALUE order for the
     // sorted_inter_count verify (once per substrate row per side, not
     // per pair; counts are order-independent so results are identical)
@@ -455,20 +418,22 @@ object Dedup {
     * fits — Spark picks), one groupBy(id) to re-sort each set. */
   private def dfSortedTokenSets(docs: DataFrame, idCol: String, textCol: String,
                                 blockCols: Seq[String]): DataFrame = {
-    // persist BOTH levels: `base` feeds the df aggregate AND the stamp
+    // checkpoint BOTH levels: `base` feeds the df aggregate AND the stamp
     // join (tokenize once, not twice), and the sorted result feeds both
     // sides of the caller's prefix self-join (sort/stamp once, not
     // twice) — together this cuts the funnel from 4 documents scans to 1
-    val base = SharedRelationCache(hashedTokenSets(docs, idCol, textCol, blockCols))
+    val base = hashedTokenSets(docs, idCol, textCol, blockCols)
+      .localCheckpoint(eager = false)
     val tokDf = base.select(explode(col("toks")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    SharedRelationCache(base
+    base
       .select((col("id") +: blockCols.map(col) :+ explode(col("toks")).as("tok")): _*)
       .join(tokDf, "tok")
       .groupBy((col("id") +: blockCols.map(col)): _*)
       .agg(transform(
         sort_array(collect_list(struct(col("df"), col("tok")))),
-        s => s.getField("tok")).as("toks")))
+        s => s.getField("tok")).as("toks"))
+      .localCheckpoint(eager = false)
   }
 
   /** ASYMMETRIC containment pairs: |toks(a) ∩ toks(b)| / |toks(a)| >=
@@ -503,7 +468,8 @@ object Dedup {
   private[pystreamsspark] def containmentPairsBlock(
       docs: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], threshold: Double): DataFrame = {
-    val base = SharedRelationCache(hashedTokenSets(docs, idCol, textCol, blockCols))
+    val base = hashedTokenSets(docs, idCol, textCol, blockCols)
+      .localCheckpoint(eager = false)
     val a = base.select(
       (col("id").as("id_a") +: col("toks").as("toks_a") +: blockCols.map(col)): _*)
     val b = base.select(

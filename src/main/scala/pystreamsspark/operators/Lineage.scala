@@ -12,6 +12,11 @@ import org.apache.spark.sql.DataFrame
   * cluster; blocks survive executor loss, so iteration is recoverable),
   * else `localCheckpoint` (executor-local blocks — free on local[N],
   * and the only option when no fault-tolerant store is configured).
+  * A LAZY reliable checkpoint does not cache (`RDD.checkpoint()` with no
+  * persist), so every consumer of the first action recomputes the frame
+  * and writing the checkpoint computes it once more; that is why the
+  * dedup funnels pin their self-join substrates with
+  * `localCheckpoint(eager = false)` rather than through this dispatch.
   */
 object Lineage {
   def truncate(df: DataFrame, eager: Boolean = true): DataFrame =

@@ -21,9 +21,12 @@ import org.apache.spark.sql.functions._
   * Output values are identical to the global-window form (the test
   * asserts it): a prefix sum does not depend on where it is split.
   *
-  * The partitioned frame is persisted between the two passes because
+  * The partitioned frame is pinned between the two passes because
   * range-partition boundaries are sampled — unpinned, a second job could
-  * draw different bounds and mismatch pass 1's offsets.
+  * draw different bounds and mismatch pass 1's offsets. The pin is a
+  * lazy `localCheckpoint`: pass 1's `collect` materializes its blocks,
+  * pass 2 reads the same blocks, and nothing is registered in the
+  * CacheManager, so the blocks are freed once the frame is unreachable.
   */
 object SeqPack {
 
@@ -36,7 +39,7 @@ object SeqPack {
       .repartitionByRange(nPartitions, col("h"), col("id"))
       .sortWithinPartitions(col("h"), col("id"))
       .withColumn("pid", spark_partition_id())
-      .persist()
+      .localCheckpoint(eager = false)
 
     // pass 1: per-partition totals -> exclusive prefix offsets. Built over
     // ALL pids 0 until nPartitions (absent = empty partition = total 0):

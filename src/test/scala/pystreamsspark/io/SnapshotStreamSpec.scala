@@ -232,6 +232,37 @@ class SnapshotStreamSpec extends SparkSpec {
     assert(stats(ts) === stats(ta))
   }
 
+  test("streamed files write INT64 TIMESTAMP(MICROS), as batch files do") {
+    wh
+    val t = freshName("swts_")
+    spark.sql(s"CREATE TABLE graft.ns.$t (id BIGINT, ts TIMESTAMP)")
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val in = MemoryStream[(Long, java.sql.Timestamp)]
+    in.addData((1L, new java.sql.Timestamp(1700000000000L)))
+    val q = in.toDF().toDF("id", "ts")
+      .writeStream
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("swts_ckpt_").toString)
+      .trigger(Trigger.AvailableNow())
+      .toTable(s"graft.ns.$t")
+    assert(q.awaitTermination(60000))
+    val files = SnapshotTable.filePaths(dirOf(t))
+    assert(files.nonEmpty)
+    val conf = new org.apache.hadoop.conf.Configuration()
+    files.foreach { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), conf))
+      try {
+        val schema = r.getFooter.getFileMetaData.getSchema
+        val ts = schema.getType(schema.getFieldIndex("ts")).asPrimitiveType()
+        assert(ts.getPrimitiveTypeName.name === "INT64", f)
+        assert(ts.getLogicalTypeAnnotation.toString === "TIMESTAMP(MICROS,true)", f)
+      } finally r.close()
+    }
+  }
+
   test("table-to-table streaming pipeline: readStream.table -> transform " +
     "-> writeStream.toTable") {
     wh

@@ -48,12 +48,15 @@ class CuratePipelineSpec extends SparkSpec {
   test("curate: planted eval twin is decontaminated away") {
     val s = spark
     import s.implicits._
-    val docs = Tables.documents(spark, sf).filter($"lang" === "en").limit(50)
+    val docs = Tables.documents(spark, sf).filter($"lang" === "en")
+      .orderBy($"doc_id").limit(50)
     // eval set = an exact copy of one training doc (the worst leak)
     val eval = docs.orderBy($"doc_id").limit(1)
       .select(($"doc_id" + 1000000L).as("doc_id"), $"text",
         $"lang", $"source", $"n_chars")
     val leakText = eval.select(Dedup.normText($"text")).head.getString(0)
+    // the leak is planted: without it the decontamination check is vacuous
+    assert(docs.filter(Dedup.normText($"text") === leakText).count() > 0)
     val (packed, _) = CuratePipeline.curateWithStats(
       docs, "doc_id", "text", eval, langs = Seq("en"),
       neardupThreshold = 0.8, tokenBudget = 512)

@@ -102,12 +102,18 @@ class PipelineOpsSpec extends SparkSpec {
       .withColumn("chunk", floor(($"cum" - $"n_tok") / 4096.0).cast("long"))
       .select($"doc_id", $"cum", $"chunk")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    def pinned = spark.sparkContext.getPersistentRDDs
+      .filter { case (_, rdd) => !rdd.isCheckpointed }.keySet.toSet
+    val before = pinned
     // distributed two-pass, deliberately many partitions
     val got = pystreamsspark.operators.SeqPack
       .packChunks(docs, "doc_id", "n_tok", 4096L, nPartitions = 7)
       .select($"id", $"cum", $"chunk")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == ref)
+    // the range layout is pinned by a lazy local checkpoint, not a
+    // persist that outlives the call
+    assert((pinned -- before).isEmpty)
   }
 
   test("seq-pack with empty intermediate partitions (nPartitions >> rows): no NULL offsets") {
