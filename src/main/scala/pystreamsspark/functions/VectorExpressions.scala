@@ -1,6 +1,7 @@
 package pystreamsspark.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -146,10 +147,14 @@ object VectorExpressions {
     SortedInterCount.registryEntry)
 
   /** Idempotent session-level registration (the extensions class does the
-    * same at session build time; this covers sessions built without it). */
-  def register(spark: SparkSession): Unit =
+    * same at session build time; this covers sessions built without it).
+    * A name already bound to this builder is left alone, so repeated
+    * calls replace nothing in the session's function registry. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq builder))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }

@@ -75,7 +75,7 @@ object SnapshotSql {
       case DeleteFromTable(t, cond) =>
         tableDirOf(spark, t) match {
           case Some(dir) =>
-            runDelete(spark, dir, renderCond(cond))
+            SnapshotTable.delete(spark, dir, renderCond(cond))
             spark.emptyDataFrame
           case None => spark.sql(text)
         }
@@ -110,21 +110,10 @@ object SnapshotSql {
 
   // ------------------------------------------------- shared executors
 
-  /** DELETE routed by the table's declared mode: merge-on-read tables
-    * (TBLPROPERTIES('delete.mode'='merge-on-read')) take the
-    * deletion-vector path — O(batch) sidecar write, zero data-file
-    * rewrites; everything else stays copy-on-write. */
-  def runDelete(spark: SparkSession, dir: String, condSql: String): Int =
-    if (SnapshotTable.deleteModeOf(dir) == "merge-on-read")
-      SnapshotTable.deleteVectors(spark, dir, condSql)
-    else SnapshotTable.delete(spark, dir, condSql)
-
-  /** UPDATE: assignments become (column, SQL-expression) pairs, routed
-    * by the table's declared mode — merge-on-read tables
-    * (TBLPROPERTIES('update.mode'='merge-on-read')) take
-    * [[SnapshotTable.updateVectors]] (DV-mark + append images, no file
-    * rewrites), the rest [[SnapshotTable.update]]; no WHERE means every
-    * row. */
+  /** UPDATE: assignments become (column, SQL-expression) pairs for
+    * [[SnapshotTable.update]], which takes the write mode the table
+    * declares (`update.mode`; DELETE likewise `delete.mode`); no WHERE
+    * means every row. */
   def runUpdate(spark: SparkSession, dir: String,
                 assignments: Seq[Assignment],
                 cond: Option[Expression]): Int = {
@@ -132,15 +121,8 @@ object SnapshotSql {
       (attrName(a.key,
         "UPDATE SET targets must be plain columns"), renderCond(a.value))
     }
-    runUpdateSets(spark, dir, cond.map(renderCond).getOrElse("true"), sets)
+    SnapshotTable.update(spark, dir, cond.map(renderCond).getOrElse("true"), sets)
   }
-
-  /** Mode-routed UPDATE executor shared with the analyzer-rule route. */
-  def runUpdateSets(spark: SparkSession, dir: String, condSql: String,
-                    sets: Seq[(String, String)]): Int =
-    if (SnapshotTable.updateModeOf(dir) == "merge-on-read")
-      SnapshotTable.updateVectors(spark, dir, condSql, sets)
-    else SnapshotTable.update(spark, dir, condSql, sets)
 
   /** Full MERGE dispatch from a parsed (or analyzed) [[MergeIntoTable]]:
     * the unconditioned star-upsert and lone matched-DELETE keep their
@@ -237,7 +219,7 @@ object SnapshotSql {
     val fastKeys =
       try Some(keyColsOf(m.mergeCondition))
       catch { case _: UnsupportedOperationException => None }
-    val cow = SnapshotTable.mergeModeOf(dir) != "merge-on-read"
+    val cow = !SnapshotTable.tableProps(dir).get("merge.mode").contains("merge-on-read")
     (m.matchedActions, m.notMatchedActions) match {
       case (Seq(u), Seq(ins)) if cow && m.notMatchedBySourceActions.isEmpty &&
           fastKeys.isDefined && isStarUpdate(u) && isStarInsert(ins) =>

@@ -1696,27 +1696,45 @@ object SnapshotTable {
 
   /** DV-AWARE read of a subset of a manifest's entries — the ONE place
     * row data meets deletion vectors, shared by every read and by
-    * merge/delete/update discovery. Entries carrying a `dv` reference
-    * anti-join their (file, pos) deletion set away by parquet row
-    * position (`_metadata.row_index` — stable because data files are
+    * row-level DML discovery ([[readTagged]]). Entries carrying a `dv`
+    * reference anti-join their (file, pos) deletion set away by parquet
+    * row position (`_metadata.row_index` — stable because data files are
     * immutable); the DV set is broadcast (DVs are point-delete-sized by
-    * design — a mass delete belongs on the copy-on-write path). With
-    * `tagged=true` the result carries `_src_file` (the file's RELATIVE
-    * manifest path, derived from `_metadata.file_path`) and `_src_pos`
-    * — the columns CoW discovery and [[deleteVectors]] key on. */
+    * design — a mass delete belongs on the copy-on-write path). */
   private def readEntries(spark: SparkSession, dir: String, m: Manifest,
+                          entries: Seq[FileEntry]): DataFrame =
+    scanEntries(spark, dir, m, entries, tagged = false)._1
+
+  /** [[readEntries]] plus each row's identity: the file's RELATIVE
+    * manifest path (from `_metadata.file_path`) and the row's position
+    * in it — what row-level DML keys its touched set and deletion
+    * vectors on. Returns the frame and the names of those two columns,
+    * chosen apart from the data columns (`_src_file`/`_src_pos` unless a
+    * data column already takes the name). */
+  private def readTagged(spark: SparkSession, dir: String, m: Manifest,
+                         entries: Seq[FileEntry]): (DataFrame, String, String) =
+    scanEntries(spark, dir, m, entries, tagged = true)
+
+  private def scanEntries(spark: SparkSession, dir: String, m: Manifest,
                           entries: Seq[FileEntry],
-                          tagged: Boolean = false): DataFrame = {
+                          tagged: Boolean): (DataFrame, String, String) = {
     val dvDirs = entries.flatMap(_.dv).distinct
     val schemaOpt = m.schema
+    // row identity and DV working columns are named apart from the data
+    // columns, logical and physical: a data column `_src_file` or
+    // `__dv_file` is neither overwritten nor ambiguous
+    def fresh(taken: Seq[String], names: String*): Seq[String] =
+      names.map(freshName(taken ++ schemaOpt.toSeq.flatMap(_.fieldNames), _))
     if (entries.isEmpty) {
       val schema = schemaOpt.getOrElse(throw new IllegalStateException(
         s"empty entry set at $dir needs a manifest schema"))
+      val Seq(srcFile, srcPos) = fresh(Nil, "_src_file", "_src_pos")
       val out = if (tagged)
-        schema.add("_src_file", StringType).add("_src_pos", LongType)
+        schema.add(srcFile, StringType).add(srcPos, LongType)
       else schema
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], out)
+      return (spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], out),
+        srcFile, srcPos)
     }
     val index = manifestIndex(spark, dir, m, entries)
     // COLUMN MAPPING, read side: files store PHYSICAL names — read with
@@ -1744,15 +1762,10 @@ object SnapshotTable {
         s.fields.toSeq.map(f => col(colmap.getOrElse(f.name, f.name)).as(f.name))
       case _ => base.columns.toSeq.map(col)
     }
+    val Seq(srcFile, srcPos) = fresh(base.columns.toSeq, "_src_file", "_src_pos")
     if (!tagged && dvDirs.isEmpty)
-      return if (colmap.isEmpty) base else base.select(logicalCols: _*)
-    // the DV anti-join's working columns are named apart from the data
-    // columns: a data column `_src_file` or `__dv_file` is neither
-    // overwritten nor ambiguous. A tagged read's row identity keeps its
-    // fixed names (its callers key on them and refuse such tables).
-    val src = Seq("_src_file", "_src_pos")
-    val Seq(srcFile, srcPos) =
-      if (tagged) src else src.map(freshName(base.columns.toSeq, _))
+      return (if (colmap.isEmpty) base else base.select(logicalCols: _*),
+        srcFile, srcPos)
     // the relative manifest path is always the last 3 URI components:
     // data/<batch>/<part-file>
     val withMeta = base
@@ -1762,8 +1775,7 @@ object SnapshotTable {
     val applied =
       if (dvDirs.isEmpty) withMeta
       else {
-        val Seq(dvFile, dvPos) = Seq("__dv_file", "__dv_pos")
-          .map(freshName(withMeta.columns.toSeq, _))
+        val Seq(dvFile, dvPos) = fresh(withMeta.columns.toSeq, "__dv_file", "__dv_pos")
         val dv = spark.read.schema(DvSchema)
           .parquet(dvDirs.map(d => Paths.get(dir, d).toString): _*)
           .select(col("file").as(dvFile), col("pos").as(dvPos))
@@ -1771,9 +1783,8 @@ object SnapshotTable {
           col(srcFile) === col(dvFile) && col(srcPos) === col(dvPos),
           "left_anti")
       }
-    if (tagged)
-      applied.select(logicalCols ++ Seq(col(srcFile), col(srcPos)): _*)
-    else applied.select(logicalCols: _*)
+    (if (tagged) applied.select(logicalCols ++ Seq(col(srcFile), col(srcPos)): _*)
+     else applied.select(logicalCols: _*), srcFile, srcPos)
   }
 
   /** The scan index over `entries` of manifest `m`: the manifest names
@@ -2337,19 +2348,12 @@ object SnapshotTable {
     * agg over the updates computes that range). Files without stats —
     * unclustered tables, all-null keys, non-stat key columns — are
     * always candidates, so pruning is conservative-correct. Public so
-    * specs can assert the scan set directly. */
+    * specs can assert the set that [[merge]] reads. */
   def discoveryCandidates(spark: SparkSession, dir: String,
                           updates: DataFrame, keyCols: Seq[String],
-                          fromVersion: Option[Int] = None): Seq[String] = {
-    val base = fromVersion.getOrElse(latestVersion(dir))
-    val hm = headerManifest(dir, base)
-    val statCols = hm.statsCols.filter(keyCols.contains)
-    if (statCols.isEmpty || hm.schema.isEmpty)
-      readManifest(dir, base).paths // unprunable: the full list IS the answer
-    else // the two-tier path resolves candidates without the full list
-      boundedCandidates(dir, base, updateBox(updates, statCols)
-        .map { case (c, r) => c -> Seq(r) })._2.map(_.path)
-  }
+                          fromVersion: Option[Int] = None): Seq[String] =
+    pruneCandidates(readManifest(dir, fromVersion.getOrElse(latestVersion(dir))),
+      updates, keyCols).map(_.path)
 
   private def pruneCandidates(m: Manifest, updates: DataFrame,
                               keyCols: Seq[String]): Seq[FileEntry] = {
@@ -2372,75 +2376,176 @@ object SnapshotTable {
     }.toMap
   }
 
-  /** MERGE (upsert by `keyCols`): file-granular copy-on-write.
-    * Discovery is TWO-TIER: (1) manifest min/max stats prune files
-    * whose cluster-key range cannot contain any update key — pure
-    * driver metadata, no I/O; (2) one distributed semi-join over ONLY
-    * the surviving candidate files finds those that actually contain
-    * matched keys (driver collects only the FILE list). Touched files
-    * are rewritten as (their rows anti-joined on the update keys) ∪
-    * updates — so updates replace matches and unmatched update rows are
-    * inserts — and every untouched file is carried by reference. If no
-    * file matches, the updates batch is a pure append. At 100 TB a
-    * narrow-key merge into a clustered table is therefore a
-    * covering-file read + single-file rewrite, not a table scan. */
-  def merge(spark: SparkSession, dir: String, updates: DataFrame,
-            keyCols: Seq[String], numFiles: Int = 4,
-            fromVersion: Option[Int] = None,
-            maxRetries: Int = 5, epoch: Option[Long] = None): Int =
-    commitWithRebase(dir, fromVersion, maxRetries) { (base, m) =>
-    // the WHOLE merge re-executes per attempt: a rebase must recompute
-    // touched-file discovery against the snapshot that actually won
-    // (the concurrent commit may have added/rewritten files holding
-    // matching keys); the previous attempt's rewritten batch becomes a
-    // vacuumable orphan — exactly a losing committer's fate
-    val candidates = pruneCandidates(m, updates, keyCols)
-    val touchedRel =
+  /** How a row-level operation finds its rows. */
+  private sealed trait RowMatch
+  /** The rows where the SQL `predicate` is TRUE. FALSE and NULL do not
+    * match, so a row whose predicate is NULL is neither deleted nor
+    * updated (the SQL `WHERE` rule; Delta keeps `NOT (cond <=> true)`). */
+  private final case class Where(predicate: String) extends RowMatch {
+    def matched: Column = coalesce(expr(predicate), lit(false))
+  }
+  /** The rows whose `keyCols` appear in `keys` (a NULL key matches
+    * nothing). */
+  private final case class KeysIn(keys: DataFrame,
+                                  keyCols: Seq[String]) extends RowMatch
+
+  /** What a row-level operation does to the rows it matched. */
+  private sealed trait RowChange
+  private case object Remove extends RowChange
+  /** `SET column = SQL expression`, values cast to the declared types. */
+  private final case class Assign(sets: Seq[(String, String)]) extends RowChange
+  /** Replace the matched rows with `updates`; its other rows insert. */
+  private final case class Upsert(updates: DataFrame) extends RowChange
+
+  /** The write mode a table declares under header `key`: true when
+    * `TBLPROPERTIES('<op>.mode'='merge-on-read')`. */
+  private def declaredMergeOnRead(key: String)(m: Manifest): Boolean =
+    m.header.get(key).contains("merge-on-read")
+
+  /** THE ROW-LEVEL CORE: every DELETE, UPDATE and key-matched MERGE,
+    * copy-on-write or merge-on-read, runs this one pipeline per commit
+    * attempt, against the manifest it commits on:
+    *  1. candidates — the files whose stats may hold a matched row
+    *     ([[predicateCandidates]] / [[pruneCandidates]]);
+    *  2. discovery — one tagged DV-aware read of the candidates keeps the
+    *     matched rows; the driver collects only their file set;
+    *  3. [[writeRowLevel]] — copy-on-write rewrites the touched files
+    *     (kept rows, images, upserts); merge-on-read DV-marks the
+    *     matched rows and appends images and upserts; one commit.
+    * `mergeOnRead` reads the mode off that same manifest, so a statement
+    * uses the mode of the snapshot it commits on. A rebase re-runs the
+    * whole pipeline against the snapshot that won (the losing attempt's
+    * batch is a vacuumable orphan). An operation that changes nothing
+    * commits nothing and returns the version it read. */
+  private def rowLevel(spark: SparkSession, dir: String, op: String,
+                       rows: RowMatch, change: RowChange,
+                       mergeOnRead: Manifest => Boolean, numFiles: Int,
+                       fromVersion: Option[Int], maxRetries: Int,
+                       epoch: Option[Long] = None): Int =
+    commitWithRebase(dir, fromVersion, maxRetries) { (_, m) =>
+    val mor = mergeOnRead(m)
+    lazy val schemaNow = m.schema.getOrElse(throw new IllegalStateException(
+      s"manifest at $dir records no schema"))
+    change match {
+      case Assign(sets) => sets.foreach { case (c, _) =>
+        require(schemaNow.fieldNames.contains(c),
+          s"UPDATE of unknown column $c (have ${schemaNow.fieldNames.mkString(",")})") }
+      case _ =>
+    }
+    val candidates = rows match {
+      case Where(p)              => predicateCandidates(spark, m, p)
+      case KeysIn(keys, keyCols) => pruneCandidates(m, keys, keyCols)
+    }
+    val (tagged, file, pos) = readTagged(spark, dir, m, candidates)
+    val matches = rows match {
+      // ≡ filter(matched): a filter drops a NULL condition, and the bare
+      // predicate still pushes down to the scan
+      case Where(p) => tagged.filter(p)
+      case KeysIn(keys, keyCols) => tagged.join(
+        keys.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
+    }
+    val touched =
       if (candidates.isEmpty) Set.empty[String]
-      else readEntries(spark, dir, m, candidates, tagged = true)
-        .join(updates.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
-        .select(col("_src_file")).distinct()
-        .collect().map(_.getString(0)).toSet
-    val touched = m.files.filter(f => touchedRel.contains(f.path))
-    val schemaNow = m.schema.getOrElse(updates.schema)
-    // the DV-aware reader: a touched file's deleted rows must not be
-    // resurrected by the rewrite (the rewrite also RETIRES its DV — the
-    // fresh entry carries none)
-    val touchedDf =
-      if (touched.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaNow)
-      else readEntries(spark, dir, m, touched)
-    // allowMissingColumns: updates may EVOLVE the schema (new columns
-    // null-fill in carried rows, and in carried FILES via the manifest
-    // schema) or omit columns (null-filled in the rewritten rows)
-    val rewritten = touchedDf.join(updates, keyCols, "left_anti")
-      .unionByName(updates, allowMissingColumns = true)
-    // a clustered table's REWRITTEN files must stay key-clustered
-    // (same law as compact): a round-robin reshape gives each rewritten
-    // file full-range stats, so every later merge/read would re-touch
-    // it forever — the shared shaping funnel range-repartitions on the
-    // stat columns (transform groups first on a transform-clustered
-    // table)
-    val files = writeShaped(rewritten, dir, numFiles, m.statsCols)
-    val v = base + 1
-    val evolved = m.schema.map(unionSchema(_, updates.schema))
-      .getOrElse(rewritten.schema)
+      else matches.select(col(file)).distinct()
+        .collect().map(_.getString(0)).toSet // O(#files) driver metadata
+    // SET assignments as a projection of the table's columns; `where`
+    // limits them to the matched rows of a copy-on-write rewrite
+    def assigned(sets: Seq[(String, String)], where: Option[Column]) =
+      schemaNow.fields.toSeq.map { f =>
+        sets.find(_._1 == f.name).fold(col(f.name)) { case (_, e) =>
+          val v = expr(e).cast(f.dataType)
+          where.fold(v)(when(_, v).otherwise(col(f.name))).as(f.name)
+        }
+      }
+    val rewrite: Option[DataFrame] =
+      if (touched.isEmpty) None
+      else if (mor) change match {
+        case Assign(sets) => Some(matches.select(assigned(sets, None): _*))
+        case _            => None
+      } else {
+        // the DV-aware reader: a touched file's deleted rows must not be
+        // resurrected by the rewrite (the rewrite also RETIRES its DV —
+        // the fresh entry carries none)
+        val kept = readEntries(spark, dir, m, m.files.filter(f => touched(f.path)))
+        Some((rows, change) match {
+          case (w: Where, Assign(sets)) => kept.select(assigned(sets, Some(w.matched)): _*)
+          case (_, Assign(_)) => throw new IllegalArgumentException(
+            "SET assignments need a predicate")
+          case (w: Where, _) => kept.filter(!w.matched)
+          case (KeysIn(keys, keyCols), _) => kept.join(keys, keyCols, "left_anti")
+        })
+      }
+    val inserts = Some(change).collect { case Upsert(updates) => updates }
+    // upserts may EVOLVE the schema (new columns null-fill in carried
+    // rows and files) or omit columns (null-filled in the written rows)
+    val schema = inserts.fold(m.schema)(u =>
+      Some(m.schema.map(unionSchema(_, u.schema)).getOrElse(u.schema)))
     // an epoch-stamped merge (the streaming-upsert path) records the
     // epoch in the SAME commit, under the carried range-set — the
     // idempotency law appendEpoch established (incl. its legacy-header
     // seeding, so upgrading a pre-range-set table never loses ids)
-    val headers = epoch match {
-      case Some(e) =>
-        val ranges = seededEpochRanges(dir, Some(m))
-        m.carried.filterNot(_._1 == "epochs") ++
-          Seq("epoch" -> e.toString,
-            "epochs" -> encodeRanges(addToRanges(ranges, e)))
-      case None => m.carried
-    }
-    commitDelta(dir, v, "merge", m, files, touched.map(_.path), Some(evolved),
-      headers)
-    v
+    val headers = epoch.fold(m.carried)(e =>
+      m.carried.filterNot(_._1 == "epochs") ++ Seq("epoch" -> e.toString,
+        "epochs" -> encodeRanges(addToRanges(seededEpochRanges(dir, Some(m)), e))))
+    writeRowLevel(spark, dir, m, op, mor, touched, rewrite, inserts,
+      matches.select(col(file).as("file"), col(pos).as("pos")),
+      numFiles, schema, headers)
   }
+
+  /** The write-and-commit step every row-level operation ends in.
+    * `touched` holds the relative paths of the files with a matched row.
+    *  - Copy-on-write: `rewrite` (the touched files' kept rows and
+    *    images) and `inserts` go out as one shaped batch that replaces
+    *    the touched files.
+    *  - Merge-on-read: `marked` ((file, pos) of the matched rows) joins
+    *    the touched files' deletion vectors, and `rewrite` (the images)
+    *    and `inserts` append as one shaped batch; no data file is
+    *    rewritten. The op is recorded as `<op>-dv`.
+    * Written batches keep the clustering law ([[writeShaped]]). An
+    * operation that changes nothing — no touched file, no insert row, the
+    * carried headers as they were — commits nothing and returns the
+    * version it read. */
+  private def writeRowLevel(spark: SparkSession, dir: String, m: Manifest,
+                            op: String, mergeOnRead: Boolean,
+                            touched: Set[String], rewrite: Option[DataFrame],
+                            inserts: Option[DataFrame], marked: DataFrame,
+                            numFiles: Int, schema: Option[StructType],
+                            headers: Seq[(String, String)]): Int =
+    if (touched.isEmpty && headers == m.carried &&
+      inserts.forall(_.limit(1).collect().isEmpty)) m.version
+    else {
+      val files = (rewrite.filter(_ => touched.nonEmpty) ++ inserts)
+        .reduceOption(_.unionByName(_, allowMissingColumns = true)).toSeq
+        .flatMap(writeShaped(_, dir, numFiles, m.statsCols))
+      val dvs =
+        if (mergeOnRead && touched.nonEmpty) attachDv(spark, dir, m, touched, marked)
+        else Nil
+      val v = m.version + 1
+      commitDelta(dir, v, if (mergeOnRead) s"$op-dv" else op, m, dvs ++ files,
+        touched.toSeq, schema, headers)
+      v
+    }
+
+  /** MERGE (upsert by `keyCols`): file-granular copy-on-write through
+    * the row-level core. Discovery is TWO-TIER: (1) manifest min/max
+    * stats prune files whose cluster-key range cannot contain any update
+    * key — pure driver metadata, no I/O; (2) one distributed semi-join
+    * over ONLY the surviving candidate files finds those that actually
+    * contain matched keys (driver collects only the FILE list). Touched
+    * files are rewritten as (their rows anti-joined on the update keys)
+    * ∪ updates — so updates replace matches and unmatched update rows
+    * are inserts — and every untouched file is carried by reference. If
+    * no file matches, the updates batch is a pure append (an empty one
+    * commits nothing). At 100 TB a narrow-key merge into a clustered
+    * table is therefore a covering-file read + single-file rewrite, not a
+    * table scan. Always copy-on-write: a `merge.mode` declaration governs
+    * the SQL MERGE routing ([[generalMerge]]), not this primitive. */
+  def merge(spark: SparkSession, dir: String, updates: DataFrame,
+            keyCols: Seq[String], numFiles: Int = 4,
+            fromVersion: Option[Int] = None,
+            maxRetries: Int = 5, epoch: Option[Long] = None): Int =
+    rowLevel(spark, dir, "merge", KeysIn(updates, keyCols), Upsert(updates),
+      _ => false, numFiles, fromVersion, maxRetries, epoch)
 
   /** EXACTLY-ONCE STREAMING UPSERT — the `foreachBatch` building block
     * (how every table format does streaming MERGE): an epoch-guarded
@@ -2489,81 +2594,38 @@ object SnapshotTable {
         .map(_.toLong)
         .foldLeft(Seq.empty[(Long, Long)])(addToRanges))
 
-  /** DELETE rows matching `predicate`: copy-on-write on the files that
-    * contain at least one matching row. Discovery reads only the files
-    * whose stats can match the predicate ([[predicateCandidates]]), and
-    * rewritten files keep recording cluster stats. */
+  /** DELETE the rows where `predicate` is TRUE, through the row-level
+    * core: a row whose predicate is NULL stays. Discovery reads only the
+    * files whose stats can match ([[predicateCandidates]]). The mode is
+    * the one the snapshot it commits on declares: copy-on-write rewrites
+    * the files holding a matched row (rewritten files keep recording
+    * cluster stats); `TBLPROPERTIES('delete.mode'='merge-on-read')` marks
+    * the rows in deletion vectors instead ([[deleteVectors]]). A
+    * predicate that matches no row commits nothing and returns the
+    * version it read. */
   def delete(spark: SparkSession, dir: String, predicate: String,
              numFiles: Int = 4, fromVersion: Option[Int] = None,
-             maxRetries: Int = 5): Int = commitWithRebase(
-      dir, fromVersion, maxRetries) { (base, m) =>
-    val touchedRel = readEntries(spark, dir, m,
-        predicateCandidates(spark, m, predicate), tagged = true)
-      .filter(predicate)
-      .select(col("_src_file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val touched = m.files.filter(f => touchedRel.contains(f.path))
-    val survivors =
-      if (touched.isEmpty) None
-      else Some(readEntries(spark, dir, m, touched)
-        .filter(s"NOT ($predicate)"))
-    // rewritten files stay key-clustered on a clustered table (the
-    // merge/compact law — round-robin would give them full-range
-    // stats), via the shared shaping funnel
-    val files = survivors match {
-      case None     => Seq.empty
-      case Some(df) => writeShaped(df, dir, numFiles, m.statsCols)
-    }
-    val v = base + 1
-    commitDelta(dir, v, "delete", m, files, touched.map(_.path), m.schema,
-      m.carried)
-    v
-  }
+             maxRetries: Int = 5): Int =
+    rowLevel(spark, dir, "delete", Where(predicate), Remove,
+      declaredMergeOnRead("deletemode"), numFiles, fromVersion, maxRetries)
 
-  /** UPDATE rows matching `predicate`: copy-on-write on the files that
-    * contain at least one matching row — the SQL `UPDATE t SET c = e
-    * WHERE p` primitive. `sets` maps column name -> SQL expression
-    * (evaluated against the row); non-matching rows in touched files are
-    * carried unchanged, untouched files by reference. Same clustering
-    * law as [[delete]]: rewritten files on a clustered table stay
-    * key-clustered. */
+  /** UPDATE the rows where `predicate` is TRUE — the SQL `UPDATE t SET
+    * c = e WHERE p` primitive, through the row-level core. `sets` maps
+    * column name -> SQL expression (evaluated against the row, cast to
+    * the column's declared type: ANSI rejects silent narrowing at run
+    * time); a row whose predicate is NULL keeps its values. The mode is
+    * the one the snapshot it commits on declares: copy-on-write rewrites
+    * the files holding a matched row (other rows carried unchanged,
+    * untouched files by reference, rewritten files key-clustered);
+    * `TBLPROPERTIES('update.mode'='merge-on-read')` takes the
+    * [[updateVectors]] form. A predicate that matches no row commits
+    * nothing and returns the version it read. */
   def update(spark: SparkSession, dir: String, predicate: String,
              sets: Seq[(String, String)], numFiles: Int = 4,
              fromVersion: Option[Int] = None,
-             maxRetries: Int = 5): Int = commitWithRebase(
-      dir, fromVersion, maxRetries) { (base, m) =>
-    val schemaNow = m.schema.getOrElse(throw new IllegalStateException(
-      s"manifest at $dir records no schema"))
-    sets.foreach { case (c, _) => require(schemaNow.fieldNames.contains(c),
-      s"UPDATE of unknown column $c (have ${schemaNow.fieldNames.mkString(",")})") }
-    val touchedRel = readEntries(spark, dir, m,
-        predicateCandidates(spark, m, predicate), tagged = true)
-        .filter(predicate)
-        .select(col("_src_file")).distinct()
-        .collect().map(_.getString(0)).toSet
-    val touched = m.files.filter(f => touchedRel.contains(f.path))
-    val files =
-      if (touched.isEmpty) Seq.empty
-      else {
-        val touchedDf = readEntries(spark, dir, m, touched)
-        // each SET column becomes CASE WHEN p THEN e ELSE old END; the
-        // cast keeps the column's declared type (ANSI rejects silent
-        // narrowing at runtime, same contract as SQL UPDATE)
-        val rewritten = touchedDf.select(schemaNow.fields.map { f =>
-          sets.find(_._1 == f.name) match {
-            case Some((_, e)) =>
-              when(expr(predicate), expr(e).cast(f.dataType))
-                .otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }.toSeq: _*)
-        writeShaped(rewritten, dir, numFiles, m.statsCols)
-      }
-    val v = base + 1
-    commitDelta(dir, v, "update", m, files, touched.map(_.path), m.schema,
-      m.carried)
-    v
-  }
+             maxRetries: Int = 5): Int =
+    rowLevel(spark, dir, "update", Where(predicate), Assign(sets),
+      declaredMergeOnRead("updatemode"), numFiles, fromVersion, maxRetries)
 
   /** DELETE-BY-KEY (the `MERGE … WHEN MATCHED THEN DELETE` primitive):
     * remove the rows whose `keyCols` appear in `keys`, with [[merge]]'s
@@ -2571,33 +2633,18 @@ object SnapshotTable {
     * on the keys' bounding box first, then one semi-join finds the files
     * actually holding matches; only those rewrite (anti-join on the
     * keys), untouched files carry by reference. A narrow-key delete into
-    * a clustered 100 TB table is a covering-file rewrite, not a scan. */
+    * a clustered 100 TB table is a covering-file rewrite, not a scan.
+    * Always copy-on-write, like [[merge]]. */
   def deleteMatched(spark: SparkSession, dir: String, keys: DataFrame,
                     keyCols: Seq[String], numFiles: Int = 4,
                     fromVersion: Option[Int] = None,
-                    maxRetries: Int = 5): Int = commitWithRebase(
-      dir, fromVersion, maxRetries) { (base, m) =>
-    val keysOnly = keys.select(keyCols.map(col): _*).distinct()
-    val candidates = pruneCandidates(m, keysOnly, keyCols)
-    val touchedRel =
-      if (candidates.isEmpty) Set.empty[String]
-      else readEntries(spark, dir, m, candidates, tagged = true)
-        .join(keysOnly, keyCols, "left_semi")
-        .select(col("_src_file")).distinct()
-        .collect().map(_.getString(0)).toSet
-    val touched = m.files.filter(f => touchedRel.contains(f.path))
-    val files =
-      if (touched.isEmpty) Seq.empty
-      else {
-        val survivors = readEntries(spark, dir, m, touched)
-          .join(keysOnly, keyCols, "left_anti")
-        writeShaped(survivors, dir, numFiles, m.statsCols)
-      }
-    val v = base + 1
-    commitDelta(dir, v, "delete", m, files, touched.map(_.path), m.schema,
-      m.carried)
-    v
-  }
+                    maxRetries: Int = 5): Int =
+    rowLevel(spark, dir, "delete", KeysIn(keys, keyCols), Remove,
+      _ => false, numFiles, fromVersion, maxRetries)
+
+  /** The marker columns of [[generalMerge]]'s joined-row namespace —
+    * no table column may take one of these names. */
+  private val MergeMarkers = Set("_s_exists", "_t_exists", "_action", "_rn", "_ins")
 
   /** One action clause of a [[generalMerge]]. `kind` is `"update"`,
     * `"delete"` or `"insert"`; `condition` is an optional SQL predicate
@@ -2655,7 +2702,7 @@ object SnapshotTable {
                    notMatchedBySource: Seq[MergeClause],
                    numFiles: Int = 4, fromVersion: Option[Int] = None,
                    maxRetries: Int = 5): Int = commitWithRebase(
-      dir, fromVersion, maxRetries) { (base, m) =>
+      dir, fromVersion, maxRetries) { (_, m) =>
     val schemaNow = m.schema.getOrElse(throw new IllegalStateException(
       s"manifest at $dir records no schema"))
     matched.foreach(c => require(c.kind == "update" || c.kind == "delete",
@@ -2669,12 +2716,9 @@ object SnapshotTable {
     // the joined-row namespace reserves marker names; a user column
     // that would collide (a source column named `exists` renames to
     // the `_s_exists` marker, a target column named `_action` would be
-    // clobbered by withColumn, either side named `_src_file`/`_src_pos`
-    // would be clobbered by the tagged reader's row-identity columns)
-    // must fail LOUDLY — silent clobbering would produce wrong merge
-    // results (or corrupt DV keying) with no error
-    val reserved = Set("_s_exists", "_t_exists", "_action", "_rn", "_ins",
-      "_src_file", "_src_pos")
+    // clobbered by withColumn) must fail LOUDLY — silent clobbering
+    // would produce wrong merge results with no error. The row identity
+    // needs no reservation: the tagged read names it apart
     // every explicit assignment target must resolve to a declared
     // column — Spark's default resolution is case-insensitive, and the
     // parsed SnapshotSql route delivers raw attribute text, so a
@@ -2694,10 +2738,10 @@ object SnapshotTable {
     val notMatchedBySourceN =
       notMatchedBySource.map(normalizeSets(_, "UPDATE SET"))
     source.columns.foreach(c => require(
-      !reserved.contains(s"_s_$c") && !reserved.contains(c),
+      !MergeMarkers(s"_s_$c") && !MergeMarkers(c),
       s"MERGE source column `$c` collides with an internal marker name"))
     schemaNow.fieldNames.foreach(c => require(
-      !reserved.contains(c) && !(c.startsWith("_s_") &&
+      !MergeMarkers(c) && !(c.startsWith("_s_") &&
         srcCols.contains(c.stripPrefix("_s_"))),
       s"MERGE target column `$c` collides with the joined-row namespace"))
     val srcR = source
@@ -2712,8 +2756,8 @@ object SnapshotTable {
     val candidates =
       if (notMatchedBySource.nonEmpty || prunable.isEmpty) m.files
       else pruneCandidates(m, source, prunable)
-    val tagged = readEntries(spark, dir, m, candidates, tagged = true)
-      .withColumn("_t_exists", lit(true))
+    val (targetRows, file, pos) = readTagged(spark, dir, m, candidates)
+    val tagged = targetRows.withColumn("_t_exists", lit(true))
     val joinType = if (notMatchedN.nonEmpty) "full_outer" else "left_outer"
     val tEx = coalesce(col("_t_exists"), lit(false))
     val sEx = coalesce(col("_s_exists"), lit(false))
@@ -2743,7 +2787,7 @@ object SnapshotTable {
       if (matchedN.nonEmpty) {
         val dup = joined
           .filter(tEx && sEx && col("_action").isNotNull)
-          .groupBy(col("_src_file"), col("_src_pos"))
+          .groupBy(col(file), col(pos))
           .agg(count(lit(1)).as("_n")).agg(max(col("_n"))).head().get(0)
         if (dup != null && dup.asInstanceOf[Long] > 1L)
           throw new IllegalStateException(
@@ -2751,15 +2795,14 @@ object SnapshotTable {
               "than one applicable source row; make the ON condition " +
               "or the clause conditions more selective")
       }
-      val touchedRel = joined
-        .filter(tEx && col("_action").isNotNull)
-        .select(col("_src_file")).distinct()
+      val actioned = joined.filter(tEx && col("_action").isNotNull)
+      val touchedRel = actioned.select(col(file)).distinct()
         .collect().map(_.getString(0)).toSet // O(#files) driver metadata
       // one representative row per (file, pos) target row in a touched
       // file: the applied pair if one exists (cardinality-checked ≤ 1),
       // else any pair — a carried row uses only its target columns
       val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("_src_file"), col("_src_pos"))
+        .partitionBy(col(file), col(pos))
         .orderBy(col("_action").asc_nulls_last)
       val deleteActions: Seq[Int] =
         matchedN.zipWithIndex.collect { case (c, i) if c.kind == "delete" => i } ++
@@ -2804,71 +2847,25 @@ object SnapshotTable {
           }
           perClause.reduceOption(_ unionByName _)
         }
-      if (m.header.getOrElse("mergemode", "copy-on-write")
-          == "merge-on-read") {
-        // MERGE-ON-READ write phase: every actioned target row (update
-        // OR delete) is DV-marked in its untouched file, updated rows'
-        // rewritten IMAGES and the inserts append as one fresh batch —
-        // a narrow streaming upsert into a 100 TB table writes
-        // O(actioned rows), never a covering-file rewrite. The
-        // cardinality check already guarantees ≤ 1 applied pair per
-        // target row, so no per-row dedup window is needed here.
-        val actioned = joined.filter(tEx && col("_action").isNotNull)
-        val images =
-          if (updateByAction.isEmpty) None
-          else Some(actioned
-            .filter(if (deleteActions.isEmpty) lit(true)
-              else !col("_action").isin(deleteActions: _*))
-            .select(outCols: _*))
-        val appended = (images, inserts) match {
-          case (Some(a), Some(b)) => Some(a.unionByName(b))
-          case (a, b)             => a.orElse(b)
-        }
-        if (touchedRel.isEmpty &&
-          appended.forall(df => df.limit(1).collect().isEmpty)) base
-        else {
-          val newFiles = appended match {
-            case None     => Seq.empty
-            case Some(df) => writeShaped(df, dir, numFiles, m.statsCols)
-          }
-          val entries =
-            if (touchedRel.isEmpty) Seq.empty
-            else attachDv(spark, dir, m, touchedRel,
-              actioned.select(col("_src_file").as("file"),
-                col("_src_pos").as("pos")))
-          val v = base + 1
-          commitDelta(dir, v, "merge-dv", m, entries ++ newFiles,
-            touchedRel.toSeq, m.schema, m.carried)
-          v
-        }
-      } else {
-      val survivors =
-        if (touchedRel.isEmpty) None
+      val kept =
+        if (deleteActions.isEmpty) lit(true)
+        else col("_action").isNull || !col("_action").isin(deleteActions: _*)
+      val mor = declaredMergeOnRead("mergemode")(m)
+      // merge-on-read: every actioned target row (update OR delete) is
+      // DV-marked and the updated rows' IMAGES append with the inserts —
+      // a narrow streaming upsert writes O(actioned rows); the
+      // cardinality check already guarantees ≤ 1 applied pair per target
+      // row. Copy-on-write: one representative row per target row of a
+      // touched file, deleted rows dropped, rewrites the file.
+      val rewrite =
+        if (mor) Some(actioned).filter(_ => updateByAction.nonEmpty)
         else Some(joined
-          .filter(tEx && col("_src_file").isin(touchedRel.toSeq: _*))
-          .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-          .filter(if (deleteActions.isEmpty) lit(true)
-            else col("_action").isNull ||
-              !col("_action").isin(deleteActions: _*))
-          .select(outCols: _*))
-      val out = (survivors, inserts) match {
-        case (Some(s), Some(i)) => Some(s.unionByName(i))
-        case (s, i)             => s.orElse(i)
-      }
-      // nothing touched and no insert rows → no-op, commit nothing
-      if (touchedRel.isEmpty &&
-        out.forall(df => df.limit(1).collect().isEmpty)) base
-      else {
-        val files = out match {
-          case None     => Seq.empty
-          case Some(df) => writeShaped(df, dir, numFiles, m.statsCols)
-        }
-        val v = base + 1
-        commitDelta(dir, v, "merge", m, files, touchedRel.toSeq, m.schema,
-          m.carried)
-        v
-      }
-      }
+          .filter(tEx && col(file).isin(touchedRel.toSeq: _*))
+          .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1))
+      writeRowLevel(spark, dir, m, "merge", mor, touchedRel,
+        rewrite.map(_.filter(kept).select(outCols: _*)), inserts,
+        actioned.select(col(file).as("file"), col(pos).as("pos")),
+        numFiles, m.schema, m.carried)
     } finally joined.unpersist()
   }
 
@@ -2877,9 +2874,8 @@ object SnapshotTable {
   private val DvSchema =
     new StructType().add("file", StringType).add("pos", LongType)
 
-  /** Shared DV-attach step of the merge-on-read writers
-    * ([[deleteVectors]], [[updateVectors]], and [[generalMerge]] in
-    * merge-on-read mode): write ONE dv batch holding `newRows`
+  /** The DV-attach step of the merge-on-read row-level writes
+    * ([[writeRowLevel]]): write ONE dv batch holding `newRows`
     * ((file, pos) pairs) unioned with the touched files' existing
     * deletion sets (each entry points at a single batch), and return
     * ONLY the touched files' entries re-pointed at it — the O(delta)
@@ -2904,110 +2900,41 @@ object SnapshotTable {
     touched.map(_.copy(dv = Some(batch)))
   }
 
-  /** MERGE-ON-READ DELETE (deletion vectors): mark the rows matching
-    * `predicate` deleted WITHOUT rewriting their files — the point-
-    * delete path every modern table format grew, because copy-on-write
-    * turns a 10-row delete into a rewrite of every covering file (at
-    * 100 TB: gigabytes of write amplification for bytes of intent).
+  /** MERGE-ON-READ DELETE (deletion vectors): [[delete]] in the
+    * merge-on-read mode whatever the table declares — mark the rows
+    * where `predicate` is TRUE deleted WITHOUT rewriting their files,
+    * the point-delete path every modern table format grew, because
+    * copy-on-write turns a 10-row delete into a rewrite of every
+    * covering file (at 100 TB: gigabytes of write amplification for
+    * bytes of intent).
     *
     * Mechanics: one scan finds the matching (file, row-position) pairs
     * among the LIVE rows (existing DVs applied — re-deleting is a
     * no-op); positions are written as a small parquet batch under
     * `dir/dv/`, and the new manifest re-points each touched file's entry
-    * at its (old ∪ new) deletion set. Data files are untouched, so time
-    * travel to pre-delete versions still sees the rows, and vacuum
-    * reclaims DV batches exactly like data batches. Every reader —
-    * [[read]], [[readWhere]]/[[readWhereIn]], and the CoW discovery
-    * scans — routes through the one DV-aware entry reader, so the
-    * deleted rows are invisible everywhere; a later CoW rewrite of a
-    * touched file (merge/update/delete/compact) MATERIALIZES the DV away
-    * (the fresh entry carries none). Cost: O(matching rows) DV write +
-    * O(#files) metadata; the read-side price is a broadcast anti-join on
-    * (file, pos) — keep DVs point-delete-sized and [[compact]] when
-    * they accumulate (the classic MoR maintenance contract).
-    * Returns the new version (or the current one if nothing matched —
-    * a no-match delete commits nothing). */
+    * at its (old ∪ new) deletion set (op `delete-dv`). Data files are
+    * untouched, so time travel to pre-delete versions still sees the
+    * rows, and vacuum reclaims DV batches exactly like data batches.
+    * Every reader — [[read]], [[readWhere]]/[[readWhereIn]], and the
+    * row-level discovery scans — routes through the one DV-aware entry
+    * reader, so the deleted rows are invisible everywhere; a later CoW
+    * rewrite of a touched file (merge/update/delete/compact)
+    * MATERIALIZES the DV away (the fresh entry carries none). Cost:
+    * O(matching rows) DV write + O(#files) metadata; the read-side price
+    * is a broadcast anti-join on (file, pos) — keep DVs
+    * point-delete-sized and [[compact]] when they accumulate (the
+    * classic MoR maintenance contract). Returns the new version (or the
+    * current one if nothing matched — a no-match delete commits
+    * nothing). */
   def deleteVectors(spark: SparkSession, dir: String, predicate: String,
                     fromVersion: Option[Int] = None,
-                    maxRetries: Int = 5): Int = commitWithRebase(
-      dir, fromVersion, maxRetries) { (base, m) =>
-    // the tagged reader appends `_src_file`/`_src_pos` row-identity
-    // columns; a same-named TABLE column would be silently clobbered
-    // and corrupt the DV keying — refuse loudly (generalMerge's
-    // reserved-namespace law)
-    m.schema.foreach(s => Seq("_src_file", "_src_pos").foreach(c =>
-      require(!s.fieldNames.contains(c),
-        s"table column `$c` collides with the row-identity namespace")))
-    val matches = readEntries(spark, dir, m,
-        predicateCandidates(spark, m, predicate), tagged = true)
-      .filter(predicate)
-      .select(col("_src_file").as("file"), col("_src_pos").as("pos"))
-    val touchedRel = matches.select(col("file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (touchedRel.isEmpty) base
-    else {
-      val files = attachDv(spark, dir, m, touchedRel, matches)
-      val v = base + 1
-      commitDelta(dir, v, "delete-dv", m, files, touchedRel.toSeq, m.schema,
-        m.carried)
-      v
-    }
-  }
+                    maxRetries: Int = 5): Int =
+    rowLevel(spark, dir, "delete", Where(predicate), Remove, _ => true,
+      numFiles = 1, fromVersion, maxRetries)
 
-  /** The table's declared DELETE mode: `"merge-on-read"` routes SQL
-    * DELETE to [[deleteVectors]] (declared at create time via
-    * `TBLPROPERTIES('delete.mode'='merge-on-read')`), anything else is
-    * the default copy-on-write. */
-  def deleteModeOf(dir: String): String =
-    if (latestVersion(dir) < 1) "copy-on-write"
-    else readManifest(dir, latestVersion(dir)).header
-      .getOrElse("deletemode", "copy-on-write")
-
-  /** The table's declared UPDATE mode — same contract as
-    * [[deleteModeOf]] for `TBLPROPERTIES('update.mode'=…)` and
-    * [[updateVectors]]. */
-  def updateModeOf(dir: String): String =
-    if (latestVersion(dir) < 1) "copy-on-write"
-    else readManifest(dir, latestVersion(dir)).header
-      .getOrElse("updatemode", "copy-on-write")
-
-  /** The table's declared CHECK constraint predicate, if any —
-    * enforced by the shared batch-write funnel on every data write. */
-  def checkOf(dir: String): Option[String] =
-    if (latestVersion(dir) < 1) None
-    else readManifest(dir, latestVersion(dir)).header.get("check")
-      .map(FileEntry.dec)
-
-  /** ONE-read bundle of the mutable table properties (the row-level
-    * modes + check) — the SHOW TBLPROPERTIES surface; the per-property
-    * accessors each cost a manifest read, so the catalog uses this. */
-  def tableProps(dir: String,
-                 versionAsOf: Option[Int] = None): Map[String, String] = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
-    if (v < 1) Map.empty
-    else {
-      val h = readManifest(dir, v).header
-      (h.get("deletemode").map("delete.mode" -> _) ++
-        h.get("updatemode").map("update.mode" -> _) ++
-        h.get("mergemode").map("merge.mode" -> _) ++
-        h.get("check").map(c => "check" -> FileEntry.dec(c)) ++
-        h.get("bloomcols").map("bloomcols" -> _) ++
-        h.get("bloombits").map("bloombits" -> _)).toMap
-    }
-  }
-
-  /** The table's declared MERGE mode — `"merge-on-read"`
-    * (`TBLPROPERTIES('merge.mode'='merge-on-read')`) makes
-    * [[generalMerge]] DV-mark actioned rows and append images instead
-    * of rewriting touched files (and routes the star-upsert fast path
-    * through the general executor). */
-  def mergeModeOf(dir: String): String =
-    if (latestVersion(dir) < 1) "copy-on-write"
-    else readManifest(dir, latestVersion(dir)).header
-      .getOrElse("mergemode", "copy-on-write")
-
-  /** MERGE-ON-READ UPDATE: the point-update twin of [[deleteVectors]] —
-    * the rows matching `predicate` are DV-marked deleted in their
+  /** MERGE-ON-READ UPDATE: [[update]] in the merge-on-read mode whatever
+    * the table declares, the point-update twin of [[deleteVectors]] —
+    * the rows where `predicate` is TRUE are DV-marked deleted in their
     * (untouched) files AND their rewritten images (the `sets`
     * assignments applied, values CAST to the declared types) are
     * appended as a fresh batch, all in ONE commit (op `update-dv`). A
@@ -3022,47 +2949,33 @@ object SnapshotTable {
   def updateVectors(spark: SparkSession, dir: String, predicate: String,
                     sets: Seq[(String, String)], numFiles: Int = 1,
                     fromVersion: Option[Int] = None,
-                    maxRetries: Int = 5): Int = commitWithRebase(
-      dir, fromVersion, maxRetries) { (base, m) =>
-    val schemaNow = m.schema.getOrElse(throw new IllegalStateException(
-      s"manifest at $dir records no schema"))
-    sets.foreach { case (c, _) => require(schemaNow.fieldNames.contains(c),
-      s"UPDATE of unknown column $c (have ${schemaNow.fieldNames.mkString(",")})") }
-    // tagged-reader row-identity namespace (see deleteVectors)
-    Seq("_src_file", "_src_pos").foreach(c =>
-      require(!schemaNow.fieldNames.contains(c),
-        s"table column `$c` collides with the row-identity namespace"))
-    if (m.files.isEmpty) base
+                    maxRetries: Int = 5): Int =
+    rowLevel(spark, dir, "update", Where(predicate), Assign(sets), _ => true,
+      numFiles, fromVersion, maxRetries)
+
+  /** The table's declared CHECK constraint predicate, if any —
+    * enforced by the shared batch-write funnel on every data write. */
+  def checkOf(dir: String): Option[String] =
+    if (latestVersion(dir) < 1) None
+    else readManifest(dir, latestVersion(dir)).header.get("check")
+      .map(FileEntry.dec)
+
+  /** ONE-read bundle of the mutable table properties (the row-level
+    * modes + check) — the SHOW TBLPROPERTIES surface. The row-level
+    * writers read their mode off the manifest they commit on, not from
+    * here. */
+  def tableProps(dir: String,
+                 versionAsOf: Option[Int] = None): Map[String, String] = {
+    val v = versionAsOf.getOrElse(latestVersion(dir))
+    if (v < 1) Map.empty
     else {
-      val matches = readEntries(spark, dir, m,
-          predicateCandidates(spark, m, predicate), tagged = true)
-        .filter(predicate)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val touchedRel = matches.select(col("_src_file")).distinct()
-          .collect().map(_.getString(0)).toSet // O(#files) driver metadata
-        if (touchedRel.isEmpty) base
-        else {
-          // the rewritten images of the matched rows (no CASE needed —
-          // every row here matched the predicate)
-          val rewritten = matches.select(schemaNow.fields.toSeq.map { f =>
-            sets.find(_._1 == f.name) match {
-              case Some((_, e)) => expr(e).cast(f.dataType).as(f.name)
-              case None         => col(f.name)
-            }
-          }: _*)
-          val newFiles = writeShaped(rewritten, dir, numFiles, m.statsCols)
-          // DV rows: the matched positions, unioned with the touched
-          // files' existing deletion sets by the shared attach step
-          val entries = attachDv(spark, dir, m, touchedRel,
-            matches.select(col("_src_file").as("file"),
-              col("_src_pos").as("pos")))
-          val v = base + 1
-          commitDelta(dir, v, "update-dv", m, entries ++ newFiles,
-            touchedRel.toSeq, m.schema, m.carried)
-          v
-        }
-      } finally matches.unpersist()
+      val h = readManifest(dir, v).header
+      (h.get("deletemode").map("delete.mode" -> _) ++
+        h.get("updatemode").map("update.mode" -> _) ++
+        h.get("mergemode").map("merge.mode" -> _) ++
+        h.get("check").map(c => "check" -> FileEntry.dec(c)) ++
+        h.get("bloomcols").map("bloomcols" -> _) ++
+        h.get("bloombits").map("bloombits" -> _)).toMap
     }
   }
 
@@ -3695,9 +3608,8 @@ object SnapshotTable {
           s"no column $oldName in ${cur.fieldNames.mkString(",")}"))
       require(!cur.fieldNames.exists(_.equalsIgnoreCase(newName)),
         s"column $newName already exists")
-      require(!newName.startsWith("_s_") && !Set("_src_file", "_src_pos",
-        "_t_exists", "_s_exists", "_action", "_rn", "_ins")(newName),
-        s"$newName collides with the merge/row-identity namespace")
+      require(!newName.startsWith("_s_") && !MergeMarkers(newName),
+        s"$newName collides with the merge namespace")
       m.header.get("check").map(FileEntry.dec).foreach(pred =>
         require(!predReferences(pred, f.name),
           s"cannot rename ${f.name}: referenced by CHECK ($pred); drop " +
@@ -3935,9 +3847,8 @@ object SnapshotTable {
           s"no column $oldName in ${fields.keys.mkString(",")}"))
       require(!fields.keys.exists(_.equalsIgnoreCase(newName)),
         s"column $newName already exists")
-      require(!newName.startsWith("_s_") && !Set("_src_file", "_src_pos",
-        "_t_exists", "_s_exists", "_action", "_rn", "_ins")(newName),
-        s"$newName collides with the merge/row-identity namespace")
+      require(!newName.startsWith("_s_") && !MergeMarkers(newName),
+        s"$newName collides with the merge namespace")
       checkPred.foreach(pred => require(!predReferences(pred, f.name),
         s"cannot rename ${f.name}: referenced by CHECK ($pred); drop " +
           "the constraint first (ALTER … SET TBLPROPERTIES)"))

@@ -130,9 +130,9 @@ case class SnapshotDmlCommand(kind: String, dir: String,
   override def run(spark: SparkSession): Seq[Row] = {
     kind match {
       case "delete" =>
-        SnapshotSql.runDelete(spark, dir, condSql.getOrElse("true"))
+        SnapshotTable.delete(spark, dir, condSql.getOrElse("true"))
       case "update" =>
-        SnapshotSql.runUpdateSets(spark, dir, condSql.getOrElse("true"), sets)
+        SnapshotTable.update(spark, dir, condSql.getOrElse("true"), sets)
       case "merge" =>
         val src = GraftSqlShims.ofRows(spark, source.get)
         // MERGE WITH SCHEMA EVOLUTION: the evolve commit happens at RUN

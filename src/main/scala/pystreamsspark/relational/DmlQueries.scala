@@ -187,7 +187,7 @@ object DmlQueries {
 
   /** MERGE-ON-READ `DELETE` by SQL: the q_sql_delete fixture on a
     * `TBLPROPERTIES('delete.mode'='merge-on-read')` table — the DELETE
-    * routes to [[pystreamsspark.io.SnapshotTable.deleteVectors]] (a
+    * takes the [[pystreamsspark.io.SnapshotTable.deleteVectors]] form (a
     * (file, row-position) sidecar write, ZERO data-file rewrites —
     * asserted here), and the answer reads through the DV-aware reader.
     * Same oracle as q_sql_delete: a green row proves the DV read path

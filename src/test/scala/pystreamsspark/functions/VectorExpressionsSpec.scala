@@ -202,4 +202,16 @@ class VectorExpressionsSpec extends SparkSpec {
       .collect()(0).getDouble(0)
     assert(r === 11.0)
   }
+
+  test("a second register replaces nothing in the function registry") {
+    VectorExpressions.register(spark)
+    val registry = spark.sessionState.functionRegistry
+    def infos = VectorExpressions.functions.map { case (name, _, _) =>
+      registry.lookupFunction(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name)).get }
+    val before = infos
+    VectorExpressions.register(spark)
+    // a replacing registration builds a fresh ExpressionInfo per name
+    assert(infos.zip(before).forall { case (a, b) => a eq b })
+  }
 }

@@ -106,7 +106,8 @@ class CheckConstraintSpec extends SparkSpec {
     // ...and back to the default removes the header
     spark.sql(s"ALTER TABLE graft.ck.$t SET TBLPROPERTIES(" +
       "'delete.mode'='copy-on-write')")
-    assert(SnapshotTable.deleteModeOf(dir) === "copy-on-write")
+    assert(SnapshotTable.tableProps(dir)
+      .getOrElse("delete.mode", "copy-on-write") === "copy-on-write")
     // r12: clustercols EVOLVES (partition-spec evolution — the new
     // write law applies to future batches); the hash-bucket layout
     // stays fixed at create (its file shape is a hard contract)
