@@ -33,7 +33,11 @@ object Bench {
         fn(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
       }
-      val t = try { run(); Seq.fill(5)(run()).min } catch { case _: Throwable => -1.0 }
+      val t = try { run(); Seq.fill(5)(run()).min } catch {
+        case e: Throwable =>
+          System.err.println(SparkEntry.failure(name, e))
+          -1.0
+      }
       name -> t
     }
     // round to ms: halves the line length (the round-1 driver failed to

@@ -30,4 +30,10 @@ object SparkEntry {
       ExtraQueries.oracle ++ PipelineQueries.oracle ++ StorageQueries.oracle ++
       GraphQueries.oracle ++ AnalyticsQueries.oracle ++ LayoutQueries.oracle ++
       DriftQueries.oracle ++ DmlQueries.oracle
+
+  /** The stderr line Bench and Verify print for a key that threw:
+    * `<key> failed: <exception class>: <message> at <first stack frame>`. */
+  private[graft] def failure(key: String, e: Throwable): String =
+    s"$key failed: ${e.getClass.getName}: ${e.getMessage} at " +
+      e.getStackTrace.headOption.getOrElse("<no stack trace>")
 }

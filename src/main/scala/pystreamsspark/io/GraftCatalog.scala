@@ -118,6 +118,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     load(ident, Some(v))
   }
 
+  /** The table at its version `v` (the latest when None), resolved
+    * once: the one listing that finds the latest version also decides
+    * whether the table exists. */
   private def load(ident: Identifier, v: Option[Int]): SnapshotV2Table = {
     val dir = tableDir(ident)
     // a graft VIEW is not a V2 table — its body inlines at the SQL
@@ -126,10 +129,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // probes loadTable BEFORE the injected view rule runs in the same
     // fixpoint iteration, and only a table-miss lets resolution fall
     // through to the rule (any other throw aborts analysis outright).
-    if (!isTable(dir)) throw new NoSuchTableException(ident)
+    val latest = SnapshotTable.latestVersion(dir)
+    if (latest < 1) throw new NoSuchTableException(ident)
     new SnapshotV2Table(
       (catName +: (ident.namespace() :+ ident.name())).mkString("."),
-      dir, v)
+      dir, v, SnapshotTable.snapshot(dir, Some(v.getOrElse(latest))))
   }
 
   override def tableExists(ident: Identifier): Boolean =
@@ -392,15 +396,31 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   * commit protocol (put-if-absent publish, rebase, epochs) is the
   * transaction boundary, and the DML rule / [[SnapshotSql]] route
   * INSERT/UPDATE/DELETE/MERGE onto [[SnapshotTable]]'s clustered
-  * copy-on-write machinery instead. */
-class SnapshotV2Table(fullName: String, val dir: String,
-                      val versionAsOf: Option[Int])
+  * copy-on-write machinery instead.
+  *
+  * PINNED READS: the table resolves its [[SnapshotTable.Snapshot]] once,
+  * when it is constructed (the catalog constructs it at load), and
+  * `schema`, `properties()`, the deletion-vector and column-mapping
+  * refusals, the scan's files, buckets, row count and CBO stats all
+  * come from that one value. A frame analyzed from a catalog table
+  * therefore answers from the version it was analyzed at, however many
+  * commits land before its action runs; a new SQL statement or
+  * `spark.table` call loads the table again and sees the latest commit.
+  * `versionAsOf` is the version the caller asked for (None = latest at
+  * load), which only decides whether the table takes writes. */
+class SnapshotV2Table private[io] (fullName: String, val dir: String,
+                                   val versionAsOf: Option[Int],
+                                   val snapshot: SnapshotTable.Snapshot)
   extends Table with SupportsRead with SupportsWrite {
+
+  def this(fullName: String, dir: String, versionAsOf: Option[Int]) =
+    this(fullName, dir, versionAsOf, SnapshotTable.snapshot(dir, versionAsOf))
 
   override def name(): String = fullName
 
-  override lazy val schema: StructType =
-    SnapshotTable.schemaOf(dir, versionAsOf)
+  override lazy val schema: StructType = snapshot.schema.getOrElse(
+    throw new IllegalStateException(s"manifest v${snapshot.version} at " +
+      s"$dir records no schema"))
 
   // Batch writes are V1-FALLBACK (V1_BATCH_WRITE): the insert arrives
   // as a driver-side DataFrame and maps 1:1 onto the manifest commit
@@ -444,28 +464,20 @@ class SnapshotV2Table(fullName: String, val dir: String,
   }
 
   override def properties(): util.Map[String, String] = {
-    val v = versionAsOf.getOrElse(SnapshotTable.latestVersion(dir))
     val layout =
-      SnapshotTable.statsColsOfPublic(dir, versionAsOf) match {
-        case cols if cols.nonEmpty =>
-          // a transform-clustered table SHOWs its declared specs, not
-          // the derived source-column list
-          Map("clustercols" -> (SnapshotTable.transformSpecsOf(dir,
-            versionAsOf) match {
-            case ts if ts.exists(!_.isIdentity) =>
-              ts.map(_.spec).mkString(",")
-            case _ => cols.mkString(",")
-          }))
-        case _ => SnapshotTable.bucketSpecOf(dir, versionAsOf) match {
-          case Some((c, n)) =>
-            Map("bucketcols" -> c, "buckets" -> n.toString)
-          case None => Map.empty[String, String]
-        }
+      if (snapshot.statsCols.nonEmpty)
+        // a transform-clustered table SHOWs its declared specs, not the
+        // derived source-column list
+        Map("clustercols" -> (snapshot.transforms match {
+          case ts if ts.exists(!_.isIdentity) => ts.map(_.spec).mkString(",")
+          case _ => snapshot.statsCols.mkString(",")
+        }))
+      else snapshot.bucketSpec match {
+        case Some((c, n)) => Map("bucketcols" -> c, "buckets" -> n.toString)
+        case None => Map.empty[String, String]
       }
-    // one manifest read serves all mutable properties (modes + check)
-    val rowLevel = SnapshotTable.tableProps(dir, versionAsOf)
-    (Map("location" -> dir, "version" -> v.toString,
-      "provider" -> "graft-snapshot") ++ layout ++ rowLevel).asJava
+    (Map("location" -> dir, "version" -> snapshot.version.toString,
+      "provider" -> "graft-snapshot") ++ layout ++ snapshot.tableProps).asJava
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
@@ -476,7 +488,7 @@ class SnapshotV2Table(fullName: String, val dir: String,
     // a plain session — refuse loudly rather than resurrect deleted
     // rows (compact()/OPTIMIZE materializes DVs away and restores plain
     // readability).
-    if (SnapshotTable.hasDeletionVectors(dir, versionAsOf))
+    if (snapshot.hasDeletionVectors)
       throw new UnsupportedOperationException(
         s"$fullName carries deletion vectors (merge-on-read DELETE/" +
           "UPDATE); read it on a GraftExtensions session (DV-aware " +
@@ -484,34 +496,21 @@ class SnapshotV2Table(fullName: String, val dir: String,
     // same law for COLUMN MAPPING: a raw file scan reads physical
     // names, so a renamed snapshot needs the logical projection — the
     // extensions rule rewrites it; a plain session refuses loudly
-    if (SnapshotTable.hasColumnMapping(dir, versionAsOf))
+    if (snapshot.colmap.nonEmpty)
       throw new UnsupportedOperationException(
         s"$fullName has renamed columns (column mapping); read it on a " +
           "GraftExtensions session, via SnapshotTable.read, or " +
           "OPTIMIZE/compact() first to materialize the mapping")
     // planned from the manifest: one driver stat per file, no listing
-    // job, and pushed-down filters skip files by their stats
-    val v = versionAsOf.getOrElse(SnapshotTable.latestVersion(dir))
-    val index = SnapshotTable.manifestIndex(GraftSqlShims.activeClassic(),
-      dir, v)
-    // the ParquetScanBuilder SUBCLASS: full native pushdown inherited
-    // for batch, plus toMicroBatchStream for `readStream.table(...)`,
-    // plus KeyGroupedPartitioning on bucketed tables (zero-shuffle SPJ).
-    // Bucketed-scan mode needs EVERY live file to carry a bucket id —
-    // a file written outside the bucket law (e.g. a streamed append,
-    // whose partitioning belongs to the query) has none, and the scan
-    // must degrade to the plain split plan rather than guess.
-    val buckets = SnapshotTable.fileBuckets(dir, versionAsOf)
-    val allBucketed = buckets.size == index.allFiles().size
-    new GraftScanBuilder(dir, index, schema, GraftSqlShims.asNullable(schema),
-      options,
-      SnapshotTable.bucketSpecOf(dir, versionAsOf),
-      if (allBucketed) buckets else Map.empty,
-      // exact snapshot row count (manifest footer sums) → CBO numRows,
-      // plus the recorded ANALYZE column stats → CBO columnStats
-      SnapshotTable.rowCountOf(dir, versionAsOf),
-      SnapshotTable.columnStatsOf(dir, versionAsOf)._1,
-      SnapshotTable.columnHistOf(dir, versionAsOf))
+    // job, and pushed-down filters skip files by their stats. The
+    // ParquetScanBuilder SUBCLASS: full native pushdown inherited for
+    // batch, plus toMicroBatchStream for `readStream.table(...)`, plus
+    // KeyGroupedPartitioning on bucketed tables (zero-shuffle SPJ) and
+    // the snapshot's row count and ANALYZE stats for the CBO.
+    new GraftScanBuilder(dir, snapshot,
+      SnapshotTable.manifestIndex(GraftSqlShims.activeClassic(), dir,
+        snapshot, snapshot.files),
+      options)
   }
 }
 

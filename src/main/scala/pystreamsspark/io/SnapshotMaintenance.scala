@@ -190,7 +190,7 @@ case class SnapshotMaintenanceCommand(kind: String, nameParts: Seq[String],
         SnapshotTable.vacuumRetain(dir, n.toLong * 3600L * 1000L)
         Seq(Row(SnapshotTable.existingVersions(dir).size))
       case "detail" =>
-        Seq(Row.fromSeq(SnapshotTable.detail(dir)))
+        Seq(Row.fromSeq(dir +: SnapshotTable.snapshot(dir).detail))
       case "copy" =>
         val (v, n) = SnapshotTable.copyInto(spark, dir, ts,
           cols.headOption.getOrElse("parquet"))

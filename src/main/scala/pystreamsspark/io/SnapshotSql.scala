@@ -219,7 +219,7 @@ object SnapshotSql {
     val fastKeys =
       try Some(keyColsOf(m.mergeCondition))
       catch { case _: UnsupportedOperationException => None }
-    val cow = !SnapshotTable.tableProps(dir).get("merge.mode").contains("merge-on-read")
+    val cow = !SnapshotTable.snapshot(dir).tableProps.get("merge.mode").contains("merge-on-read")
     (m.matchedActions, m.notMatchedActions) match {
       case (Seq(u), Seq(ins)) if cow && m.notMatchedBySourceActions.isEmpty &&
           fastKeys.isDefined && isStarUpdate(u) && isStarInsert(ins) =>

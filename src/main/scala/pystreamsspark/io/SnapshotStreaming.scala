@@ -171,33 +171,32 @@ private[io] class SnapshotMicroBatchStream(dir: String, schema: StructType,
   * table. On a BUCKETED table with V2 bucketing enabled, the re-wrap is
   * the [[GraftBucketedParquetScan]] that groups files by their manifest
   * bucket ids and reports `KeyGroupedPartitioning(bucket(n, col))` —
-  * the storage-partitioned-join path. */
+  * the storage-partitioned-join path. Every table fact comes from
+  * `snapshot`, the one the catalog table resolved at load; `fileIndex`
+  * lists its files. */
 private[io] class GraftScanBuilder(dir: String,
+                                   snapshot: SnapshotTable.Snapshot,
                                    fileIndex: PartitioningAwareFileIndex,
-                                   schema: StructType,
-                                   dataSchema: StructType,
-                                   options: CaseInsensitiveStringMap,
-                                   bucketSpec: Option[(String, Int)] = None,
-                                   fileBuckets: Map[String, Int] = Map.empty,
-                                   knownRows: Option[Long] = None,
-                                   colStats: Map[String, SnapshotTable.ColumnStats] =
-                                     Map.empty,
-                                   colHist: Map[String, SnapshotTable.ColHist] =
-                                     Map.empty)
+                                   options: CaseInsensitiveStringMap)
   extends ParquetScanBuilder(GraftSqlShims.activeClassic(), fileIndex,
-    schema, dataSchema, options) {
+    snapshot.schema.get, GraftSqlShims.asNullable(snapshot.schema.get),
+    options) {
 
   override def build(): ParquetScan = {
     val s = super.build()
     val v2Bucketing = GraftSqlShims.activeClassic().sessionState.conf
       .getConfString("spark.sql.sources.v2.bucketing.enabled", "false")
       .toBoolean
-    bucketSpec match {
-      case Some((c, n)) if v2Bucketing && fileBuckets.nonEmpty =>
-        new GraftBucketedParquetScan(dir, schema, options, s, c, n,
-          fileBuckets, colStats, colHist)
-      case _ => new GraftParquetScan(dir, schema, options, s, knownRows,
-        colStats, colHist)
+    // bucketed-scan mode needs EVERY live file to carry a bucket id — a
+    // file written outside the bucket law (e.g. a streamed append, whose
+    // partitioning belongs to the query) has none, and the scan must
+    // degrade to the plain split plan rather than guess
+    val buckets = snapshot.fileBuckets
+    snapshot.bucketSpec match {
+      case Some((c, n)) if v2Bucketing && buckets.nonEmpty &&
+          buckets.size == snapshot.files.size =>
+        new GraftBucketedParquetScan(dir, options, s, snapshot, c, n)
+      case _ => new GraftParquetScan(dir, options, s, snapshot)
     }
   }
 }
@@ -206,21 +205,17 @@ private[io] class GraftScanBuilder(dir: String,
   * re-wraps (every batch behavior inherited verbatim — the copy
   * constructor below passes the built scan's fields through), plus the
   * streaming entry point. */
-private[io] class GraftParquetScan(dir: String, tableSchema: StructType,
+private[io] class GraftParquetScan(dir: String,
                                    tblOptions: CaseInsensitiveStringMap,
                                    s: ParquetScan,
-                                   knownRows: Option[Long] = None,
-                                   colStats: Map[String, SnapshotTable.ColumnStats] =
-                                     Map.empty,
-                                   colHist: Map[String, SnapshotTable.ColHist] =
-                                     Map.empty)
+                                   snapshot: SnapshotTable.Snapshot)
   extends ParquetScan(s.sparkSession, s.hadoopConf, s.fileIndex,
     s.dataSchema, s.readDataSchema, s.readPartitionSchema, s.pushedFilters,
     s.options, s.pushedAggregate, s.partitionFilters, s.dataFilters,
     s.pushedVariantExtractions) {
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new SnapshotMicroBatchStream(dir, tableSchema, tblOptions)
+    new SnapshotMicroBatchStream(dir, snapshot.schema.get, tblOptions)
 
   /** EXACT table row count + ANALYZE column statistics for the CBO:
     * the row count comes from the manifest's per-file footer counts,
@@ -244,6 +239,9 @@ private[io] class GraftParquetScan(dir: String, tableSchema: StructType,
     // queries that need the histogram (the V1 CBO contract: leaf serves
     // table stats, the Filter above estimates).
     val servable = partitionFilters.isEmpty && pushedAggregate.isEmpty
+    val knownRows = snapshot.rowCount
+    val colStats = snapshot.columnStats
+    val colHist = snapshot.columnHist
     if (!servable || (knownRows.isEmpty && colStats.isEmpty)) base
     else {
       import org.apache.spark.sql.connector.expressions.Expressions
@@ -342,18 +340,12 @@ private[io] class GraftParquetScan(dir: String, tableSchema: StructType,
   * Spark's own vectorized parquet machinery — the reader factory just
   * unwraps the bucket envelope. */
 private[io] class GraftBucketedParquetScan(dir: String,
-                                           tableSchema: StructType,
                                            tblOptions: CaseInsensitiveStringMap,
                                            s: ParquetScan,
+                                           snapshot: SnapshotTable.Snapshot,
                                            bucketCol: String,
-                                           numBuckets: Int,
-                                           fileBuckets: Map[String, Int],
-                                           colStats: Map[String, SnapshotTable.ColumnStats] =
-                                             Map.empty,
-                                           colHist: Map[String, SnapshotTable.ColHist] =
-                                             Map.empty)
-  extends GraftParquetScan(dir, tableSchema, tblOptions, s,
-    colStats = colStats, colHist = colHist)
+                                           numBuckets: Int)
+  extends GraftParquetScan(dir, tblOptions, s, snapshot)
   with SupportsReportPartitioning {
 
   override def outputPartitioning(): Partitioning =
@@ -363,7 +355,7 @@ private[io] class GraftBucketedParquetScan(dir: String,
   override def planInputPartitions(): Array[InputPartition] = {
     // manifest rel path "data/<uuid>/<name>" → key on the last two
     // segments, unique by construction (uuid batch dirs)
-    val byTail = fileBuckets.map { case (rel, b) =>
+    val byTail = snapshot.fileBuckets.map { case (rel, b) =>
       rel.split('/').takeRight(2).mkString("/") -> b }
     val grouped = partitions.flatMap(_.files).groupBy { pf =>
       val p = pf.toPath.toUri.getPath
@@ -413,7 +405,8 @@ private[io] class BucketedReaderFactory(inner: PartitionReaderFactory)
 //    partition straight into a parquet file in the table directory via
 //    Spark's own vectorized parquet OutputWriter (the identical write
 //    path `df.write.parquet` uses), tracking per-file min/max for the
-//    table's cluster-stat columns as it goes;
+//    table's cluster-stat columns and checking its CHECK predicate as it
+//    goes (a violating row fails the epoch, which commits nothing);
 //  - the driver's per-epoch commit is pure manifest metadata — it folds
 //    the tasks' (path, stats) commit messages into one append commit
 //    under the epoch range-set, so a replayed micro-batch (failure
@@ -452,13 +445,14 @@ private[io] class SnapshotStreamingWrite(dir: String, schema: StructType)
     val bos = new ByteArrayOutputStream()
     job.getConfiguration.write(new DataOutputStream(bos))
     currentBatchRel = s"data/${UUID.randomUUID().toString.take(8)}"
-    val statsCols = try SnapshotTable.statsColsOf(dir) catch {
-      case _: Exception => Nil
-    }
-    // per-file stats from the batch writer's task-side tracker: the same
-    // expressions, so a streamed file records what an append would
+    // the batch writer's per-file facts over the streamed rows (they
+    // carry logical names): the table's stats columns, so a streamed file
+    // records what an append would, and its CHECK, so a violating row
+    // fails the epoch before anything is committed
+    val snap = SnapshotTable.snapshot(dir)
     new SnapshotWriterFactory(owf, bos.toByteArray, schema,
-      FileFacts(spark, schema, statsCols.filter(schema.fieldNames.contains)),
+      SnapshotTable.fileFacts(spark, Some(snap), schema, Map.empty,
+        snap.statsCols),
       java.nio.file.Paths.get(dir, currentBatchRel).toString, currentBatchRel)
   }
 

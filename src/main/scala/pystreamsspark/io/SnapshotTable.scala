@@ -215,9 +215,21 @@ object SnapshotTable {
     }
   }
 
-  private case class Manifest(version: Int, op: String, parent: Int,
-                              files: Seq[FileEntry],
-                              header: Map[String, String]) {
+  /** ONE RESOLVED VERSION of a table: its manifest header (schema,
+    * column mapping, stats columns, layout, modes, ANALYZE stats) and
+    * its live files with their stats, buckets and deletion vectors — an
+    * immutable value. Every table fact an operation uses comes from the
+    * one `Snapshot` it resolved ([[SnapshotTable.snapshot]]), so no
+    * reader can mix facts of two versions: a catalog table answers its
+    * schema, properties, refusals, scan files and CBO stats from the
+    * snapshot it was loaded at, and a writer shapes, maps, checks and
+    * commits its batch against the manifest it commits on (the design
+    * of Delta Lake's `Snapshot`; Armbrust et al., VLDB 2020). Values are
+    * shared through the JVM-wide manifest cache, so they are never
+    * mutated. */
+  final case class Snapshot(version: Int, op: String, parent: Int,
+                            files: Seq[FileEntry],
+                            header: Map[String, String]) {
     def paths: Seq[String] = files.map(_.path)
     // lazy: the schema JSON parses at most once per manifest read, not
     // once per accessor call on the hot driver-metadata paths
@@ -299,6 +311,69 @@ object SnapshotTable {
       * session-local string renderings that must never be compared
       * numerically — see [[SnapshotTable.pruneWhere]]. */
     def tsStatsAreMicros: Boolean = header.get("statsfmt").contains(STATS_FMT)
+    /** The mutable table properties under their TBLPROPERTIES names
+      * (row-level modes, CHECK, bloom columns) — the SHOW TBLPROPERTIES
+      * surface. */
+    def tableProps: Map[String, String] =
+      (header.get("deletemode").map("delete.mode" -> _) ++
+        header.get("updatemode").map("update.mode" -> _) ++
+        header.get("mergemode").map("merge.mode" -> _) ++
+        header.get("check").map(c => "check" -> FileEntry.dec(c)) ++
+        header.get("bloomcols").map("bloomcols" -> _) ++
+        header.get("bloombits").map("bloombits" -> _)).toMap
+    /** The declared cluster transforms (identity entries for a plain
+      * clustered table). */
+    private[io] def transforms: Seq[ClusterTransform] =
+      header.get("transforms")
+        .map(t => splitClusterSpecs(t).map(parseClusterSpec)).getOrElse(Nil)
+    /** True when any live file carries a deletion vector — the state the
+      * V2 catalog scan cannot serve (a V2 scan is a file read; the DV
+      * anti-join needs a plan). */
+    def hasDeletionVectors: Boolean = files.exists(_.dv.isDefined)
+    /** relative path → bucket id of every file that carries one — what
+      * the storage-partitioned scan groups files by. */
+    def fileBuckets: Map[String, Int] =
+      files.flatMap(f => f.bucket.map(f.path -> _)).toMap
+    /** EXACT row count — the sum of the per-file row counts, when every
+      * entry carries one (tables written before the `rows=` tag existed
+      * have unknown entries) and no deletion vector is live (a DV hides
+      * rows the files still hold); None = unknown. */
+    def rowCount: Option[Long] =
+      if (files.exists(f => f.dv.isDefined || f.rows.isEmpty)) None
+      else Some(files.flatMap(_.rows).sum)
+    /** The recorded ANALYZE column statistics (empty when never
+      * analyzed); [[analyzedVersion]] is the version they describe. */
+    lazy val columnStats: Map[String, ColumnStats] =
+      header.get("colstats").map(_.split(";").iterator
+        .filter(_.nonEmpty).map { e =>
+          val Array(c, rest) = e.split(":", 2)
+          val p = rest.split(",", 6)
+          def opt(s: String) = if (s.isEmpty) None else Some(FileEntry.dec(s))
+          def optL(s: String) = { val x = s.toLong; if (x < 0) None else Some(x) }
+          FileEntry.dec(c) -> ColumnStats(p(0).toLong, p(1).toLong,
+            opt(p(2)), opt(p(3)), optL(p(4)), optL(p(5)))
+        }.toMap).getOrElse(Map.empty)
+    def analyzedVersion: Option[Int] = header.get("analyzedv").map(_.toInt)
+    /** The recorded equi-height histograms (empty when never analyzed
+      * or no ordered columns). */
+    lazy val columnHist: Map[String, ColHist] =
+      header.get("colhist").map(_.split(";").iterator
+        .filter(_.nonEmpty).map { e =>
+          val Array(c, rest) = e.split(":", 2)
+          val Array(h, bs, ns) = rest.split("\\|", 3)
+          FileEntry.dec(c) -> ColHist(h.toDouble,
+            bs.split(",").toSeq.map(_.toDouble),
+            ns.split(",").toSeq.map(_.toLong))
+        }.toMap).getOrElse(Map.empty)
+    /** The DESCRIBE DETAIL row after its location: (version, n_files,
+      * n_dv_files, clustercols, bucketcols, buckets, epochs, n_rows). */
+    def detail: Seq[Any] =
+      Seq(version, files.size, files.count(_.dv.isDefined),
+        if (statsCols.isEmpty) null else statsCols.mkString(","),
+        bucketSpec.map(_._1).orNull,
+        bucketSpec.map(b => Int.box(b._2)).orNull,
+        header.get("epochs").orNull,
+        rowCount.map(Long.box).orNull)
   }
 
   /** Stats-format version recorded in every manifest that carries
@@ -363,14 +438,14 @@ object SnapshotTable {
     * `+<entry>` adds / `-<path>` removes against the parent version.
     * Returns (manifest-with-adds-as-files, isDelta, removes). */
   private def parseManifest(lines: Seq[String],
-                            v: Int): (Manifest, Boolean, Seq[String]) = {
+                            v: Int): (Snapshot, Boolean, Seq[String]) = {
     val header = parseHeaderLine(lines.head)
     val body = lines.tail.filter(_.nonEmpty)
     if (!header.get("delta").contains("1"))
-      (Manifest(v, header("op"), header("parent").toInt,
+      (Snapshot(v, header("op"), header("parent").toInt,
         body.map(FileEntry.parse), header), false, Nil)
     else
-      (Manifest(v, header("op"), header("parent").toInt,
+      (Snapshot(v, header("op"), header("parent").toInt,
         body.filter(_.startsWith("+")).map(l => FileEntry.parse(l.tail)),
         header),
         true, body.filter(_.startsWith("-")).map(_.tail))
@@ -385,15 +460,15 @@ object SnapshotTable {
     * most CHECKPOINT_INTERVAL small reads. */
   private val manifestCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[
-        String, (java.nio.file.attribute.FileTime, Long, Manifest)](
+        String, (java.nio.file.attribute.FileTime, Long, Snapshot)](
         64, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[
-            String, (java.nio.file.attribute.FileTime, Long, Manifest)])
+            String, (java.nio.file.attribute.FileTime, Long, Snapshot)])
           : Boolean = size > 48
     })
 
-  private def readManifest(dir: String, v: Int): Manifest = {
+  private def readManifest(dir: String, v: Int): Snapshot = {
     val mp = manifestPath(dir, v)
     val key = mp.toAbsolutePath.toString
     val attrs = Files.readAttributes(mp,
@@ -612,7 +687,7 @@ object SnapshotTable {
     while (e0 < bytes.length && bytes(e0) != '\n') e0 += 1
     val hdrMap = parseHeaderLine(
       new String(bytes, 0, e0, StandardCharsets.UTF_8))
-    val hm = Manifest(0, "", 0, Nil, hdrMap)
+    val hm = Snapshot(0, "", 0, Nil, hdrMap)
     val entries =
       scala.collection.mutable.ArrayBuffer.empty[(Long, Long, FileEntry)]
     var start = e0 + 1
@@ -644,7 +719,7 @@ object SnapshotTable {
                               files: Seq[FileEntry], lines: Seq[String],
                               header: Map[String, String]): Unit =
     if (files.size > SEGMENT_SIZE) {
-      val hm = Manifest(v, "", 0, Nil, header)
+      val hm = Snapshot(v, "", 0, Nil, header)
       var off = headerLine.getBytes(StandardCharsets.UTF_8).length.toLong + 1
       val entries = files.zip(lines).map { case (f, line) =>
         val len = line.getBytes(StandardCharsets.UTF_8).length.toLong
@@ -729,9 +804,9 @@ object SnapshotTable {
 
   /** Header-only manifest of version v: schema, stats columns, modes —
     * everything O(#columns) — without resolving the file list. */
-  private def headerManifest(dir: String, v: Int): Manifest = {
+  private def headerManifest(dir: String, v: Int): Snapshot = {
     val hdr = readHeaderMap(dir, v)
-    Manifest(v, hdr.getOrElse("op", ""),
+    Snapshot(v, hdr.getOrElse("op", ""),
       hdr.get("parent").map(_.toInt).getOrElse(0), Nil, hdr)
   }
 
@@ -747,7 +822,7 @@ object SnapshotTable {
     * [[lastPruneParsed]] to the number of entry lines actually parsed. */
   private def boundedCandidates(dir: String, v: Int,
       requests0: Map[String, Seq[(String, String)]])
-      : (Manifest, Seq[FileEntry]) = {
+      : (Snapshot, Seq[FileEntry]) = {
     val hm = headerManifest(dir, v)
     val dts = prunableStats(hm).map(f => f.name -> f.dataType).toMap
     val requests = requests0.filter { case (c, _) => dts.contains(c) }
@@ -883,7 +958,7 @@ object SnapshotTable {
   }
 
   // ---------------------------------------------------------------------
-  // Column-mapping helpers (see Manifest.colmap): encode/decode of the
+  // Column-mapping helpers (see Snapshot.colmap): encode/decode of the
   // manifest headers plus the cheap "may this table be mapped at all"
   // marker the analyzer rule checks per iteration.
   // ---------------------------------------------------------------------
@@ -920,24 +995,9 @@ object SnapshotTable {
     }
   }
 
-  /** Logical→physical mapping of a snapshot (non-identity pairs only;
-    * empty = files readable by name). Pure driver metadata. */
-  def columnMappingOf(dir: String,
-                      versionAsOf: Option[Int] = None): Map[String, String] = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
-    if (v < 1) Map.empty else readManifest(dir, v).colmap
-  }
-
-  /** True when the snapshot's files store any column under a physical
-    * name differing from its logical name — the state a raw V2 file
-    * scan cannot serve (reads must project through the mapping). */
-  def hasColumnMapping(dir: String,
-                       versionAsOf: Option[Int] = None): Boolean =
-    columnMappingOf(dir, versionAsOf).nonEmpty
-
-  /** One-stat-call pre-check for the analyzer rule (the DV `dv/`-dir
-    * idiom): a table that never renamed/dropped a column has no marker
-    * file, so the common case costs no manifest read. */
+  /** One-stat-call pre-check for the CDC reader: a table that never
+    * renamed/dropped a column has no marker file, so the common case
+    * costs no manifest read. */
   def mayHaveColumnMapping(dir: String): Boolean =
     Files.exists(manifestDir(dir).resolve(".mapped"))
 
@@ -1050,7 +1110,7 @@ object SnapshotTable {
     * through the column mapping — rename-stable). Files without a blob
     * (written before the property, or bloom-free paths) always stay —
     * conservative-correct, never a false negative. */
-  private def bloomPrune(dir: String, m: Manifest, files: Seq[FileEntry],
+  private def bloomPrune(dir: String, m: Snapshot, files: Seq[FileEntry],
                          keyCol: String, values: Seq[String],
                          dt: DataType): Seq[FileEntry] =
     if (!m.bloomCols.contains(keyCol) || !bloomSupports(dt) ||
@@ -1118,7 +1178,7 @@ object SnapshotTable {
     * remains the one atomic publish point, identical to [[commit]];
     * the two forms interleave freely in one table’s history. */
   private def commitDelta(dir: String, v: Int, op: String,
-                          parentM: Manifest, adds: Seq[FileEntry],
+                          parentM: Snapshot, adds: Seq[FileEntry],
                           removes: Seq[String],
                           schema: Option[StructType] = None,
                           extras: Seq[(String, String)] = Nil): Unit = {
@@ -1296,17 +1356,6 @@ object SnapshotTable {
     out.toSeq.map(_.trim).filter(_.nonEmpty)
   }
 
-  /** The table's declared cluster transforms (identity entries for a
-    * plain clustered table). Driver metadata. */
-  private[io] def transformSpecsOf(dir: String,
-      versionAsOf: Option[Int] = None): Seq[ClusterTransform] = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
-    if (v < 1) Nil
-    else readManifest(dir, v).header.get("transforms")
-      .map(t => splitClusterSpecs(t).map(parseClusterSpec))
-      .getOrElse(Nil)
-  }
-
   /** Upper bound on transform-derived file counts per batch — a batch
     * spanning thousands of days must not explode into thousands of
     * 1-row files; beyond the cap, neighboring transform groups share
@@ -1319,8 +1368,10 @@ object SnapshotTable {
     * (the metadata that makes narrow-key MERGE discovery skip
     * non-overlapping files instead of scanning every live file) and the
     * bloom bits of the table's bloom columns — all computed in the write
-    * tasks, so no batch is read back. */
-  private def writeBatch(df: DataFrame, dir: String,
+    * tasks, so no batch is read back. The batch is written under the
+    * layout, mapping, defaults and CHECK of `m`, the snapshot the caller
+    * commits on (None for a table being created). */
+  private def writeBatch(df: DataFrame, dir: String, m: Option[Snapshot],
                          numFiles: Option[Int] = None,
                          statsCols: Seq[String] = Nil,
                          mapOverride: Option[Map[String, String]] = None)
@@ -1333,10 +1384,7 @@ object SnapshotTable {
     // the bucket id and every write path (append, merge rewrite,
     // compact) preserves the invariant by construction. Overrides any
     // caller shaping: bucket purity is the layout's hard contract.
-    val latestManifest =
-      if (latestVersion(dir) >= 1) Some(readManifest(dir, latestVersion(dir)))
-      else None
-    val bucketSpec = latestManifest.flatMap(_.bucketSpec)
+    val bucketSpec = m.flatMap(_.bucketSpec)
     bucketSpec.foreach { case (c, _) => require(df.columns.contains(c),
       s"bucketed table $dir requires column $c in every write batch") }
     // COLUMN MAPPING, write side: the batch frame speaks LOGICAL names
@@ -1349,10 +1397,9 @@ object SnapshotTable {
     // physical name (the dropped/renamed column's stale file values
     // would silently resurrect into it) — evolveSchema assigns fresh
     // physical names for such adds; implicit evolution refuses.
-    val colmap = mapOverride.getOrElse(
-      latestManifest.map(_.colmap).getOrElse(Map.empty))
+    val colmap = mapOverride.getOrElse(m.map(_.colmap).getOrElse(Map.empty))
     if (mapOverride.isEmpty) {
-      val retired = latestManifest.map(_.retired).getOrElse(Set.empty)
+      val retired = m.map(_.retired).getOrElse(Set.empty)
       val occupied = retired ++ colmap.values
       df.columns.filterNot(colmap.contains).foreach(c =>
         require(!occupied.contains(c),
@@ -1364,7 +1411,7 @@ object SnapshotTable {
     // omitting a column whose schema declares a CURRENT_DEFAULT gets it
     // filled here (so a later SET DEFAULT never re-interprets these
     // rows); columns without defaults stay absent (read null-fills)
-    val dfD = latestManifest.flatMap(_.schema) match {
+    val dfD = m.flatMap(_.schema) match {
       case Some(sch) => sch.fields
         .filter(f => !df.columns.contains(f.name) &&
           // any field that EVER had a default materializes: after DROP
@@ -1387,32 +1434,6 @@ object SnapshotTable {
       if (colmap.isEmpty) shaped
       else shaped.select(shaped.columns.toSeq.map(c =>
         col(c).as(colmap.getOrElse(c, c))): _*)
-    // CHECK-constraint enforcement: this is the ONE data-file funnel
-    // every batch write path shares (append, INSERT, COPY, CoW
-    // rewrites, MoR image batches), so the declared predicate holds
-    // for every committed data file by construction. The write tasks
-    // evaluate it on every row they write, with SQL NULL semantics (an
-    // unknown predicate passes), over the rows a read of this batch will
-    // see: logical names, and columns an evolving batch lacks filled
-    // with their declared default (read-time EXISTS fill), else NULL. A
-    // violation aborts the write job (the batch directory goes with it)
-    // before anything is committed. (Streaming epoch writes go through
-    // their own executor-side writer and are NOT checked — declare
-    // constraints on batch-maintained tables.)
-    val check = latestManifest.flatMap(_.header.get("check"))
-      .map(FileEntry.dec).map { pred =>
-        val schemaCols =
-          latestManifest.flatMap(_.schema).map(_.fields.toSeq).getOrElse(Nil)
-        val inv = colmap.map(_.swap)
-        pred -> { (rows: DataFrame) =>
-          val logical =
-            if (colmap.isEmpty) rows
-            else rows.select(rows.columns.toSeq.map(c =>
-              col(c).as(inv.getOrElse(c, c))): _*)
-          schemaCols.filterNot(f => logical.columns.contains(f.name))
-            .foldLeft(logical)((d, f) => d.withColumn(f.name, defaultFill(f)))
-        }
-      }
     val partIdx = "^part-(\\d+)-.*".r
     def bucketOf(name: String): Option[Int] = bucketSpec.flatMap(_ =>
       name match {
@@ -1421,15 +1442,11 @@ object SnapshotTable {
           s"bucketed write produced unparseable file name $name")
       })
     def phys(c: String) = colmap.getOrElse(c, c)
-    val presentStats = statsCols.filter(df.schema.fieldNames.contains)
-    val bloomHere = latestManifest.map(_.bloomCols).getOrElse(Nil)
+    val bloomHere = m.map(_.bloomCols).getOrElse(Nil)
       .filter(c => df.schema.fieldNames.contains(c) &&
         bloomSupports(df.schema(c).dataType))
-    val bloomBits = latestManifest.map(_.bloomBits)
-      .getOrElse(DEFAULT_BLOOM_BITS)
     val written = BatchWriter.write(physDf, out.toString,
-      FileFacts(df.sparkSession, physDf.schema, presentStats.map(phys),
-        bloomHere.map(phys), bloomBits, check))
+      fileFacts(df.sparkSession, m, physDf.schema, colmap, statsCols, bloomHere))
     // stats record under the LOGICAL key (re-keyed by RENAME, which
     // rewrites entries), bloom blobs under the PHYSICAL key in a
     // per-batch SIDECAR file (`<batch>/_blooms`, referenced by
@@ -1450,8 +1467,42 @@ object SnapshotTable {
         Some(refRel)
       }
     written.map(w => FileEntry(s"$batch/${w.name}",
-      presentStats.flatMap(c => w.stats.get(phys(c)).map(c -> _)).toMap,
+      statsCols.flatMap(c => w.stats.get(phys(c)).map(c -> _)).toMap,
       bucket = bucketOf(w.name), rows = Some(w.rows), bloomRef = bloomRef))
+  }
+
+  /** The per-file facts ([[FileFacts]]) the write tasks compute for
+    * `written` rows (physical names under `colmap`) going into the table
+    * at snapshot `m`: the min/max of the `statsCols` the rows carry, the
+    * bloom bits of `bloomCols`, and the table's CHECK predicate, which
+    * they evaluate on every row with SQL NULL semantics (an unknown
+    * predicate passes) over the rows a read will see: logical names, and
+    * columns the rows lack filled with their declared default (the
+    * read-time EXISTS fill), else NULL. A violation fails the write job
+    * before anything is committed. Batch and streaming writes both build
+    * their facts here, so every data file of a table is checked and
+    * recorded alike. */
+  private[io] def fileFacts(spark: SparkSession, m: Option[Snapshot],
+                            written: StructType, colmap: Map[String, String],
+                            statsCols: Seq[String],
+                            bloomCols: Seq[String] = Nil): FileFacts = {
+    def phys(c: String) = colmap.getOrElse(c, c)
+    val schemaCols = m.flatMap(_.schema).map(_.fields.toSeq).getOrElse(Nil)
+    val check = m.flatMap(_.header.get("check")).map(FileEntry.dec).map { pred =>
+      val inv = colmap.map(_.swap)
+      pred -> { (rows: DataFrame) =>
+        val logical =
+          if (colmap.isEmpty) rows
+          else rows.select(rows.columns.toSeq.map(c =>
+            col(c).as(inv.getOrElse(c, c))): _*)
+        schemaCols.filterNot(f => logical.columns.contains(f.name))
+          .foldLeft(logical)((d, f) => d.withColumn(f.name, defaultFill(f)))
+      }
+    }
+    FileFacts(spark, written,
+      statsCols.map(phys).filter(written.fieldNames.contains),
+      bloomCols.map(phys), m.map(_.bloomBits).getOrElse(DEFAULT_BLOOM_BITS),
+      check)
   }
 
   /** Shape one write batch under the table's clustering law: on a
@@ -1464,9 +1515,10 @@ object SnapshotTable {
     * unclustered table keeps the plain round-robin shape; a batch
     * MISSING some cluster column (evolution edge) falls back to the
     * caller's partitioning rather than failing the repartition. */
-  private def writeShaped(df: DataFrame, dir: String, numFiles: Int,
-                          statsCols: Seq[String]): Seq[FileEntry] = {
-    lazy val transforms = transformSpecsOf(dir)
+  private def writeShaped(df: DataFrame, dir: String, m: Option[Snapshot],
+                          numFiles: Int): Seq[FileEntry] = {
+    val statsCols = m.map(_.statsCols).getOrElse(Nil)
+    val transforms = m.map(_.transforms).getOrElse(Nil)
     // Range-shaping SAMPLES its input to compute partition boundaries,
     // then the write re-executes it from scratch — so a merge/delete
     // batch plan (touched-file read + anti-join + union) ran TWICE per
@@ -1482,7 +1534,7 @@ object SnapshotTable {
       try f(cached)
       finally { cached.unpersist(blocking = false); () }
     }
-    if (numFiles <= 0) writeBatch(df, dir, None, statsCols)
+    if (numFiles <= 0) writeBatch(df, dir, m, None, statsCols)
     else if (transforms.exists(!_.isIdentity) &&
       transforms.forall(t => df.columns.contains(t.src))) {
       // HIDDEN-TRANSFORM shaping: group by the transform values FIRST
@@ -1504,21 +1556,21 @@ object SnapshotTable {
         val n = math.min(TRANSFORM_MAX_FILES, math.max(numFiles, nvals))
         val order = exprs ++ statsCols.filter(cached.columns.contains).map(col)
         writeBatch(cached.repartitionByRange(math.max(1, n), order: _*)
-          .sortWithinPartitions(order: _*), dir, None, statsCols)
+          .sortWithinPartitions(order: _*), dir, m, None, statsCols)
       }
     }
     else if (statsCols.nonEmpty && statsCols.forall(df.columns.contains))
       cachedShapedWrite { cached =>
         writeBatch(cached.repartitionByRange(numFiles, statsCols.map(col): _*)
-          .sortWithinPartitions(statsCols.map(col): _*), dir, None, statsCols)
+          .sortWithinPartitions(statsCols.map(col): _*), dir, m, None, statsCols)
       }
-    else writeBatch(df, dir, Some(numFiles), statsCols)
+    else writeBatch(df, dir, m, Some(numFiles), statsCols)
   }
 
   /** Create the table at version 1 (fails if it already has commits). */
   def create(spark: SparkSession, dir: String, df: DataFrame,
              numFiles: Int = 4): Int = {
-    val files = writeBatch(df, dir, Some(numFiles))
+    val files = writeBatch(df, dir, None, Some(numFiles))
     commit(dir, 1, "create", 0, files, Some(df.schema))
     1
   }
@@ -1538,7 +1590,7 @@ object SnapshotTable {
     val specs = clusterCols.map(parseClusterSpec)
     specs.foreach(_.validate(df.schema))
     val srcCols = specs.map(_.src).distinct
-    val files = writeBatch(df, dir, None, srcCols)
+    val files = writeBatch(df, dir, None, None, srcCols)
     val extras =
       if (specs.isEmpty) Nil
       else Seq("statscols" -> srcCols.mkString(","),
@@ -1623,31 +1675,29 @@ object SnapshotTable {
     1
   }
 
-  /** The table's declared hash-bucket layout, if any: (column,
-    * numBuckets). Driver metadata. */
-  def bucketSpecOf(dir: String,
-                   versionAsOf: Option[Int] = None): Option[(String, Int)] = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
-    if (v < 1) None else readManifest(dir, v).bucketSpec
-  }
-
-  /** relative-path → bucket id for a bucketed snapshot — what the
-    * storage-partitioned scan groups files by. Driver metadata. */
-  private[io] def fileBuckets(dir: String,
-                              versionAsOf: Option[Int] = None): Map[String, Int] = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
-    if (v < 1) Map.empty
-    else readManifest(dir, v).files.flatMap(f =>
-      f.bucket.map(b => f.path -> b)).toMap
-  }
-
-  /** The snapshot's schema — pure driver metadata (one manifest read),
-    * the piece a catalog's `loadTable` needs without touching data. */
-  def schemaOf(dir: String, versionAsOf: Option[Int] = None): StructType = {
+  /** The version `versionAsOf` names (the latest when None), checked to
+    * exist: what [[snapshot]] resolves, and the bounded readers prune. */
+  private def resolveVersion(dir: String, versionAsOf: Option[Int]): Int = {
     val v = versionAsOf.getOrElse(latestVersion(dir))
     require(v >= 1, s"no committed version at $dir")
-    readManifest(dir, v).schema.getOrElse(
-      throw new IllegalStateException(s"manifest v$v at $dir records no schema"))
+    require(Files.exists(manifestPath(dir, v)),
+      s"version $v at $dir does not exist (vacuumed?)")
+    v
+  }
+
+  /** THE RESOLVER: version `versionAsOf` of the table at `dir` (the
+    * latest when None) as one immutable [[Snapshot]] — one listing, one
+    * (cached) manifest resolution. An operation resolves it once and
+    * takes every table fact from it. Fails when the table has no commit
+    * or the version was vacuumed. */
+  def snapshot(dir: String, versionAsOf: Option[Int] = None): Snapshot =
+    readManifest(dir, resolveVersion(dir, versionAsOf))
+
+  /** The snapshot's schema — pure driver metadata. */
+  def schemaOf(dir: String, versionAsOf: Option[Int] = None): StructType = {
+    val m = snapshot(dir, versionAsOf)
+    m.schema.getOrElse(throw new IllegalStateException(
+      s"manifest v${m.version} at $dir records no schema"))
   }
 
   /** (path, dv) entries of a version's manifest — driver metadata for
@@ -1664,13 +1714,8 @@ object SnapshotTable {
 
   /** The snapshot's data files as ABSOLUTE paths — what a V2 scan over
     * the table reads. Driver metadata only. */
-  def filePaths(dir: String, versionAsOf: Option[Int] = None): Seq[String] = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
-    require(v >= 1, s"no committed version at $dir")
-    require(Files.exists(manifestPath(dir, v)),
-      s"version $v at $dir does not exist (vacuumed?)")
-    readManifest(dir, v).paths.map(f => Paths.get(dir, f).toString)
-  }
+  def filePaths(dir: String, versionAsOf: Option[Int] = None): Seq[String] =
+    snapshot(dir, versionAsOf).paths.map(f => Paths.get(dir, f).toString)
 
   /** Snapshot read; `versionAsOf = Some(v)` time-travels. An empty file
     * list (everything deleted) still needs the schema — kept by always
@@ -1678,11 +1723,7 @@ object SnapshotTable {
     * empty table read an empty relation with the create-time schema. */
   def read(spark: SparkSession, dir: String,
            versionAsOf: Option[Int] = None): DataFrame = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
-    require(v >= 1, s"no committed version at $dir")
-    require(Files.exists(manifestPath(dir, v)),
-      s"version $v at $dir does not exist (vacuumed?)")
-    val m = readManifest(dir, v)
+    val m = snapshot(dir, versionAsOf)
     // an EMPTY snapshot (a just-created catalog table, or a full delete)
     // still has a schema in the manifest — read it as an empty relation
     // rather than asking the parquet source to infer from zero files.
@@ -1701,7 +1742,7 @@ object SnapshotTable {
     * row position (`_metadata.row_index` — stable because data files are
     * immutable); the DV set is broadcast (DVs are point-delete-sized by
     * design — a mass delete belongs on the copy-on-write path). */
-  private def readEntries(spark: SparkSession, dir: String, m: Manifest,
+  private def readEntries(spark: SparkSession, dir: String, m: Snapshot,
                           entries: Seq[FileEntry]): DataFrame =
     scanEntries(spark, dir, m, entries, tagged = false)._1
 
@@ -1711,11 +1752,11 @@ object SnapshotTable {
     * vectors on. Returns the frame and the names of those two columns,
     * chosen apart from the data columns (`_src_file`/`_src_pos` unless a
     * data column already takes the name). */
-  private def readTagged(spark: SparkSession, dir: String, m: Manifest,
+  private def readTagged(spark: SparkSession, dir: String, m: Snapshot,
                          entries: Seq[FileEntry]): (DataFrame, String, String) =
     scanEntries(spark, dir, m, entries, tagged = true)
 
-  private def scanEntries(spark: SparkSession, dir: String, m: Manifest,
+  private def scanEntries(spark: SparkSession, dir: String, m: Snapshot,
                           entries: Seq[FileEntry],
                           tagged: Boolean): (DataFrame, String, String) = {
     val dvDirs = entries.flatMap(_.dv).distinct
@@ -1793,8 +1834,8 @@ object SnapshotTable {
     * under PHYSICAL names, so a pushed-down filter on a stats column
     * skips files ([[ManifestFileIndex]]). Legacy (pre-micros) timestamp
     * stats never prune, as in [[pruneWhere]]. */
-  private def manifestIndex(spark: SparkSession, dir: String, m: Manifest,
-                            entries: Seq[FileEntry]): ManifestFileIndex = {
+  private[io] def manifestIndex(spark: SparkSession, dir: String, m: Snapshot,
+                                entries: Seq[FileEntry]): ManifestFileIndex = {
     val prunable = prunableStats(m)
     def phys(c: String) = m.colmap.getOrElse(c, c)
     new ManifestFileIndex(spark, dir, m.version,
@@ -1808,7 +1849,7 @@ object SnapshotTable {
     * columns, less timestamps whose stats predate the micros-v2 marker
     * (`statsfmt`) — session-local renderings that would compare wrongly,
     * so every file stays a candidate until a compact() rewrites them. */
-  private def prunableStats(m: Manifest): Seq[StructField] =
+  private def prunableStats(m: Snapshot): Seq[StructField] =
     m.schema.toSeq.flatMap(_.fields).filter(f =>
       m.statsCols.contains(f.name) &&
         !(f.dataType.isInstanceOf[TimestampType] && !m.tsStatsAreMicros))
@@ -1818,7 +1859,7 @@ object SnapshotTable {
     * bounded BEFORE a row-level DML builds its discovery read, so that
     * read, and the deletion-vector anti-join inside it, cover only the
     * candidate files. */
-  private def predicateCandidates(spark: SparkSession, m: Manifest,
+  private def predicateCandidates(spark: SparkSession, m: Snapshot,
                                   predicate: String): Seq[FileEntry] = {
     val prunable = prunableStats(m)
     if (prunable.isEmpty) m.files
@@ -1843,30 +1884,12 @@ object SnapshotTable {
     }
   }
 
-  /** The index of version `v`'s live files — the catalog scan's. */
-  private[io] def manifestIndex(spark: SparkSession, dir: String,
-                                v: Int): ManifestFileIndex = {
-    require(Files.exists(manifestPath(dir, v)),
-      s"version $v at $dir does not exist (vacuumed?)")
-    val m = readManifest(dir, v)
-    manifestIndex(spark, dir, m, m.files)
-  }
-
   /** `name`, or `name` with leading underscores added, so that it is
     * none of `taken` — a working column named apart from every data
     * column (column resolution is case-insensitive). */
   private def freshName(taken: Seq[String], name: String): String =
     Iterator.iterate(name)("_" + _)
       .find(c => !taken.exists(_.equalsIgnoreCase(c))).get
-
-  /** True when the snapshot carries any deletion vector — the state the
-    * V2 catalog scan cannot serve (a V2 scan is a file read; the DV
-    * anti-join needs a plan). */
-  def hasDeletionVectors(dir: String,
-                         versionAsOf: Option[Int] = None): Boolean = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
-    v >= 1 && readManifest(dir, v).files.exists(_.dv.isDefined)
-  }
 
   /** The file subset a conjunctive box read must scan per manifest
     * stats — the READ-side twin of [[discoveryCandidates]]. Public so
@@ -1875,7 +1898,7 @@ object SnapshotTable {
     * (conservative-correct); bounds on non-stat columns never prune. */
   def readCandidates(dir: String, bounds: Map[String, (String, String)],
                      versionAsOf: Option[Int] = None): Seq[String] = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
+    val v = resolveVersion(dir, versionAsOf)
     val m = headerManifest(dir, v)
     // fail fast on a typo'd column (same contract as readWhere) — a
     // silently-ignored bound would read as "no pruning happened"
@@ -1914,7 +1937,7 @@ object SnapshotTable {
     * [lo, hi] per column, rendered like the stats); a bound on a column
     * that cannot prune ([[prunableStats]]), or a file without stats for
     * it (all-null in that file), keeps the file. */
-  private def pruneWhere(m: Manifest,
+  private def pruneWhere(m: Snapshot,
                          bounds: Map[String, (String, String)]): Seq[FileEntry] = {
     val dts = prunableStats(m).map(f => f.name -> f.dataType).toMap
     val statBounds = bounds.filter { case (c, _) => dts.contains(c) }
@@ -1946,8 +1969,7 @@ object SnapshotTable {
                 bounds: Map[String, (String, String)],
                 versionAsOf: Option[Int] = None): DataFrame = {
     require(bounds.nonEmpty, "readWhere needs at least one column bound")
-    val v = versionAsOf.getOrElse(latestVersion(dir))
-    require(v >= 1, s"no committed version at $dir")
+    val v = resolveVersion(dir, versionAsOf)
     // two-tier: candidates resolve without materializing the file list
     val (m, statFiles) = boundedCandidates(dir, v,
       bounds.map { case (c, r) => c -> Seq(r) })
@@ -1993,7 +2015,7 @@ object SnapshotTable {
     * the skip, the point-lookup twin of [[readCandidates]]. */
   def readCandidatesIn(dir: String, keyCol: String, values: Seq[String],
                        versionAsOf: Option[Int] = None): Seq[String] = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
+    val v = resolveVersion(dir, versionAsOf)
     val (m, statFiles) = boundedCandidates(dir, v,
       Map(keyCol -> values.map(x => (x, x))))
     val dt = m.schema.flatMap(_.fields.find(_.name == keyCol))
@@ -2014,8 +2036,7 @@ object SnapshotTable {
   def readWhereIn(spark: SparkSession, dir: String, keyCol: String,
                   values: Seq[String],
                   versionAsOf: Option[Int] = None): DataFrame = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
-    require(v >= 1, s"no committed version at $dir")
+    val v = resolveVersion(dir, versionAsOf)
     val (m, statFiles) = boundedCandidates(dir, v,
       Map(keyCol -> values.map(x => (x, x))))
     val schema = m.schema.getOrElse(
@@ -2050,16 +2071,16 @@ object SnapshotTable {
     * same fate as any losing committer's batch. */
   private def commitWithRebase(dir: String, fromVersion: Option[Int],
                                maxRetries: Int)
-                              (body: (Int, Manifest) => Int): Int = {
-    var parent = fromVersion.getOrElse(latestVersion(dir))
+                              (body: (Int, Snapshot) => Int): Int = {
+    var m = snapshot(dir, fromVersion)
     var attempt = 0
     while (true) {
-      try return body(parent, readManifest(dir, parent))
+      try return body(m.version, m)
       catch {
         case e: ConcurrentCommitException =>
           if (fromVersion.isDefined || attempt >= maxRetries) throw e
           attempt += 1
-          parent = latestVersion(dir)
+          m = snapshot(dir)
       }
     }
     -1 // unreachable
@@ -2088,7 +2109,7 @@ object SnapshotTable {
     var written: Option[Seq[FileEntry]] = None
     commitWithRebase(dir, fromVersion, maxRetries) { (base, m) =>
       val files = written.getOrElse {
-        val fs = writeShaped(df, dir, numFiles, m.statsCols)
+        val fs = writeShaped(df, dir, Some(m), numFiles)
         written = Some(fs); fs
       }
       val v = base + 1
@@ -2109,7 +2130,7 @@ object SnapshotTable {
     var written: Option[Seq[FileEntry]] = None
     commitWithRebase(dir, None, maxRetries) { (base, m) =>
       val files = written.getOrElse {
-        val fs = writeShaped(df, dir, numFiles, m.statsCols)
+        val fs = writeShaped(df, dir, Some(m), numFiles)
         written = Some(fs); fs
       }
       val v = base + 1
@@ -2192,11 +2213,10 @@ object SnapshotTable {
     } else {
       val evolved = latestM.flatMap(_.schema)
         .map(unionSchema(_, df.schema)).getOrElse(df.schema)
-      val statsCols = latestM.map(_.statsCols).getOrElse(Nil)
       // same shaping law as append: clustered tables range-repartition
       // the batch on the cluster keys; numFiles <= 0 preserves the
       // caller's partitioning
-      val files = writeShaped(df, dir, numFiles, statsCols)
+      val files = writeShaped(df, dir, latestM, numFiles)
       val v = latest + 1
       val carried = latestM.map(_.carried.filterNot(_._1 == "epochs"))
         .getOrElse(Nil)
@@ -2210,21 +2230,6 @@ object SnapshotTable {
       }
       v
     }
-  }
-
-  /** The table's declared cluster-stat columns — what a streaming
-    * writer must track per-file min/max for. Driver metadata. */
-  private[io] def statsColsOf(dir: String): Seq[String] = {
-    val v = latestVersion(dir)
-    if (v < 1) Nil else readManifest(dir, v).statsCols
-  }
-
-  /** Cluster-stat columns of a (possibly pinned) snapshot — the
-    * catalog's TBLPROPERTIES surface. Driver metadata. */
-  def statsColsOfPublic(dir: String,
-                        versionAsOf: Option[Int] = None): Seq[String] = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
-    if (v < 1) Nil else readManifest(dir, v).statsCols
   }
 
   /** The V2 StreamingWrite commit: append files ALREADY WRITTEN by
@@ -2352,10 +2357,9 @@ object SnapshotTable {
   def discoveryCandidates(spark: SparkSession, dir: String,
                           updates: DataFrame, keyCols: Seq[String],
                           fromVersion: Option[Int] = None): Seq[String] =
-    pruneCandidates(readManifest(dir, fromVersion.getOrElse(latestVersion(dir))),
-      updates, keyCols).map(_.path)
+    pruneCandidates(snapshot(dir, fromVersion), updates, keyCols).map(_.path)
 
-  private def pruneCandidates(m: Manifest, updates: DataFrame,
+  private def pruneCandidates(m: Snapshot, updates: DataFrame,
                               keyCols: Seq[String]): Seq[FileEntry] = {
     val statCols = m.statsCols.filter(keyCols.contains)
     if (statCols.isEmpty || m.schema.isEmpty) m.files
@@ -2399,7 +2403,7 @@ object SnapshotTable {
 
   /** The write mode a table declares under header `key`: true when
     * `TBLPROPERTIES('<op>.mode'='merge-on-read')`. */
-  private def declaredMergeOnRead(key: String)(m: Manifest): Boolean =
+  private def declaredMergeOnRead(key: String)(m: Snapshot): Boolean =
     m.header.get(key).contains("merge-on-read")
 
   /** THE ROW-LEVEL CORE: every DELETE, UPDATE and key-matched MERGE,
@@ -2419,7 +2423,7 @@ object SnapshotTable {
     * commits nothing and returns the version it read. */
   private def rowLevel(spark: SparkSession, dir: String, op: String,
                        rows: RowMatch, change: RowChange,
-                       mergeOnRead: Manifest => Boolean, numFiles: Int,
+                       mergeOnRead: Snapshot => Boolean, numFiles: Int,
                        fromVersion: Option[Int], maxRetries: Int,
                        epoch: Option[Long] = None): Int =
     commitWithRebase(dir, fromVersion, maxRetries) { (_, m) =>
@@ -2505,7 +2509,7 @@ object SnapshotTable {
     * operation that changes nothing — no touched file, no insert row, the
     * carried headers as they were — commits nothing and returns the
     * version it read. */
-  private def writeRowLevel(spark: SparkSession, dir: String, m: Manifest,
+  private def writeRowLevel(spark: SparkSession, dir: String, m: Snapshot,
                             op: String, mergeOnRead: Boolean,
                             touched: Set[String], rewrite: Option[DataFrame],
                             inserts: Option[DataFrame], marked: DataFrame,
@@ -2516,7 +2520,7 @@ object SnapshotTable {
     else {
       val files = (rewrite.filter(_ => touched.nonEmpty) ++ inserts)
         .reduceOption(_.unionByName(_, allowMissingColumns = true)).toSeq
-        .flatMap(writeShaped(_, dir, numFiles, m.statsCols))
+        .flatMap(writeShaped(_, dir, Some(m), numFiles))
       val dvs =
         if (mergeOnRead && touched.nonEmpty) attachDv(spark, dir, m, touched, marked)
         else Nil
@@ -2587,7 +2591,7 @@ object SnapshotTable {
     * before the range-set existed must not lose idempotency on
     * upgrade; the same rule appendEpochBody applies). */
   private def seededEpochRanges(dir: String,
-                                m: Option[Manifest]): Seq[(Long, Long)] =
+                                m: Option[Snapshot]): Seq[(Long, Long)] =
     m.flatMap(_.header.get("epochs")).map(parseRanges).getOrElse(
       existingVersions(dir)
         .flatMap(v => readHeaderMap(dir, v).get("epoch"))
@@ -2881,7 +2885,7 @@ object SnapshotTable {
     * ONLY the touched files' entries re-pointed at it — the O(delta)
     * add-set of the commit (the untouched files carry by parent
     * reference in the delta manifest). */
-  private def attachDv(spark: SparkSession, dir: String, m: Manifest,
+  private def attachDv(spark: SparkSession, dir: String, m: Snapshot,
                        touchedRel: Set[String],
                        newRows: DataFrame): Seq[FileEntry] = {
     val touched = m.files.filter(f => touchedRel.contains(f.path))
@@ -2952,32 +2956,6 @@ object SnapshotTable {
                     maxRetries: Int = 5): Int =
     rowLevel(spark, dir, "update", Where(predicate), Assign(sets), _ => true,
       numFiles, fromVersion, maxRetries)
-
-  /** The table's declared CHECK constraint predicate, if any —
-    * enforced by the shared batch-write funnel on every data write. */
-  def checkOf(dir: String): Option[String] =
-    if (latestVersion(dir) < 1) None
-    else readManifest(dir, latestVersion(dir)).header.get("check")
-      .map(FileEntry.dec)
-
-  /** ONE-read bundle of the mutable table properties (the row-level
-    * modes + check) — the SHOW TBLPROPERTIES surface. The row-level
-    * writers read their mode off the manifest they commit on, not from
-    * here. */
-  def tableProps(dir: String,
-                 versionAsOf: Option[Int] = None): Map[String, String] = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
-    if (v < 1) Map.empty
-    else {
-      val h = readManifest(dir, v).header
-      (h.get("deletemode").map("delete.mode" -> _) ++
-        h.get("updatemode").map("update.mode" -> _) ++
-        h.get("mergemode").map("merge.mode" -> _) ++
-        h.get("check").map(c => "check" -> FileEntry.dec(c)) ++
-        h.get("bloomcols").map("bloomcols" -> _) ++
-        h.get("bloombits").map("bloombits" -> _)).toMap
-    }
-  }
 
   /** `COPY INTO` — IDEMPOTENT file ingestion (the lakehouse staple for
     * landing-zone loads): list the files under `sourcePath` (a
@@ -3067,7 +3045,7 @@ object SnapshotTable {
             col(f.name).cast(f.dataType).as(f.name)
           else lit(null).cast(f.dataType).as(f.name)
         }: _*)
-        val files = writeShaped(aligned, dir, numFiles, m.statsCols)
+        val files = writeShaped(aligned, dir, Some(m), numFiles)
         // the ledger batch commits ATOMICALLY with the data: written
         // first, referenced only by the new manifest's header
         val batch = s"copy/${java.util.UUID.randomUUID().toString.take(8)}"
@@ -3097,9 +3075,9 @@ object SnapshotTable {
     * dropped-column history costs one amortized rewrite, after which
     * raw V2 scans work again (old snapshots keep their own mapping). */
   def compact(spark: SparkSession, dir: String, target: Int): Int = {
-    val base = latestVersion(dir)
-    val m = readManifest(dir, base)
-    val snapshot = read(spark, dir)
+    val m = snapshot(dir)
+    val base = m.version
+    val rows = read(spark, dir, Some(base))
     // a CLUSTERED table must stay clustered through compaction: a
     // round-robin reshape would smear every key range across every
     // output file, silently turning the recorded stats useless (each
@@ -3107,10 +3085,10 @@ object SnapshotTable {
     // range-repartition on the stat columns keeps files key-disjoint
     val files =
       if (m.statsCols.nonEmpty)
-        writeBatch(snapshot.repartitionByRange(target, m.statsCols.map(col): _*)
+        writeBatch(rows.repartitionByRange(target, m.statsCols.map(col): _*)
           .sortWithinPartitions(m.statsCols.map(col): _*),
-          dir, None, m.statsCols, mapOverride = Some(Map.empty))
-      else writeBatch(snapshot, dir, Some(target), m.statsCols,
+          dir, Some(m), None, m.statsCols, mapOverride = Some(Map.empty))
+      else writeBatch(rows, dir, Some(m), Some(target), m.statsCols,
         mapOverride = Some(Map.empty))
     val v = base + 1
     // compact rewrites every file's stats under the CURRENT renderer, so
@@ -3119,7 +3097,7 @@ object SnapshotTable {
     val extras = m.carried.filterNot(e =>
       Set("statsfmt", "colmap", "retired")(e._1)) ++
       (if (m.statsCols.nonEmpty) Seq("statsfmt" -> STATS_FMT) else Nil)
-    commit(dir, v, "compact", base, files, Some(snapshot.schema), extras)
+    commit(dir, v, "compact", base, files, Some(rows.schema), extras)
     v
   }
 
@@ -3153,7 +3131,7 @@ object SnapshotTable {
       if (touched.isEmpty) base
       else {
         val rewritten = readEntries(spark, dir, m, touched)
-        val files = writeShaped(rewritten, dir, target, m.statsCols)
+        val files = writeShaped(rewritten, dir, Some(m), target)
         val v = base + 1
         commitDelta(dir, v, "compact", m, files, touched.map(_.path),
           m.schema, m.carried)
@@ -3187,23 +3165,23 @@ object SnapshotTable {
                numFiles: Int = 16, bitsPerDim: Int = 6): Int = {
     require(cols.nonEmpty && cols.size <= 3,
       s"ZORDER BY takes 1-3 columns, got ${cols.size}")
-    val base = latestVersion(dir)
-    val m = readManifest(dir, base)
+    val m = snapshot(dir)
+    val base = m.version
     require(m.bucketSpec.isEmpty,
       "ZORDER BY on a hash-bucketed table: the bucket layout owns the " +
         "file shape (zero-shuffle joins); z-ordering would destroy it")
-    val snapshot = read(spark, dir)
+    val rows = read(spark, dir, Some(base))
     cols.foreach { c =>
-      val dt = snapshot.schema.fields.find(_.name == c).map(_.dataType)
+      val dt = rows.schema.fields.find(_.name == c).map(_.dataType)
         .getOrElse(throw new IllegalArgumentException(
-          s"no column $c in ${snapshot.columns.mkString(",")}"))
+          s"no column $c in ${rows.columns.mkString(",")}"))
       require(dt.isInstanceOf[NumericType] || dt.isInstanceOf[DateType] ||
         dt.isInstanceOf[TimestampType],
         s"ZORDER BY needs orderable numeric/date/timestamp columns; $c is $dt")
     }
     val nCells = 1 << bitsPerDim
     def asDouble(c: String): org.apache.spark.sql.Column =
-      snapshot.schema(c).dataType match {
+      rows.schema(c).dataType match {
         case _: TimestampType => unix_micros(col(c)).cast("double")
         case _                => col(c).cast("double")
       }
@@ -3211,7 +3189,7 @@ object SnapshotTable {
     // one pass over the declared dimensions; 1% quantile error only
     // shifts cell BOUNDARIES (never correctness — stats are recorded
     // from the actual written values)
-    val dims = snapshot.select(cols.map(c => asDouble(c).as(c)): _*)
+    val dims = rows.select(cols.map(c => asDouble(c).as(c)): _*)
     val cuts = dims.stat.approxQuantile(cols.toArray, probs, 0.01)
     // cell index = #cuts <= value (null sorts to cell 0); interleave
     // bitsPerDim bits per dimension, dimension 0 in the LOW bits
@@ -3227,16 +3205,16 @@ object SnapshotTable {
           bit * (cells.size - 1) + d))
       }
     }
-    val laid = snapshot.withColumn("__zkey", zkey)
+    val laid = rows.withColumn("__zkey", zkey)
       .repartitionByRange(math.max(1, numFiles), col("__zkey"))
       .sortWithinPartitions(col("__zkey"))
       .drop("__zkey")
-    val files = writeBatch(laid, dir, None, cols)
+    val files = writeBatch(laid, dir, Some(m), None, cols)
     val v = base + 1
     val extras = m.carried
       .filterNot(e => e._1 == "statscols" || e._1 == "statsfmt") ++
       Seq("statscols" -> cols.mkString(","), "statsfmt" -> STATS_FMT)
-    commit(dir, v, "zorder", base, files, Some(snapshot.schema), extras)
+    commit(dir, v, "zorder", base, files, Some(rows.schema), extras)
     v
   }
 
@@ -4178,71 +4156,6 @@ object SnapshotTable {
     * (the double view — micros for timestamps, days for dates), and
     * HIST_BINS per-bin approximate NDVs. */
   case class ColHist(height: Double, bounds: Seq[Double], ndvs: Seq[Long])
-
-  /** The recorded equi-height histograms (empty when never analyzed or
-    * no ordered columns). Pure driver metadata. */
-  def columnHistOf(dir: String, versionAsOf: Option[Int] = None)
-      : Map[String, ColHist] = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
-    if (v < 1) return Map.empty
-    headerManifest(dir, v).header.get("colhist").map(_.split(";").iterator
-      .filter(_.nonEmpty).map { e =>
-        val Array(c, rest) = e.split(":", 2)
-        val Array(h, bs, ns) = rest.split("\\|", 3)
-        FileEntry.dec(c) -> ColHist(h.toDouble,
-          bs.split(",").toSeq.map(_.toDouble),
-          ns.split(",").toSeq.map(_.toLong))
-      }.toMap).getOrElse(Map.empty)
-  }
-
-  /** The recorded ANALYZE column statistics (empty when never
-    * analyzed), plus the version they were computed at. Pure driver
-    * metadata. */
-  def columnStatsOf(dir: String, versionAsOf: Option[Int] = None)
-      : (Map[String, ColumnStats], Option[Int]) = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
-    if (v < 1) return (Map.empty, None)
-    val h = readManifest(dir, v).header
-    val stats = h.get("colstats").map(_.split(";").iterator
-      .filter(_.nonEmpty).map { e =>
-        val Array(c, rest) = e.split(":", 2)
-        val p = rest.split(",", 6)
-        def opt(s: String) = if (s.isEmpty) None else Some(FileEntry.dec(s))
-        def optL(s: String) = { val x = s.toLong; if (x < 0) None else Some(x) }
-        FileEntry.dec(c) -> ColumnStats(p(0).toLong, p(1).toLong,
-          opt(p(2)), opt(p(3)), optL(p(4)), optL(p(5)))
-      }.toMap).getOrElse(Map.empty)
-    (stats, h.get("analyzedv").map(_.toInt))
-  }
-
-  /** EXACT row count of a snapshot — the sum of the manifest's
-    * per-file row counts, when every entry carries one (tables
-    * written before the `rows=` tag existed have unknown entries) and
-    * no deletion vectors are live (a DV hides rows the files still
-    * hold). Pure driver metadata; None = unknown. */
-  def rowCountOf(dir: String,
-                 versionAsOf: Option[Int] = None): Option[Long] = {
-    val v = versionAsOf.getOrElse(latestVersion(dir))
-    if (v < 1) return None
-    val m = readManifest(dir, v)
-    if (m.files.exists(f => f.dv.isDefined || f.rows.isEmpty)) None
-    else Some(m.files.flatMap(_.rows).sum)
-  }
-
-  /** DESCRIBE DETAIL row: (location, version, n_files, n_dv_files,
-    * clustercols, bucketcols, buckets, epochs, n_rows) — pure driver
-    * metadata from the latest manifest. */
-  def detail(dir: String): Seq[Any] = {
-    val v = latestVersion(dir)
-    require(v >= 1, s"no committed version at $dir")
-    val m = readManifest(dir, v)
-    Seq(dir, v, m.files.size, m.files.count(_.dv.isDefined),
-      if (m.statsCols.isEmpty) null else m.statsCols.mkString(","),
-      m.bucketSpec.map(_._1).orNull,
-      m.bucketSpec.map(b => Int.box(b._2)).orNull,
-      m.header.get("epochs").orNull,
-      rowCountOf(dir, Some(v)).map(Long.box).orNull)
-  }
 
   /** Commit history as a DataFrame:
     * (version, op, parent, n_files, epoch, ts). Enumerates the manifests

@@ -1,6 +1,6 @@
 package pystreamsspark.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShims
 import org.apache.spark.sql.functions._
 
@@ -20,13 +20,17 @@ import org.apache.spark.sql.functions._
   * One genuine quirk (SURVEY.md §7.4): historically `events.ts` was parquet
   * TIMESTAMP(NANOS), which Spark 4.x rejects by default; newer drops of the
   * test data write plain TIMESTAMP(MICROS). The loader adapts to whichever
-  * physical type it finds: we always read with `nanosAsLong=true` so a
-  * ns-typed file resolves (as LongType nanos-since-epoch) instead of
-  * throwing, then branch on the *resolved* Spark type of `ts` — LongType
-  * means the ns path (truncate to µs with integer division, identical to
-  * DuckDB's ns→µs truncation, so oracle hash-matches hold); any timestamp
-  * type passes through untouched. Hard-coding one file's physical layout is
-  * exactly the brittleness a 100 TB engine can't afford — schemas drift.
+  * physical type it finds: a µs-typed file is a plain [[parquet]] load; a
+  * ns-typed one resolves only under `nanosAsLong=true` (as LongType
+  * nanos-since-epoch), so its relation is built in a child session that
+  * holds that setting and its plan is wrapped into the caller's session —
+  * the relation keeps the child session, whose settings its reader takes,
+  * and the caller's session is left as it was. The loader then branches on
+  * the *resolved* Spark type of `ts` — LongType means the ns path (truncate
+  * to µs with integer division, identical to DuckDB's ns→µs truncation, so
+  * oracle hash-matches hold); any timestamp type passes through untouched.
+  * Hard-coding one file's physical layout is exactly the brittleness a
+  * 100 TB engine can't afford — schemas drift.
   */
 object Tables {
   val tableNames: Seq[String] = Seq(
@@ -63,10 +67,15 @@ object Tables {
     * whether the file stores TIMESTAMP(NANOS) or TIMESTAMP(MICROS).
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    // Runtime-settable in Spark 4.1; must be on before the read resolves.
-    // Harmless when the file is µs-typed; required when it is ns-typed.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = parquet(spark, s"$sfDir/events.parquet")
+    val path = s"$sfDir/events.parquet"
+    // a footer the caller's session cannot convert is TIMESTAMP(NANOS)
+    val raw = GraftParquetShims.footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val child = spark.newSession()
+        child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        GraftSqlShims.ofRows(spark, parquet(child, path).queryExecution.analyzed)
+    }
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     raw.schema("ts").dataType match {
       case LongType =>

@@ -53,31 +53,23 @@ object SnapshotDvReadRule extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  /** Cheap pre-check: a table that never saw a deletion vector has no
-    * `dv/` directory at all — one stat call instead of a manifest
-    * listing+parse per analyzer iteration (the overwhelmingly common
-    * DV-free case). Column mapping gets the same idiom via its
-    * `.mapped` marker file. */
-  private def mayHaveDvs(dir: String): Boolean =
-    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "dv"))
-
   /** The raw V2 scan also cannot serve a COLUMN-MAPPED snapshot (files
     * store physical names; the read needs the logical projection) — the
     * same rewrite covers it, since SnapshotTable.read projects through
-    * the mapping internally. */
+    * the mapping internally. Both are fields of the snapshot the table
+    * resolved at load: no file system call per analyzer iteration. */
   private def needsPlanRead(t: SnapshotV2Table): Boolean =
-    (mayHaveDvs(t.dir) &&
-      SnapshotTable.hasDeletionVectors(t.dir, t.versionAsOf)) ||
-      (SnapshotTable.mayHaveColumnMapping(t.dir) &&
-        SnapshotTable.hasColumnMapping(t.dir, t.versionAsOf))
+    t.snapshot.hasDeletionVectors || t.snapshot.colmap.nonEmpty
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (hasGraftDml(plan)) plan
     else plan.transformUp {
       case r: DataSourceV2Relation => r.table match {
         case t: SnapshotV2Table if needsPlanRead(t) =>
+          // the version the relation was loaded at, so the rewritten
+          // read is the snapshot the query was analyzed against
           val dvPlan = SnapshotTable
-            .read(SparkSession.active, t.dir, t.versionAsOf)
+            .read(SparkSession.active, t.dir, Some(t.snapshot.version))
             .queryExecution.analyzed
           // re-key the DV-aware plan's columns onto the relation's
           // output ids so references above the relation stay valid

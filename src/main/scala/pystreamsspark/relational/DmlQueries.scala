@@ -201,7 +201,7 @@ object DmlQueries {
     SnapshotSql.sql(spark, s"DELETE FROM $t WHERE o_orderkey % 7 = 0")
     require(pystreamsspark.io.SnapshotTable.filePaths(dir).toSet == preFiles,
       "merge-on-read DELETE must not rewrite data files")
-    require(pystreamsspark.io.SnapshotTable.hasDeletionVectors(dir),
+    require(pystreamsspark.io.SnapshotTable.snapshot(dir).hasDeletionVectors,
       "merge-on-read DELETE must record deletion vectors")
     pystreamsspark.io.SnapshotTable.read(spark, dir)
       .createOrReplaceTempView("dml_mor_del_state")
@@ -265,7 +265,7 @@ object DmlQueries {
     require(preFiles.subsetOf(
       pystreamsspark.io.SnapshotTable.filePaths(dir).toSet),
       "merge-on-read MERGE must keep every pre-merge data file")
-    require(pystreamsspark.io.SnapshotTable.hasDeletionVectors(dir),
+    require(pystreamsspark.io.SnapshotTable.snapshot(dir).hasDeletionVectors,
       "merge-on-read MERGE must record deletion vectors")
     pystreamsspark.io.SnapshotTable.read(spark, dir)
       .createOrReplaceTempView("dml_mor_mrg_state")

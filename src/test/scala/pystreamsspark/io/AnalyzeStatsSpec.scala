@@ -34,7 +34,8 @@ class AnalyzeStatsSpec extends SparkSpec {
         .otherwise(concat(lit("t"), pmod(col("id"), lit(100)))))
     SnapshotTable.create(spark, dir, df)
     SnapshotTable.analyzeColumns(spark, dir)
-    val (stats, atV) = SnapshotTable.columnStatsOf(dir)
+    val analyzed = SnapshotTable.snapshot(dir)
+    val (stats, atV) = (analyzed.columnStats, analyzed.analyzedVersion)
     assert(atV.contains(1))
     assert(stats("id").nulls === 0L && stats("grp").nulls === 0L)
     assert(stats("tag").nulls === 250L) // exact
@@ -47,7 +48,8 @@ class AnalyzeStatsSpec extends SparkSpec {
     // the header carries through a later append
     SnapshotTable.append(spark, dir, Seq((5000L, 1L, "x"))
       .toDF("id", "grp", "tag"))
-    val (after, afterV) = SnapshotTable.columnStatsOf(dir)
+    val appended = SnapshotTable.snapshot(dir)
+    val (after, afterV) = (appended.columnStats, appended.analyzedVersion)
     assert(after("grp").ndv === stats("grp").ndv && afterV.contains(1))
   }
 
@@ -105,14 +107,14 @@ class AnalyzeStatsSpec extends SparkSpec {
         .withColumn("s", pmod(col("id"), lit(3)).cast("string")))
     SnapshotTable.analyzeColumns(spark, dir)
     SnapshotTable.renameColumn(dir, "s", "status")
-    val (renamed, _) = SnapshotTable.columnStatsOf(dir)
+    val renamed = SnapshotTable.snapshot(dir).columnStats
     assert(renamed.contains("status") && !renamed.contains("s"))
     SnapshotTable.dropColumn(dir, "status")
-    assert(!SnapshotTable.columnStatsOf(dir)._1.contains("status"))
+    assert(!SnapshotTable.snapshot(dir).columnStats.contains("status"))
     SnapshotTable.evolveSchema(dir, org.apache.spark.sql.types.StructType(
       Seq(org.apache.spark.sql.types.StructField("status",
         org.apache.spark.sql.types.StringType))))
-    assert(!SnapshotTable.columnStatsOf(dir)._1.contains("status"),
+    assert(!SnapshotTable.snapshot(dir).columnStats.contains("status"),
       "a re-added column must not inherit the dropped column's stats")
   }
 
@@ -127,13 +129,13 @@ class AnalyzeStatsSpec extends SparkSpec {
     val dir = SnapshotSql.resolveTable(spark, Seq("graft", "an", t)).get
     SnapshotSql.sql(spark,
       s"ANALYZE TABLE graft.an.$t COMPUTE STATISTICS FOR COLUMNS k")
-    val (stats, _) = SnapshotTable.columnStatsOf(dir)
+    val stats = SnapshotTable.snapshot(dir).columnStats
     assert(stats.keySet === Set("k"))
     assert(math.abs(stats("k").ndv - 5L) <= 1)
     // FOR ALL COLUMNS form
     SnapshotSql.sql(spark,
       s"ANALYZE TABLE graft.an.$t COMPUTE STATISTICS FOR ALL COLUMNS")
-    assert(SnapshotTable.columnStatsOf(dir)._1.keySet === Set("id", "k"))
+    assert(SnapshotTable.snapshot(dir).columnStats.keySet === Set("id", "k"))
     // with CBO on, the logical plan sees the row count (the stats
     // plumbing end-to-end; attribute-level use is Spark's estimator)
     val prev = spark.conf.getOption("spark.sql.cbo.enabled")
@@ -157,7 +159,7 @@ class AnalyzeStatsSpec extends SparkSpec {
       .withColumn("s", concat(lit("x"), col("id")))
     SnapshotTable.create(spark, dir, df)
     SnapshotTable.analyzeColumns(spark, dir)
-    val hist = SnapshotTable.columnHistOf(dir)
+    val hist = SnapshotTable.snapshot(dir).columnHist
     assert(hist.contains("id") && hist.contains("v"))
     assert(!hist.contains("s"), "string columns get no histogram")
     val ch = hist("v")
@@ -172,7 +174,7 @@ class AnalyzeStatsSpec extends SparkSpec {
     import spark.implicits._
     SnapshotTable.append(spark, dir,
       Seq((5000L, 1L, "y")).toDF("id", "v", "s"))
-    assert(SnapshotTable.columnHistOf(dir).contains("v"))
+    assert(SnapshotTable.snapshot(dir).columnHist.contains("v"))
   }
 
   test("histogram-fed CBO: a skewed range predicate's row estimate " +
@@ -225,11 +227,11 @@ class AnalyzeStatsSpec extends SparkSpec {
       spark.range(0, 300).toDF("id")
         .withColumn("n", pmod(col("id"), lit(40))))
     SnapshotTable.analyzeColumns(spark, dir)
-    assert(SnapshotTable.columnHistOf(dir).contains("n"))
+    assert(SnapshotTable.snapshot(dir).columnHist.contains("n"))
     SnapshotTable.renameColumn(dir, "n", "num")
-    val renamed = SnapshotTable.columnHistOf(dir)
+    val renamed = SnapshotTable.snapshot(dir).columnHist
     assert(renamed.contains("num") && !renamed.contains("n"))
     SnapshotTable.dropColumn(dir, "num")
-    assert(!SnapshotTable.columnHistOf(dir).contains("num"))
+    assert(!SnapshotTable.snapshot(dir).columnHist.contains("num"))
   }
 }

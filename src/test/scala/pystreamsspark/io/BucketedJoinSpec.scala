@@ -65,7 +65,7 @@ class BucketedJoinSpec extends SparkSpec {
     val entries = SnapshotTable.manifestEntries(dir,
       SnapshotTable.latestVersion(dir))
     assert(entries.nonEmpty)
-    val buckets = SnapshotTable.fileBuckets(dir)
+    val buckets = SnapshotTable.snapshot(dir).fileBuckets
     assert(buckets.size === entries.size, "every file carries a bucket id")
     // each file holds ONLY rows whose id hashes to its recorded bucket
     buckets.foreach { case (rel, b) =>
@@ -109,7 +109,7 @@ class BucketedJoinSpec extends SparkSpec {
     // a CoW DELETE rewrites covering files — bucket shaping must hold
     SnapshotSql.sql(spark, s"DELETE FROM graft.ns.$a WHERE id % 10 = 0")
     val dirA = dirOf(a)
-    val buckets = SnapshotTable.fileBuckets(dirA)
+    val buckets = SnapshotTable.snapshot(dirA).fileBuckets
     assert(buckets.size === SnapshotTable.manifestEntries(dirA,
       SnapshotTable.latestVersion(dirA)).size)
     buckets.foreach { case (rel, bk) =>

@@ -102,18 +102,18 @@ class CheckConstraintSpec extends SparkSpec {
     val preFiles = SnapshotTable.filePaths(dir).toSet
     SnapshotSql.sql(spark, s"DELETE FROM graft.ck.$t WHERE id = 1")
     assert(SnapshotTable.filePaths(dir).toSet === preFiles)
-    assert(SnapshotTable.hasDeletionVectors(dir))
+    assert(SnapshotTable.snapshot(dir).hasDeletionVectors)
     // ...and back to the default removes the header
     spark.sql(s"ALTER TABLE graft.ck.$t SET TBLPROPERTIES(" +
       "'delete.mode'='copy-on-write')")
-    assert(SnapshotTable.tableProps(dir)
+    assert(SnapshotTable.snapshot(dir).tableProps
       .getOrElse("delete.mode", "copy-on-write") === "copy-on-write")
     // r12: clustercols EVOLVES (partition-spec evolution — the new
     // write law applies to future batches); the hash-bucket layout
     // stays fixed at create (its file shape is a hard contract)
     spark.sql(s"ALTER TABLE graft.ck.$t SET TBLPROPERTIES(" +
       "'clustercols'='id')")
-    assert(SnapshotTable.statsColsOfPublic(dir) === Seq("id"))
+    assert(SnapshotTable.snapshot(dir).statsCols === Seq("id"))
     intercept[Exception] {
       spark.sql(s"ALTER TABLE graft.ck.$t SET TBLPROPERTIES(" +
         "'bucketcols'='id')")
@@ -138,7 +138,7 @@ class CheckConstraintSpec extends SparkSpec {
     SnapshotSql.sql(spark, s"OPTIMIZE graft.ck.$t")
     val dir = dirOf(t)
     // carried through the compact commit
-    assert(SnapshotTable.checkOf(dir).contains("price >= 0.0"))
+    assert(SnapshotTable.snapshot(dir).tableProps.get("check").contains("price >= 0.0"))
     intercept[Exception] {
       SnapshotSql.sql(spark, s"INSERT INTO graft.ck.$t VALUES (9, -9.0)")
     }

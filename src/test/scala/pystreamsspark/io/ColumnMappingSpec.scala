@@ -42,7 +42,7 @@ class ColumnMappingSpec extends SparkSpec {
     SnapshotTable.renameColumn(dir, "value", "amount")
     assert(SnapshotTable.filePaths(dir).toSet === preFiles,
       "rename must not touch data files")
-    assert(SnapshotTable.hasColumnMapping(dir))
+    assert(SnapshotTable.snapshot(dir).colmap.nonEmpty)
     assert(SnapshotTable.mayHaveColumnMapping(dir))
     assert(SnapshotTable.schemaOf(dir).fieldNames.toSeq ===
       Seq("id", "tag", "amount"))
@@ -71,7 +71,7 @@ class ColumnMappingSpec extends SparkSpec {
     assert(SnapshotTable.readCandidates(dir, "id", "0", "10").size < all)
     SnapshotTable.renameColumn(dir, "id", "key")
     // statscols header AND per-file stats keys renamed with the column
-    assert(SnapshotTable.statsColsOfPublic(dir) === Seq("key"))
+    assert(SnapshotTable.snapshot(dir).statsCols === Seq("key"))
     val pruned = SnapshotTable.readCandidates(dir, "key", "0", "10")
     assert(pruned.size < all, "pruning must survive the rename")
     // pruned READ equals the filtered full read
@@ -247,9 +247,9 @@ class ColumnMappingSpec extends SparkSpec {
     SnapshotTable.create(spark, dir,
       Seq((1L, 1.0), (2L, 2.0)).toDF("id", "value"), numFiles = 2)
     SnapshotTable.renameColumn(dir, "value", "amount")
-    assert(SnapshotTable.hasColumnMapping(dir))
+    assert(SnapshotTable.snapshot(dir).colmap.nonEmpty)
     SnapshotTable.compact(spark, dir, target = 1)
-    assert(!SnapshotTable.hasColumnMapping(dir),
+    assert(SnapshotTable.snapshot(dir).colmap.isEmpty,
       "compact must materialize renames into plain files")
     val r = SnapshotTable.read(spark, dir).orderBy("id").collect()
     assert(r.map(x => (x.getLong(0), x.getDouble(1))).toSeq ===
@@ -314,7 +314,7 @@ class ColumnMappingSpec extends SparkSpec {
         s"expected the mapped-scan refusal, got: ${err.getMessage}")
       // OPTIMIZE materializes; the raw scan builds again
       SnapshotSql.sql(ext, s"OPTIMIZE graft.cm.$t")
-      assert(!SnapshotTable.hasColumnMapping(dir))
+      assert(SnapshotTable.snapshot(dir).colmap.isEmpty)
       new SnapshotV2Table("graft.cm." + t, dir, None).newScanBuilder(noOpts)
       assert(ext.sql(s"SELECT count(*) FROM graft.cm.$t")
         .head.getLong(0) === 2L)

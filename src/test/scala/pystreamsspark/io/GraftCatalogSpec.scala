@@ -454,7 +454,7 @@ class GraftCatalogSpec extends SparkSpec {
       "SELECT id, id * 1.0 AS v FROM range(100)")
     assert(spark.table(s"graft.ns.$t").count() === 100)
     val dir = dirOf(t)
-    val buckets = SnapshotTable.fileBuckets(dir)
+    val buckets = SnapshotTable.snapshot(dir).fileBuckets
     assert(buckets.nonEmpty &&
       buckets.size === SnapshotTable.filePaths(dir).size,
       "CTAS batch must land bucket-tagged")

@@ -83,7 +83,7 @@ class ManifestScanSpec extends SparkSpec {
     "inference of the DV batch, and the live rows") {
     val (t, dir) = table("dv_")
     SnapshotTable.deleteVectors(spark, dir, "id % 10 = 3")
-    assert(SnapshotTable.hasDeletionVectors(dir))
+    assert(SnapshotTable.snapshot(dir).hasDeletionVectors)
     val jobs = JobCount(spark) {
       plan(SnapshotTable.read(spark, dir))
       plan(SnapshotTable.read(spark, dir, Some(2)))

@@ -50,7 +50,7 @@ class MorSqlSpec extends SparkSpec {
     SnapshotSql.sql(spark, s"DELETE FROM graft.mor.$t WHERE status = 'A'")
     // zero data-file rewrites: the file set is IDENTICAL
     assert(SnapshotTable.filePaths(dir).toSet === preFiles)
-    assert(SnapshotTable.hasDeletionVectors(dir))
+    assert(SnapshotTable.snapshot(dir).hasDeletionVectors)
     // the op is recorded as the DV form
     val hist = SnapshotSql.sql(spark, s"DESCRIBE HISTORY graft.mor.$t")
       .collect().map(_.getString(1)).toSeq
@@ -71,7 +71,7 @@ class MorSqlSpec extends SparkSpec {
     // every pre-update file is still present (DV-marked, not rewritten);
     // the appended image batch is the only new data
     assert(preFiles.subsetOf(SnapshotTable.filePaths(dir).toSet))
-    assert(SnapshotTable.hasDeletionVectors(dir))
+    assert(SnapshotTable.snapshot(dir).hasDeletionVectors)
     val hist = SnapshotSql.sql(spark, s"DESCRIBE HISTORY graft.mor.$t")
       .collect().map(_.getString(1)).toSeq
     assert(hist.contains("update-dv"))
@@ -115,7 +115,7 @@ class MorSqlSpec extends SparkSpec {
     // MoR: every pre-merge data file still present, DVs recorded,
     // op is the DV form
     assert(preFiles.subsetOf(SnapshotTable.filePaths(dir).toSet))
-    assert(SnapshotTable.hasDeletionVectors(dir))
+    assert(SnapshotTable.snapshot(dir).hasDeletionVectors)
     val hist = SnapshotSql.sql(spark, s"DESCRIBE HISTORY graft.mor.$t")
       .collect().map(_.getString(1)).toSeq
     assert(hist.contains("merge-dv"))
@@ -154,7 +154,7 @@ class MorSqlSpec extends SparkSpec {
       s"SELECT count(*) FROM graft.mor.$t VERSION AS OF $preVersion")
       .head.getLong(0) === 5L)
     SnapshotSql.sql(spark, s"OPTIMIZE graft.mor.$t")
-    assert(!SnapshotTable.hasDeletionVectors(dir))
+    assert(!SnapshotTable.snapshot(dir).hasDeletionVectors)
     assert(spark.sql(s"SELECT count(*) FROM graft.mor.$t")
       .head.getLong(0) === 4L)
   }

@@ -78,7 +78,7 @@ class PartialCompactSpec extends SparkSpec {
     assert(m.count() === preCount)
     assert(m.filter(col("id") === 10005L).count() === 0L)
     assert(m.filter(col("id") === 5L).count() === 0L)
-    assert(SnapshotTable.hasDeletionVectors(dir),
+    assert(SnapshotTable.snapshot(dir).hasDeletionVectors,
       "the untouched cold file must keep its DV")
     // disjoint bounds: nothing overlaps -> same version back
     val v0 = SnapshotTable.latestVersion(dir)

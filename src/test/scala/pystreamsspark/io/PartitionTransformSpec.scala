@@ -101,7 +101,7 @@ class PartitionTransformSpec extends SparkSpec {
       .filter($"who" === "uX").count() === 1)
     // rename: the transforms header follows, shaping + pruning survive
     SnapshotTable.renameColumn(dir, "ts", "event_ts")
-    assert(SnapshotTable.transformSpecsOf(dir).map(_.spec) ===
+    assert(SnapshotTable.snapshot(dir).transforms.map(_.spec) ===
       Seq("days(event_ts)"))
     val more = january(days = 10, perDay = 10)
       .withColumnRenamed("ts", "event_ts")
@@ -155,7 +155,7 @@ class PartitionTransformSpec extends SparkSpec {
     // evolve to days(ts): future batches day-group and record stats
     SnapshotTable.setProperties(spark, dir,
       Map("clustercols" -> "days(ts)"))
-    assert(SnapshotTable.transformSpecsOf(dir).map(_.spec) ===
+    assert(SnapshotTable.snapshot(dir).transforms.map(_.spec) ===
       Seq("days(ts)"))
     SnapshotTable.append(spark, dir, january(days = 10, perDay = 40),
       numFiles = 2)
@@ -179,7 +179,7 @@ class PartitionTransformSpec extends SparkSpec {
       "after OPTIMIZE the whole table prunes under the new spec")
     // un-cluster: empty declaration drops the write law
     SnapshotTable.setProperties(spark, dir, Map("clustercols" -> ""))
-    assert(SnapshotTable.statsColsOfPublic(dir).isEmpty)
+    assert(SnapshotTable.snapshot(dir).statsCols.isEmpty)
     assert(SnapshotTable.read(spark, dir).count() === 800)
     // bucketed tables refuse (contradictory file shapes)
     val bdir = tmp()
@@ -201,7 +201,7 @@ class PartitionTransformSpec extends SparkSpec {
     spark.sql(s"ALTER TABLE graft.pt.$t " +
       "SET TBLPROPERTIES('clustercols'='days(ts)')")
     val tdir = SnapshotSql.resolveTable(spark, Seq("graft", "pt", t)).get
-    assert(SnapshotTable.transformSpecsOf(tdir).map(_.spec) ===
+    assert(SnapshotTable.snapshot(tdir).transforms.map(_.spec) ===
       Seq("days(ts)"))
   }
 }

@@ -33,7 +33,7 @@ class RowStatsSpec extends SparkSpec {
     SnapshotSql.sql(spark, s"INSERT INTO graft.rs.$t " +
       "SELECT id, id * 1.0 FROM range(1000, 1500)")
     val dir = dirOf(t)
-    assert(SnapshotTable.rowCountOf(dir) === Some(1500L))
+    assert(SnapshotTable.snapshot(dir).rowCount === Some(1500L))
     val det = SnapshotSql.sql(spark, s"DESCRIBE DETAIL graft.rs.$t").head
     assert(det.getLong(det.fieldIndex("n_rows")) === 1500L)
     // the V2 relation's optimized stats carry the EXACT rowCount (what
@@ -52,13 +52,13 @@ class RowStatsSpec extends SparkSpec {
     SnapshotSql.sql(spark, s"INSERT INTO graft.rs.$t " +
       "SELECT id, id * 1.0 FROM range(0, 100)")
     val dir = dirOf(t)
-    assert(SnapshotTable.rowCountOf(dir) === Some(100L))
+    assert(SnapshotTable.snapshot(dir).rowCount === Some(100L))
     SnapshotSql.sql(spark, s"DELETE FROM graft.rs.$t WHERE id < 10")
     // a DV'd snapshot must NOT claim the stale footer count
-    assert(SnapshotTable.rowCountOf(dir) === None)
+    assert(SnapshotTable.snapshot(dir).rowCount === None)
     val det = SnapshotSql.sql(spark, s"DESCRIBE DETAIL graft.rs.$t").head
     assert(det.isNullAt(det.fieldIndex("n_rows")))
     SnapshotSql.sql(spark, s"OPTIMIZE graft.rs.$t")
-    assert(SnapshotTable.rowCountOf(dir) === Some(90L))
+    assert(SnapshotTable.snapshot(dir).rowCount === Some(90L))
   }
 }

@@ -68,7 +68,7 @@ class ShallowCloneSpec extends SparkSpec {
     SnapshotTable.renameColumn(src, "value", "amount")
     SnapshotTable.shallowClone(spark, src, dst)
     // the clone reads through the carried column mapping
-    assert(SnapshotTable.hasColumnMapping(dst))
+    assert(SnapshotTable.snapshot(dst).colmap.nonEmpty)
     assert(SnapshotTable.read(spark, dst).columns.toSeq ===
       Seq("id", "amount"))
     // epoch 17 is NOT committed on the clone: replaying it APPLIES

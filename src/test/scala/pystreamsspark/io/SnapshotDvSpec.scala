@@ -39,7 +39,7 @@ class SnapshotDvSpec extends SparkSpec {
     assert(vDv === 2)
     // the MoR law: not one data file rewritten
     assert(SnapshotTable.filePaths(dvDir).toSet === preFiles)
-    assert(SnapshotTable.hasDeletionVectors(dvDir))
+    assert(SnapshotTable.snapshot(dvDir).hasDeletionVectors)
     // identical content on both paths
     val (a, b) = (SnapshotTable.read(spark, dvDir),
       SnapshotTable.read(spark, cowDir))
@@ -96,7 +96,7 @@ class SnapshotDvSpec extends SparkSpec {
     assert(!ids(got).contains(7L))
     assert(got.filter(col("id") === 8).head.getString(1) === "upd_8")
     // the touched file was rewritten DV-free; no entry needs its DV now
-    assert(!SnapshotTable.hasDeletionVectors(dir))
+    assert(!SnapshotTable.snapshot(dir).hasDeletionVectors)
   }
 
   test("compact materializes DVs away; vacuum reclaims orphan DV batches") {
@@ -105,7 +105,7 @@ class SnapshotDvSpec extends SparkSpec {
     SnapshotTable.deleteVectors(spark, dir, "id % 10 = 3")
     val expect = ids(SnapshotTable.read(spark, dir))
     SnapshotTable.compact(spark, dir, target = 2)
-    assert(!SnapshotTable.hasDeletionVectors(dir))
+    assert(!SnapshotTable.snapshot(dir).hasDeletionVectors)
     assert(ids(SnapshotTable.read(spark, dir)) === expect)
     // vacuum to the compacted version only: the DV batch is unreferenced
     SnapshotTable.vacuum(dir, keepVersions = 1)

@@ -263,6 +263,39 @@ class SnapshotStreamSpec extends SparkSpec {
     }
   }
 
+  test("a streamed epoch that violates the table's CHECK fails the query, " +
+    "commits no version and leaves no batch directory") {
+    wh
+    val t = freshName("swck_")
+    spark.sql(s"CREATE TABLE graft.ns.$t (id BIGINT, v DOUBLE) " +
+      "TBLPROPERTIES ('check'='v >= 0')")
+    val dir = dirOf(t)
+    val version = SnapshotTable.latestVersion(dir)
+    val data = java.nio.file.Paths.get(dir, "data")
+    def batches: Seq[String] =
+      if (!java.nio.file.Files.isDirectory(data)) Nil
+      else data.toFile.list().toSeq.sorted
+    val batchesBefore = batches
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val in = MemoryStream[Long]
+    in.addData(1L, -2L, 3L)
+    val q = in.toDF().selectExpr("value AS id", "CAST(value AS DOUBLE) AS v")
+      .writeStream
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("swck_ckpt_").toString)
+      .trigger(Trigger.AvailableNow())
+      .toTable(s"graft.ns.$t")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.awaitTermination(60000)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => Option(c.getMessage).exists(
+        _.contains("CHECK constraint violated"))), e)
+    assert(SnapshotTable.latestVersion(dir) === version)
+    assert(batches === batchesBefore)
+  }
+
   test("table-to-table streaming pipeline: readStream.table -> transform " +
     "-> writeStream.toTable") {
     wh

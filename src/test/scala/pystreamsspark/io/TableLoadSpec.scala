@@ -37,8 +37,11 @@ class TableLoadSpec extends SparkSpec {
 
   test("every table's schema equals spark.read.parquet's, nullability " +
     "included (events under the loader's nanosAsLong)") {
-    Tables.events(spark, sfDir) // sets nanosAsLong, as every load does
-    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    // the fixture's ts is µs-typed: a plain load that sets nothing
+    val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(nanosAsLong)
+    Tables.events(spark, sfDir)
+    assert(spark.conf.getOption(nanosAsLong) === before)
     Tables.tableNames.foreach { name =>
       val path = s"$sfDir/$name.parquet"
       val want = spark.read.parquet(path).schema
@@ -49,6 +52,36 @@ class TableLoadSpec extends SparkSpec {
         assert(Tables.load(spark, sfDir, name).schema === want, s"$name load")
     }
     assert(Tables.events(spark, sfDir).schema("ts").dataType === TimestampType)
+  }
+
+  test("a TIMESTAMP(NANOS) events file loads with µs ts and leaves the " +
+    "caller's session settings as they were") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val root = Files.createTempDirectory("table_load_ns_").toString
+    val path = s"$root/events.parquet"
+    val schema = MessageTypeParser.parseMessageType("message events { " +
+      "required int64 id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(path))
+      .withType(schema).build()
+    try Seq(1L -> 1700000000123456789L, 2L -> 5L).foreach { case (id, ns) =>
+      w.write(new SimpleGroupFactory(schema).newGroup()
+        .append("id", id).append("ts", ns))
+    } finally w.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.set(key, "false")
+    try {
+      // the caller's session cannot resolve the file by itself
+      intercept[Exception](spark.read.parquet(path).schema)
+      val events = Tables.events(spark, root)
+      assert(events.schema("ts").dataType === TimestampType)
+      val got = events.select(col("id"), unix_micros(col("ts"))).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sortBy(_._1)
+      // ns truncated to µs, as DuckDB reads the same file
+      assert(got === Seq(1L -> 1700000000123456L, 2L -> 0L))
+      assert(spark.conf.get(key) === "false")
+    } finally spark.conf.unset(key)
   }
 
   test("a directory of part files (the Amplify layout) loads with no job, " +
