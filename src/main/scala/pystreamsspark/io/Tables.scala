@@ -68,7 +68,9 @@ object Tables {
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     val path = s"$sfDir/events.parquet"
-    // a footer the caller's session cannot convert is TIMESTAMP(NANOS)
+    // no footer schema: the caller's session cannot convert it (a
+    // TIMESTAMP(NANOS) ts), or the path is one the footer read skips;
+    // the child session resolves either case
     val raw = GraftParquetShims.footerSchema(spark, path) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None =>
